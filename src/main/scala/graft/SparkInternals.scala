@@ -3,27 +3,16 @@ package graft
 import org.apache.spark.SparkContext
 
 /** Narrow access point for Spark-internal plumbing the public API doesn't
-  * expose. Kept to THREE capabilities on purpose: draining the async
+  * expose. Kept to TWO capabilities on purpose: draining the async
   * listener bus so per-query metric snapshots (BenchMetrics) don't race
-  * stage completion events, re-binding an analyzed plan onto another
+  * stage completion events, and re-binding an analyzed plan onto another
   * session so per-query SQL-conf overrides don't mutate shared session
-  * state, and releasing the RDD blocks behind an eager localCheckpoint
-  * (which `Dataset.unpersist` can't reach — no CacheManager entry).
+  * state. (Freeing checkpoint storage, which `Dataset.unpersist` can't
+  * reach, belongs to [[graft.util.Truncate.release]].)
   * Uses reflection rather than a `package org.apache.spark` escape
-  * so the project's own namespace stays honest; all fall back to a
+  * so the project's own namespace stays honest; both fall back to a
   * behavior-preserving no-op if the internal shape ever changes. */
 object SparkInternals {
-
-  /** Free the RDD storage behind an eagerly localCheckpoint'ed frame —
-    * the shared release hook for the engine's lineage-truncation leaves
-    * (iterative graph/power-iteration state, 1-row aggregate pins).
-    * Only safe once nothing will re-read the leaf: its lineage is
-    * truncated, so a drained leaf cannot recompute. */
-  def releaseCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
-    }
 
   def flushListenerBus(sc: SparkContext): Unit =
     try {

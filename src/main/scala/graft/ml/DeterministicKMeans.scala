@@ -116,9 +116,9 @@ object DeterministicKMeans {
       fullKey.flatMap(fk => Option(centsMemo.get(fk))).getOrElse {
         // distinct-tuple weighted points: the Lloyd state (vocab-scaled)
         val zCols = (0 until d).map(i => col(s"__z$i"))
-        val pts = withZ.groupBy(zCols: _*).agg(count(lit(1)).as("__cnt"))
-          .localCheckpoint(true)
-        graft.QueryCleanup.register(() => pts.unpersist())
+        val pts = graft.util.Truncate(
+          withZ.groupBy(zCols: _*).agg(count(lit(1)).as("__cnt")))
+        graft.QueryCleanup.register(() => graft.util.Truncate.release(pts))
 
         // deterministic quantile-spread init over the ordered distinct tuples
         val ranked = pts.select(zCols :+
@@ -177,10 +177,9 @@ object DeterministicKMeans {
     val toMicros = transform(col(vecCol).cast("array<double>"),
       v => round(v * Micro, 0).cast("long"))
     val withZ = df.withColumn("__z", toMicros)
-    val pts = withZ.select(col("__z")).groupBy(col("__z"))
-      .agg(count(lit(1)).as("__cnt"))
-      .localCheckpoint(true)
-    graft.QueryCleanup.register(() => pts.unpersist())
+    val pts = graft.util.Truncate(withZ.select(col("__z")).groupBy(col("__z"))
+      .agg(count(lit(1)).as("__cnt")))
+    graft.QueryCleanup.register(() => graft.util.Truncate.release(pts))
 
     val ranked = pts.select(col("__z"),
       row_number().over(org.apache.spark.sql.expressions.Window
@@ -239,10 +238,10 @@ object DeterministicKMeans {
     require(k >= 1 && iters >= 1, s"k=$k, iters=$iters must be >= 1")
     val toMicros = transform(col(vecCol).cast("array<double>"),
       v => round(v * Micro, 0).cast("long"))
-    val pts = df.select(col(groupCol).cast("int").as("__j"), toMicros.as("__z"))
-      .groupBy(col("__j"), col("__z")).agg(count(lit(1)).as("__cnt"))
-      .localCheckpoint(true)
-    graft.QueryCleanup.register(() => pts.unpersist())
+    val pts = graft.util.Truncate(
+      df.select(col(groupCol).cast("int").as("__j"), toMicros.as("__z"))
+        .groupBy(col("__j"), col("__z")).agg(count(lit(1)).as("__cnt")))
+    graft.QueryCleanup.register(() => graft.util.Truncate.release(pts))
 
     val wj = org.apache.spark.sql.expressions.Window.partitionBy(col("__j"))
     val ranked = pts.select(col("__j"), col("__z"),

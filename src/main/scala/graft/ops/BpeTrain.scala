@@ -122,13 +122,11 @@ object BpeTrain {
     require(numMerges >= 1, s"numMerges=$numMerges must be >= 1")
     require(checkpointEvery >= 1, s"checkpointEvery=$checkpointEvery must be >= 1")
     require(batchWindow >= 1, s"batchWindow=$batchWindow must be >= 1")
-    var state = wordCounts(docs, textCol)
+    val leaves = graft.util.Truncate.leaves()
+    var state = leaves.keep(graft.util.Truncate(wordCounts(docs, textCol)
       .withColumn("syms",
         transform(sequence(lit(1), length(col("word"))),
-          i => substring(col("word"), i, lit(1))))
-      .localCheckpoint(true)
-    graft.QueryCleanup.register(() => state.unpersist())
-    var lastCheckpoint = state
+          i => substring(col("word"), i, lit(1))))))
     var roundsSinceCkpt = 0
     val out = Seq.newBuilder[Merge]
     var k = 0
@@ -166,12 +164,8 @@ object BpeTrain {
         roundsSinceCkpt += 1
         // no checkpoint after the FINAL round — state is never read again
         if (roundsSinceCkpt >= checkpointEvery && k < numMerges) {
-          val prev = lastCheckpoint
-          state = state.localCheckpoint(true)
-          prev.unpersist()
-          lastCheckpoint = state
+          state = leaves.supersede(graft.util.Truncate(state))
           roundsSinceCkpt = 0
-          graft.QueryCleanup.register(() => state.unpersist())
         }
       }
     }

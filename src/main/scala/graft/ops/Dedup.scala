@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.functions.GraftFunctions
 import graft.functions.PortableHash.{P, phash, phashMod}
+import graft.util.Truncate
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -769,13 +770,11 @@ object Dedup {
   def dedupClustersReleasable(pairs: DataFrame, idA: String = "id_a",
                               idB: String = "id_b",
                               maxIterations: Int = 20): (DataFrame, () => Unit) = {
-    val edges = pairs.select(col(idA).as("src"), col(idB).as("dst"))
+    val edges = Truncate(pairs.select(col(idA).as("src"), col(idB).as("dst"))
       .unionByName(pairs.select(col(idB).as("src"), col(idA).as("dst")))
-      .distinct()
-      .localCheckpoint(true)
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .localCheckpoint(true)
+      .distinct())
+    var labels = Truncate(edges.select(col("src").as("id")).distinct()
+      .withColumn("label", col("id")))
     var converged = false
     var i = 0
     while (!converged && i < maxIterations) {
@@ -792,50 +791,34 @@ object Dedup {
       // (r17, the kCore observed-metric pattern — one fewer serial
       // driver stall per round; the loop is round-count × job-floor
       // bound, not data bound).
-      val hooked = labels.join(nbrMin, Seq("id"), "left")
+      val hooked = Truncate(labels.join(nbrMin, Seq("id"), "left")
         .select(col("id"), col("label").as("__old"),
-          least(col("label"), coalesce(col("__nmin"), col("label"))).as("label"))
-        .localCheckpoint(true)
+          least(col("label"), coalesce(col("__nmin"), col("label"))).as("label")))
       // shortcut: label(v) <- min(label(v), label(label(v))). Left join —
       // every label value is a node id present in the table, but the
       // coalesce keeps the plan total rather than proving it to Catalyst.
-      val next0 = hooked.join(
+      val (next, m) = Truncate.observed(hooked.join(
           hooked.select(col("id").as("label"), col("label").as("__ll")),
           Seq("label"), "left")
         .select(col("id"),
           least(col("label"), coalesce(col("__ll"), col("label"))).as("label"),
-          col("__old"))
-      val obs = org.apache.spark.sql.Observation(
-        s"cc_changed_${java.util.UUID.randomUUID.toString.take(8)}_$i")
-      val next = next0.observe(obs,
-          sum(when(col("label") =!= col("__old"), 1L).otherwise(0L))
-            .as("changed"))
-        .localCheckpoint(true)
-      // NO flushListenerBus here (unlike kCore): waitUntilEmpty drains
-      // EVERY listener queue, and in pipeline callers (q88/q314) the
-      // metrics listener still holds the task-event backlog of the huge
-      // upstream LSH job — the flush stalled ~0.5 s/query where obs.get
-      // only needs its own event, which the finished checkpoint job has
-      // already posted (measured r17: flush 4.26->5.00 s on q88).
-      val changed = obs.get.get("changed") match {
-        case Some(null) | None => false // empty label table: sum is null
-        case Some(v) => v.asInstanceOf[Long] > 0L
-      }
-      unpersistCheckpoint(hooked) // round-local; next is materialized
-      unpersistCheckpoint(labels) // superseded; next is materialized
+          col("__old")))(
+        sum(when(col("label") =!= col("__old"), 1L).otherwise(0L)).as("changed"))
+      Truncate.release(hooked) // round-local; next is materialized
+      Truncate.release(labels) // superseded; next is materialized
       labels = next.drop("__old")
-      converged = !changed
+      converged = m("changed") == 0L
       i += 1
     }
-    unpersistCheckpoint(edges)
+    Truncate.release(edges)
     if (!converged) {
-      unpersistCheckpoint(labels)
+      Truncate.release(labels)
       throw new IllegalStateException(
         s"dedupClusters did not converge in $maxIterations pointer-jumping " +
           "rounds (covers diameters ~2^rounds) — raise maxIterations")
     }
     (labels.select(col("id"), col("label").as("cluster")),
-      () => unpersistCheckpoint(labels))
+      () => Truncate.release(labels))
   }
 
   /** Connected components via ALTERNATING LARGE-STAR / SMALL-STAR — the
@@ -885,23 +868,19 @@ object Dedup {
                                   idB: String = "id_b",
                                   maxIterations: Int = 50): (DataFrame, () => Unit) = {
     // Row counts are OBSERVED during each checkpoint's own
-    // materialization (r17, the kCore observed-metric pattern) instead of
-    // costing a separate count job per table per round; the previous
-    // round's count is reused as this round's `edges.count()` — the loop
-    // is round-count × job-floor bound, not data bound.
-    def observedCount(df: DataFrame, tag: String): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation(
-        s"star_${tag}_${java.util.UUID.randomUUID.toString.take(8)}")
-      // no flushListenerBus — see dedupClustersReleasable's loop note
-      val cp = df.observe(obs, count(lit(1)).as("n")).localCheckpoint(true)
-      (cp, obs.get("n").asInstanceOf[Long])
+    // materialization ([[Truncate.observed]]) instead of costing a
+    // separate count job per table per round; the previous round's count
+    // is reused as this round's `edges.count()`.
+    def observedCount(df: DataFrame): (DataFrame, Long) = {
+      val (cp, m) = Truncate.observed(df)(count(lit(1)).as("n"))
+      (cp, m("n"))
     }
     // canonical hi -> lo orientation, self-pairs dropped
     var (edges, edgesN) = observedCount(pairs
       .select(greatest(col(idA), col(idB)).as("hi"),
         least(col(idA), col(idB)).as("lo"))
       .filter(col("hi") =!= col("lo"))
-      .distinct(), "init")
+      .distinct())
     var converged = false
     var i = 0
     while (!converged && i < maxIterations) {
@@ -911,11 +890,10 @@ object Dedup {
         .unionByName(edges.select(col("lo").as("u"), col("hi").as("v")))
       val mins = nbrs.groupBy("u").agg(min("v").as("__mn"))
         .select(col("u"), least(col("u"), col("__mn")).as("m"))
-      val large = nbrs.filter(col("v") > col("u"))
+      val large = Truncate(nbrs.filter(col("v") > col("u"))
         .join(mins, Seq("u"))
         .select(col("v").as("hi"), col("m").as("lo"))
-        .distinct()
-        .localCheckpoint(true)
+        .distinct())
       // small-star on the canonical orientation: per hi, every smaller
       // neighbor and hi itself link to the smallest neighbor
       val smins = large.groupBy("hi").agg(min("lo").as("m"))
@@ -923,20 +901,20 @@ object Dedup {
         .select(col("lo").as("hi"), col("m").as("lo"))
         .filter(col("hi") =!= col("lo"))
         .unionByName(smins.select(col("hi"), col("m").as("lo")))
-        .distinct(), s"round$i")
-      unpersistCheckpoint(large) // round-local; small is materialized
+        .distinct())
+      Truncate.release(large) // round-local; small is materialized
       // fixpoint = the round rewired nothing: same distinct-set size and
       // an empty one-sided difference imply set equality (the exceptAll
       // probe only runs when the counts already match — near fixpoint)
       converged = smallN == edgesN &&
         small.exceptAll(edges).take(1).isEmpty
-      unpersistCheckpoint(edges)
+      Truncate.release(edges)
       edges = small
       edgesN = smallN
       i += 1
     }
     if (!converged) {
-      unpersistCheckpoint(edges)
+      Truncate.release(edges)
       throw new IllegalStateException(
         s"dedupClustersStar did not converge in $maxIterations alternating " +
           "star rounds (worst case O(log^2 n)) — raise maxIterations")
@@ -946,18 +924,8 @@ object Dedup {
     val labels = edges.select(col("hi").as("id"), col("lo").as("cluster"))
       .unionByName(
         edges.select(col("lo").as("id"), col("lo").as("cluster")).distinct())
-    (labels, () => unpersistCheckpoint(edges))
+    (labels, () => Truncate.release(edges))
   }
-
-  /** Unpersist the storage behind an eager localCheckpoint: the
-    * checkpointed RDD sits in the plan as a LogicalRDD leaf and is NOT
-    * released by DataFrame.unpersist (which only consults the SQL cache
-    * manager). No-op on plans without checkpoint leaves. */
-  private def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
-    }
 
   /** C4-style PARAGRAPH-level exact dedup: split each document on
     * `sepRegex`, keep only the corpus-wide FIRST occurrence of every
@@ -1351,12 +1319,11 @@ object Dedup {
       // (one row) runs eagerly here; the key set itself stays
       // distributed and is checkpointed driver-free so the two joins
       // below don't each re-run the stats aggregation.
-      val degenKeys = perScope
+      val degenKeys = Truncate(perScope
         .filter(col("__ratio") > MaxMeanPostingFreq)
-        .select(partitionCols.map(col): _*)
-        .localCheckpoint(true)
+        .select(partitionCols.map(col): _*))
       if (degenKeys.isEmpty) {
-        unpersistCheckpoint(degenKeys) // empty; nothing routes through it
+        Truncate.release(degenKeys) // empty; nothing routes through it
         prefixTopology(sh, threshold, partitionCols)
       } else {
         val dk = broadcast(

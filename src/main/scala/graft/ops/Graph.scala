@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -57,11 +57,83 @@ object Graph {
     * q330 0.93, worst q328 1.05. */
   private def nodeSide(df: DataFrame): DataFrame = df.hint("shuffle_hash")
 
-  /** Free a checkpointed frame's RDD blocks — Dataset.unpersist can't
-    * reach them (no CacheManager entry). Only safe once nothing
-    * references the leaf. */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    graft.SparkInternals.releaseCheckpoint(df)
+  /** Distinct long (src, dst) edges — the input shape of the loops. */
+  private def longEdges(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    edges.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
+      .distinct()
+
+  /** Node universe of a (src, dst) table — read back from the cached edge
+    * table, not from the uncached upstream subtree. */
+  private def nodesOf(e: DataFrame): DataFrame =
+    e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct()
+
+  /** The out-degree topology: `e` shuffled ONCE onto src with its per-src
+    * out-weight `outW` (a count, or a weight sum) as column `name`, a
+    * window over the repartition's own exchange: HashPartitioning(src)
+    * satisfies the window's ClusteredDistribution, so the edge subtree
+    * (often an expensive join/distinct upstream) is scanned exactly ONCE
+    * into the cache — no groupBy+self-join, no second exchange. */
+  private def outDegree(e: DataFrame, name: String = "__outdeg",
+                        outW: Column = count(lit(1))): DataFrame =
+    e.repartition(col("src"))
+      .withColumn(name, outW.over(org.apache.spark.sql.expressions.Window.partitionBy("src")))
+
+  private def requireDamping(iterations: Int, dampNumer: Int, dampDenom: Int): Unit = {
+    require(iterations >= 1, s"iterations=$iterations must be >= 1")
+    require(dampNumer > 0 && dampNumer < dampDenom,
+      s"damping $dampNumer/$dampDenom must lie in (0, 1)")
+  }
+
+  /** `rounds` applications of `round` to `init`. Intermediate states are
+    * CHECKPOINTED (lineage leaf, r16 — see [[truncate]]), each superseded
+    * leaf freed as soon as its successor is materialized; the final round
+    * stays lazy so the returned plan still carries the cached-topology
+    * markers (one cache read per reference) and the caller's action
+    * drives it. The `caches` (plain caches, safe to recompute if drained
+    * early) and the surviving leaf are freed once the harness has
+    * consumed the result (QueryCleanup ordering contract). */
+  private def iterate(init: DataFrame, rounds: Int, caches: DataFrame*)(
+      round: DataFrame => DataFrame): DataFrame = {
+    val leaves = graft.util.Truncate.leaves(caches: _*)
+    (1 to rounds).foldLeft(init) { (state, i) =>
+      val next = round(state)
+      if (i < rounds) leaves.supersede(truncate(next)) else next
+    }
+  }
+
+  /** The PageRank family's one walk over a cached [[outDegree]] topology
+    * (columns src, dst and whatever `contrib` reads) and its persisted
+    * node table, in micro-rank fixed point:
+    *
+    *   rank₀(v) = mass(initMicro)(v)
+    *   rank'(v) = mass(teleportMicro)(v) + d · Σ_{u→v} contrib(u→v)
+    *
+    * `contrib` is the SQL share of rank(u) an edge carries; `mass` places
+    * a total (the initial rank, then the (1-d) teleport) on the nodes —
+    * uniform, on a seed set, or by seed weight. Each round moves only the
+    * node-sized rank table: one shuffle of it to the edge partitioning,
+    * one map-side-combined sum onto dst, one node left join — the edge
+    * table, which is the 100 TB side, never moves again. */
+  private final case class RankWalk(topo: DataFrame, nodes: DataFrame, contrib: String,
+                                    mass: Long => Column, dampNumer: Int,
+                                    dampDenom: Int, initMicro: Long) {
+    def init: DataFrame = nodes.select(col("node"), mass(initMicro).as("rank"))
+
+    def round(ranks: DataFrame): DataFrame = {
+      val inbound = topo
+        .join(nodeSide(ranks.withColumnRenamed("node", "src")), "src")
+        .select(col("dst").as("node"), expr(contrib).as("__contrib"))
+        .groupBy("node")
+        .agg(sum("__contrib").as("__in"))
+      nodes
+        .join(inbound, Seq("node"), "left")
+        .select(col("node"),
+          (mass(initMicro * (dampDenom - dampNumer) / dampDenom) +
+            expr(s"($dampNumer * coalesce(__in, 0L)) div $dampDenom")).as("rank"))
+    }
+
+    def run(iterations: Int): DataFrame = iterate(init, iterations, topo, nodes)(round)
+  }
 
   /** PageRank in FIXED-POINT integer arithmetic (micro-rank units), so
     * the result is bit-identical on every engine: long addition commutes
@@ -78,76 +150,18 @@ object Graph {
     * simplification; symmetrize the edge list if conservation matters.
     *
     * Scale: the edge list (with its precomputed out-degree) is shuffled
-    * ONCE onto src and persisted; each iteration then costs one shuffle
-    * of the node-sized rank table to the edge partitioning, one
-    * map-side-combined sum onto dst, and one node left join — the edge
-    * table, which is the 100 TB side, never moves again. Iterations are
-    * a fixed small count (the analytics use: 3-10), so lineage stays
-    * shallow; checkpoint per-iteration if you raise it.
+    * ONCE onto src and persisted ([[outDegree]]); each iteration moves
+    * only the node-sized rank table ([[RankWalk]]), and intermediate
+    * iterations truncate to lineage leaves ([[iterate]]).
     */
   def pageRankFixedPoint(edges: DataFrame, srcCol: String, dstCol: String,
                          iterations: Int = 3,
                          dampNumer: Int = 850, dampDenom: Int = 1000,
                          initMicro: Long = 1000000L): DataFrame = {
-    require(iterations >= 1, s"iterations=$iterations must be >= 1")
-    require(dampNumer > 0 && dampNumer < dampDenom,
-      s"damping $dampNumer/$dampDenom must lie in (0, 1)")
-    val e = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .distinct()
-    // Degree as a window count over the repartition's own exchange:
-    // HashPartitioning(src) satisfies the window's ClusteredDistribution,
-    // so the edge subtree (often an expensive join/distinct upstream) is
-    // scanned exactly ONCE into the cache — no groupBy+self-join, no
-    // second exchange.
-    val withDeg = e
-      .repartition(col("src"))
-      .withColumn("__outdeg",
-        count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy("src")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // Node universe read back from the cached edge table, not from the
-    // uncached upstream subtree.
-    val nodes = withDeg.select(col("src").as("node"))
-      .union(withDeg.select(col("dst").as("node")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val teleportMicro = initMicro * (dampDenom - dampNumer) / dampDenom
-    var ranks = nodes.select(col("node"), lit(initMicro).as("rank"))
-    // Intermediate iteration states are CHECKPOINTED (lineage leaf, r16 —
-    // see [[truncate]]); the final iteration stays lazy so the returned
-    // plan still carries the cached-topology markers (one cache read per
-    // reference) and the caller's action drives it. A superseded
-    // checkpoint is released as soon as its successor is materialized —
-    // at most two node-sized leaves live at once.
-    var prevCp: Option[DataFrame] = None
-    for (i <- 1 to iterations) {
-      val inbound = withDeg
-        .join(nodeSide(ranks.withColumnRenamed("node", "src")), "src")
-        .select(col("dst").as("node"), expr("rank div __outdeg").as("__contrib"))
-        .groupBy("node")
-        .agg(sum("__contrib").as("__in"))
-      ranks = nodes
-        .join(inbound, Seq("node"), "left")
-        .select(col("node"),
-          (lit(teleportMicro) +
-            expr(s"($dampNumer * coalesce(__in, 0L)) div $dampDenom")).as("rank"))
-      if (i < iterations) {
-        val cp = truncate(ranks)
-        prevCp.foreach(releaseCheckpoint)
-        prevCp = Some(cp)
-        ranks = cp
-      }
-    }
-    // Both caches are referenced by the returned plan; they materialize on
-    // first use and are released by the harness once the result is
-    // consumed (QueryCleanup ordering contract — plain caches, safe to
-    // recompute if drained early). The surviving checkpoint leaf is
-    // released with them.
-    val lastCp = prevCp
-    graft.QueryCleanup.register(() => {
-      withDeg.unpersist(); nodes.unpersist(); lastCp.foreach(releaseCheckpoint)
-    })
-    ranks
+    requireDamping(iterations, dampNumer, dampDenom)
+    val topo = outDegree(longEdges(edges, srcCol, dstCol)).persist(StorageLevel.MEMORY_AND_DISK)
+    RankWalk(topo, nodesOf(topo).persist(StorageLevel.MEMORY_AND_DISK), "rank div __outdeg",
+      lit(_), dampNumer, dampDenom, initMicro).run(iterations)
   }
 
   /** PERSONALIZED PageRank (Haveliwala 2002 topic-sensitive form) on the
@@ -175,54 +189,16 @@ object Graph {
                            iterations: Int = 3,
                            dampNumer: Int = 850, dampDenom: Int = 1000,
                            initMicro: Long = 1000000L): DataFrame = {
-    require(iterations >= 1, s"iterations=$iterations must be >= 1")
-    require(dampNumer > 0 && dampNumer < dampDenom,
-      s"damping $dampNumer/$dampDenom must lie in (0, 1)")
-    val e = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .distinct()
-    val withDeg = e
-      .repartition(col("src"))
-      .withColumn("__outdeg",
-        count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy("src")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    requireDamping(iterations, dampNumer, dampDenom)
+    val topo = outDegree(longEdges(edges, srcCol, dstCol)).persist(StorageLevel.MEMORY_AND_DISK)
     val seedFlag = seeds.select(col(seedCol).cast("long").as("node"))
       .distinct().withColumn("__seed", lit(1L))
-    val nodes = withDeg.select(col("src").as("node"))
-      .union(withDeg.select(col("dst").as("node")))
-      .distinct()
+    val nodes = nodesOf(topo)
       .join(seedFlag, Seq("node"), "left")
       .select(col("node"), coalesce(col("__seed"), lit(0L)).as("__seed"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val teleportMicro = initMicro * (dampDenom - dampNumer) / dampDenom
-    var ranks = nodes.select(col("node"),
-      (col("__seed") * initMicro).as("rank"))
-    // Intermediate states checkpoint, final iteration lazy — see
-    // [[pageRankFixedPoint]] (r16 lineage truncation).
-    var prevCp: Option[DataFrame] = None
-    for (i <- 1 to iterations) {
-      val inbound = withDeg
-        .join(nodeSide(ranks.withColumnRenamed("node", "src")), "src")
-        .select(col("dst").as("node"), expr("rank div __outdeg").as("__contrib"))
-        .groupBy("node")
-        .agg(sum("__contrib").as("__in"))
-      ranks = nodes
-        .join(inbound, Seq("node"), "left")
-        .select(col("node"),
-          (col("__seed") * teleportMicro +
-            expr(s"($dampNumer * coalesce(__in, 0L)) div $dampDenom")).as("rank"))
-      if (i < iterations) {
-        val cp = truncate(ranks)
-        prevCp.foreach(releaseCheckpoint)
-        prevCp = Some(cp)
-        ranks = cp
-      }
-    }
-    val lastCp = prevCp
-    graft.QueryCleanup.register(() => {
-      withDeg.unpersist(); nodes.unpersist(); lastCp.foreach(releaseCheckpoint)
-    })
-    ranks
+    RankWalk(topo, nodes, "rank div __outdeg", col("__seed") * _,
+      dampNumer, dampDenom, initMicro).run(iterations)
   }
 
   /** Deterministic out-degree capping — the skew bound the PageRank
@@ -296,9 +272,7 @@ object Graph {
                            weightCol: String, iterations: Int = 3,
                            dampNumer: Int = 850, dampDenom: Int = 1000,
                            initMicro: Long = 1000000L): DataFrame = {
-    require(iterations >= 1, s"iterations=$iterations must be >= 1")
-    require(dampNumer > 0 && dampNumer < dampDenom,
-      s"damping $dampNumer/$dampDenom must lie in (0, 1)")
+    requireDamping(iterations, dampNumer, dampDenom)
     val e = edges
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"),
@@ -309,44 +283,9 @@ object Graph {
         when(col("__w") > 1000000L,
           raise_error(lit("pageRankEdgeWeighted: merged edge weight > 1e6")))
           .otherwise(col("__w")))
-    val withW = e
-      .repartition(col("src"))
-      .withColumn("__wout",
-        sum(col("__w")).over(org.apache.spark.sql.expressions.Window.partitionBy("src")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = withW.select(col("src").as("node"))
-      .union(withW.select(col("dst").as("node")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val teleportMicro = initMicro * (dampDenom - dampNumer) / dampDenom
-    var ranks = nodes.select(col("node"), lit(initMicro).as("rank"))
-    // Intermediate states checkpoint, final iteration lazy — see
-    // [[pageRankFixedPoint]] (r16 lineage truncation).
-    var prevCp: Option[DataFrame] = None
-    for (i <- 1 to iterations) {
-      val inbound = withW
-        .join(nodeSide(ranks.withColumnRenamed("node", "src")), "src")
-        .select(col("dst").as("node"),
-          expr("(rank * __w) div __wout").as("__contrib"))
-        .groupBy("node")
-        .agg(sum("__contrib").as("__in"))
-      ranks = nodes
-        .join(inbound, Seq("node"), "left")
-        .select(col("node"),
-          (lit(teleportMicro) +
-            expr(s"($dampNumer * coalesce(__in, 0L)) div $dampDenom")).as("rank"))
-      if (i < iterations) {
-        val cp = truncate(ranks)
-        prevCp.foreach(releaseCheckpoint)
-        prevCp = Some(cp)
-        ranks = cp
-      }
-    }
-    val lastCp = prevCp
-    graft.QueryCleanup.register(() => {
-      withW.unpersist(); nodes.unpersist(); lastCp.foreach(releaseCheckpoint)
-    })
-    ranks
+    val topo = outDegree(e, "__wout", sum(col("__w"))).persist(StorageLevel.MEMORY_AND_DISK)
+    RankWalk(topo, nodesOf(topo).persist(StorageLevel.MEMORY_AND_DISK),
+      "(rank * __w) div __wout", lit(_), dampNumer, dampDenom, initMicro).run(iterations)
   }
 
   /** Fidelity audit of a rank APPROXIMATION against its exact
@@ -407,7 +346,7 @@ object Graph {
       // chains); as a leaf the audit's plan is audit-sized.
       val s = truncate(df.select(col(nodeCol).cast("long").as("node"),
         (-col(scoreCol).cast("long")).as("__negs")))
-      graft.QueryCleanup.register(() => releaseCheckpoint(s))
+      graft.QueryCleanup.register(() => graft.util.Truncate.release(s))
       // Size-aware rank strategy (the engine's CBO move, decided on the
       // CACHED table so the count is a cheap scalar): a (node, score)
       // table at or under the threshold is ~32 MB of skinny rows — one
@@ -482,17 +421,8 @@ object Graph {
                                    iterations: Int = 3,
                                    dampNumer: Int = 850, dampDenom: Int = 1000,
                                    initMicro: Long = 1000000L): DataFrame = {
-    require(iterations >= 1, s"iterations=$iterations must be >= 1")
-    require(dampNumer > 0 && dampNumer < dampDenom,
-      s"damping $dampNumer/$dampDenom must lie in (0, 1)")
-    val e = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .distinct()
-    val withDeg = e
-      .repartition(col("src"))
-      .withColumn("__outdeg",
-        count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy("src")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    requireDamping(iterations, dampNumer, dampDenom)
+    val topo = outDegree(longEdges(edges, srcCol, dstCol)).persist(StorageLevel.MEMORY_AND_DISK)
     val sw = seeds.select(col(seedCol).cast("long").as("node"),
         col(weightCol).cast("long").as("__w"))
       .filter(col("__w") > 0)
@@ -512,42 +442,13 @@ object Graph {
         when(col("__w") > 1000000000L,
           raise_error(lit("personalizedPageRankWeighted: weight > 1e9")))
           .otherwise(col("__w")))
-    val nodes = withDeg.select(col("src").as("node"))
-      .union(withDeg.select(col("dst").as("node")))
-      .distinct()
+    val nodes = nodesOf(topo)
       .join(seedFlag, Seq("node"), "left")
       .select(col("node"), coalesce(col("__w"), lit(0L)).as("__w"),
         coalesce(col("__wmax"), lit(1L)).as("__wmax"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val teleportMicro = initMicro * (dampDenom - dampNumer) / dampDenom
-    var ranks = nodes.select(col("node"),
-      expr(s"($initMicro * __w) div __wmax").as("rank"))
-    // Intermediate states checkpoint, final iteration lazy — see
-    // [[pageRankFixedPoint]] (r16 lineage truncation).
-    var prevCp: Option[DataFrame] = None
-    for (i <- 1 to iterations) {
-      val inbound = withDeg
-        .join(nodeSide(ranks.withColumnRenamed("node", "src")), "src")
-        .select(col("dst").as("node"), expr("rank div __outdeg").as("__contrib"))
-        .groupBy("node")
-        .agg(sum("__contrib").as("__in"))
-      ranks = nodes
-        .join(inbound, Seq("node"), "left")
-        .select(col("node"),
-          (expr(s"($teleportMicro * __w) div __wmax") +
-            expr(s"($dampNumer * coalesce(__in, 0L)) div $dampDenom")).as("rank"))
-      if (i < iterations) {
-        val cp = truncate(ranks)
-        prevCp.foreach(releaseCheckpoint)
-        prevCp = Some(cp)
-        ranks = cp
-      }
-    }
-    val lastCp = prevCp
-    graft.QueryCleanup.register(() => {
-      withDeg.unpersist(); nodes.unpersist(); lastCp.foreach(releaseCheckpoint)
-    })
-    ranks
+    RankWalk(topo, nodes, "rank div __outdeg", m => expr(s"($m * __w) div __wmax"),
+      dampNumer, dampDenom, initMicro).run(iterations)
   }
 
   /** Per-node NEIGHBORHOOD features — the tabular feature block a
@@ -623,21 +524,11 @@ object Graph {
     // once and let the cached partitioning serve all rounds (only the
     // node-sized label table moves per round); same play as bfsHops'
     // src-partitioned edges
-    val e = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .distinct()
+    val e = longEdges(edges, srcCol, dstCol)
       .repartition(col("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    graft.QueryCleanup.register(() => { e.unpersist(); nodes.unpersist() })
-    var labels = nodes.select(col("node"), col("node").as("label"))
-    // Intermediate rounds checkpoint, final round lazy — see
-    // [[pageRankFixedPoint]] (r16 lineage truncation).
-    var prevCp: Option[DataFrame] = None
-    for (r <- 1 to rounds) {
+    val nodes = nodesOf(e).persist(StorageLevel.MEMORY_AND_DISK)
+    iterate(nodes.select(col("node"), col("node").as("label")), rounds, e, nodes) { labels =>
       // "most frequent label, min-label ties" as max(struct(count,
       // -label)) — a second hash aggregation instead of a node-keyed
       // SORT window (same semantics, no sort; the r13 bench measured the
@@ -651,19 +542,10 @@ object Graph {
         .select(col("node"), (-col("__best.__nl")).as("label"))
       // isolated nodes (none in a symmetrized edge list, but the
       // contract shouldn't depend on that) keep their own label
-      labels = nodes.join(picked, Seq("node"), "left")
+      nodes.join(picked, Seq("node"), "left")
         .select(col("node"),
           coalesce(col("label"), col("node")).as("label"))
-      if (r < rounds) {
-        val cp = truncate(labels)
-        prevCp.foreach(releaseCheckpoint)
-        prevCp = Some(cp)
-        labels = cp
-      }
     }
-    val lastCp = prevCp
-    graft.QueryCleanup.register(() => lastCp.foreach(releaseCheckpoint))
-    labels
   }
 
   /** Per-node triangle counts by degree-ordered orientation (the MapReduce
@@ -773,14 +655,9 @@ object Graph {
               maxHops: Int = 6): DataFrame = {
     require(maxHops >= 0 && maxHops <= 32,
       s"bfsHops: maxHops=$maxHops out of [0, 32]")
-    val e = edges
-      .select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-      .distinct()
+    val e = longEdges(edges, srcCol, dstCol)
       .repartition(col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val cleanups = scala.collection.mutable.ArrayBuffer[() => Unit](
-      () => e.unpersist())
     // Each frontier level is CHECKPOINTED (lineage leaf, r16 — see
     // [[truncate]]): the next level's anti-join references the growing
     // visited union and the expansion join references the frontier, so
@@ -789,31 +666,27 @@ object Graph {
     // already materialized each level; as leaves the final plan is a
     // union of leaf scans. All levels stay referenced by the output, so
     // leaves release only at cleanup.
-    val frontier0 = truncate(
-      seeds.select(col(seedCol).cast("long").as("node")).distinct())
-    cleanups += (() => releaseCheckpoint(frontier0))
-    var frontier = frontier0
+    val leaves = graft.util.Truncate.leaves(e)
+    var frontier = leaves.keep(truncate(
+      seeds.select(col(seedCol).cast("long").as("node")).distinct()))
     var visited = frontier.withColumn("hops", lit(0L))
     var level = 0L
     var done = frontier.isEmpty
     while (!done && level < maxHops) {
       level += 1
       val hop = level
-      val next = truncate(nodeSide(frontier
+      val next = leaves.keep(truncate(nodeSide(frontier
         .withColumnRenamed("node", "src"))
         .join(e, "src")
         .select(col("dst").as("node"))
         .distinct()
-        .join(visited.select("node"), Seq("node"), "left_anti"))
-      cleanups += (() => releaseCheckpoint(next))
+        .join(visited.select("node"), Seq("node"), "left_anti")))
       done = next.isEmpty
       if (!done) {
         visited = visited.unionByName(next.withColumn("hops", lit(hop)))
         frontier = next
       }
     }
-    val snapshot = cleanups.toList
-    graft.QueryCleanup.register(() => snapshot.foreach(f => f()))
     visited
   }
 
@@ -859,38 +732,24 @@ object Graph {
       .select(least(col("a"), col("b")).as("a"),
         greatest(col("a"), col("b")).as("b"))
       .distinct()
-    val cleanups = scala.collection.mutable.ArrayBuffer[() => Unit]()
     val dir = und.select(col("a").as("src"), col("b").as("dst"))
       .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    cleanups += (() => dir.unpersist())
     // living nodes with their degree in the living subgraph; eager
-    // localCheckpoint per round keeps the lineage a leaf (the round
-    // references deg twice: filter + survivor side). The below-k
+    // truncation per round keeps the lineage a leaf (the round
+    // references deg twice: filter + survivor side), and each superseded
+    // leaf is freed once its successor is materialized. The below-k
     // convergence probe rides the SAME materialization job as an
-    // observed metric (CollectMetrics accumulators fill while the
-    // checkpoint writes — Dataset.checkpoint runs through withAction, so
-    // Observation sees it), making each round ONE job instead of
-    // checkpoint + leaf-scan probe — the only lever serial-round wall
-    // time has left in local mode; at cluster scale it also halves the
-    // scheduler round-trips.
-    var obsId = 0
-    def checkpointWithStats(plan: DataFrame): (DataFrame, Long, Long) = {
-      obsId += 1
-      val obs = org.apache.spark.sql.Observation(
-        s"kcore_below_${java.util.UUID.randomUUID.toString.take(8)}_$obsId")
-      val cp = graft.util.Truncate(plan.observe(obs,
-          sum(when(col("__d") < k, 1L).otherwise(0L)).as("below"),
-          count(lit(1)).as("living")))
-      // obs.get blocks on ASYNC listener delivery — drain the bus so the
-      // metric arrives now instead of a bus-flush-interval later (the
-      // whole point is fewer serial stalls per round)
-      graft.SparkInternals.flushListenerBus(plan.sparkSession.sparkContext)
-      def metric(name: String): Long = obs.get.get(name) match {
-        case Some(null) | None => 0L // empty degree table: sum is null
-        case Some(v) => v.asInstanceOf[Long]
-      }
-      (cp, metric("below"), metric("living"))
+    // observed metric ([[graft.util.Truncate.observed]]), making each
+    // round ONE job instead of checkpoint + leaf-scan probe — the only
+    // lever serial-round wall time has left in local mode; at cluster
+    // scale it also halves the scheduler round-trips.
+    val leaves = graft.util.Truncate.leaves(dir)
+    def degWithStats(plan: DataFrame): (DataFrame, Long, Long) = {
+      val (cp, m) = graft.util.Truncate.observed(plan)(
+        sum(when(col("__d") < k, 1L).otherwise(0L)).as("below"),
+        count(lit(1)).as("living"))
+      (leaves.supersede(cp), m("below"), m("living"))
     }
     // Per-round plans over a SMALL living-node table pay more in AQE
     // query-stage scheduling (each round's join materializes 3-4 stage
@@ -948,9 +807,8 @@ object Graph {
         .select(col("node"),
           (col("__d") - coalesce(col("__dec"), lit(0L))).as("__d"))
     }
-    var (deg, below, living) = checkpointWithStats(
+    var (deg, below, living) = degWithStats(
       dir.groupBy(col("src").as("node")).agg(count(lit(1)).as("__d")))
-    cleanups += { val d = deg; () => d.unpersist() }
     var rounds = 0
     while (below > 0 && rounds < maxRounds) {
       rounds += 1
@@ -978,11 +836,10 @@ object Graph {
           .join(deg.select(col("node").as("src")), Seq("src"), "left_semi")
           .repartition(col("src"))
           .persist(StorageLevel.MEMORY_AND_DISK)
-        cleanups += (() => { small.unpersist(); () })
+        graft.QueryCleanup.register(() => { small.unpersist(); () })
         dirActive = small
       }
-      val (next, b, l) = checkpointWithStats(roundPlan(living)(peelOnce(deg)))
-      cleanups += (() => next.unpersist())
+      val (next, b, l) = degWithStats(roundPlan(living)(peelOnce(deg)))
       deg = next
       below = b
       living = l
@@ -991,8 +848,6 @@ object Graph {
     require(converged,
       s"kCore: no fixpoint after $maxRounds rounds — raise maxRounds " +
         s"(the oracle unroll must be raised with it)")
-    val snapshot = cleanups.toList
-    graft.QueryCleanup.register(() => snapshot.foreach(f => f()))
     deg.select(col("node"), col("__d").as("core_degree"))
   }
 
@@ -1076,15 +931,10 @@ object Graph {
   def hitsScores(edges: DataFrame, srcCol: String, dstCol: String,
                  iterations: Int = 2): DataFrame = {
     require(iterations >= 1, s"iterations=$iterations must be >= 1")
-    val e = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .distinct()
+    val e = longEdges(edges, srcCol, dstCol)
       .repartition(col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val nodes = nodesOf(e).persist(StorageLevel.MEMORY_AND_DISK)
     def normalized(raw: DataFrame, valCol: String): DataFrame = {
       // guard BEFORE the 1e6 multiply: past 9e12 the rescale would wrap
       val guarded = raw.withColumn(valCol,
@@ -1111,23 +961,15 @@ object Graph {
     // plan stays half-step-sized and planning cost is constant per
     // half-step. The normalized form itself stays lazy — it is one
     // cache⋈leaf⋈broadcast join, cheap to replay per reference.
-    val halfSteps = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val leaves = graft.util.Truncate.leaves(e, nodes)
     for (_ <- 1 to iterations) {
-      val araw = truncate(
+      auth = normalized(leaves.keep(truncate(
         e.join(nodeSide(hub.withColumnRenamed("node", "src")), "src")
-          .groupBy(col("dst").as("node")).agg(sum(col("h")).as("a")))
-      halfSteps += araw
-      auth = normalized(araw, "a")
-      val hraw = truncate(
+          .groupBy(col("dst").as("node")).agg(sum(col("h")).as("a")))), "a")
+      hub = normalized(leaves.keep(truncate(
         e.join(nodeSide(auth.withColumnRenamed("node", "dst")), "dst")
-          .groupBy(col("src").as("node")).agg(sum(col("a")).as("h")))
-      halfSteps += hraw
-      hub = normalized(hraw, "h")
+          .groupBy(col("src").as("node")).agg(sum(col("a")).as("h")))), "h")
     }
-    val steps = halfSteps.toList
-    graft.QueryCleanup.register(() => {
-      e.unpersist(); nodes.unpersist(); steps.foreach(releaseCheckpoint); ()
-    })
     hub.join(auth, Seq("node"))
       .select(col("node"), col("h").as("hub_micro"), col("a").as("auth_micro"))
   }
@@ -1154,23 +996,15 @@ object Graph {
   def salsaScores(edges: DataFrame, srcCol: String, dstCol: String,
                   iterations: Int = 2): DataFrame = {
     require(iterations >= 1, s"iterations=$iterations must be >= 1")
-    val e0 = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .distinct()
+    val e0 = longEdges(edges, srcCol, dstCol)
     // both degree annotations ride the SAME src-keyed exchange: outdeg
     // as a window over the repartition, indeg joined from a dst-keyed
     // count (one extra shuffle of (dst, count) pairs — node-sized)
     val indeg = e0.groupBy(col("dst")).agg(count(lit(1)).as("__indeg"))
-    val e = e0
-      .repartition(col("src"))
-      .withColumn("__outdeg",
-        count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy("src")))
+    val e = outDegree(e0)
       .join(indeg, Seq("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val nodes = nodesOf(e).persist(StorageLevel.MEMORY_AND_DISK)
     var hub = nodes.select(col("node"), lit(1000000L).as("h"))
     var auth: DataFrame = null
     // Each half-step's aggregated score table eagerly CHECKPOINTS
@@ -1179,27 +1013,21 @@ object Graph {
     // lines at 2 iterations — and AQE re-optimized it per stage; as
     // lineage leaves the plan is constant per half-step). The dense
     // hub/auth forms stay lazy (one cache⋈leaf join each).
-    val halfSteps = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val leaves = graft.util.Truncate.leaves(e, nodes)
     for (_ <- 1 to iterations) {
-      val araw = truncate(
+      val araw = leaves.keep(truncate(
         e.join(nodeSide(hub.withColumnRenamed("node", "src")), "src")
           .select(col("dst").as("node"), expr("h div __outdeg").as("__c"))
-          .groupBy("node").agg(sum(col("__c")).as("a")))
-      halfSteps += araw
+          .groupBy("node").agg(sum(col("__c")).as("a"))))
       auth = nodes.join(araw, Seq("node"), "left")
         .select(col("node"), coalesce(col("a"), lit(0L)).as("a"))
-      val hraw = truncate(
+      val hraw = leaves.keep(truncate(
         e.join(nodeSide(auth.withColumnRenamed("node", "dst")), "dst")
           .select(col("src").as("node"), expr("a div __indeg").as("__c"))
-          .groupBy("node").agg(sum(col("__c")).as("h")))
-      halfSteps += hraw
+          .groupBy("node").agg(sum(col("__c")).as("h"))))
       hub = nodes.join(hraw, Seq("node"), "left")
         .select(col("node"), coalesce(col("h"), lit(0L)).as("h"))
     }
-    val steps = halfSteps.toList
-    graft.QueryCleanup.register(() => {
-      e.unpersist(); nodes.unpersist(); steps.foreach(releaseCheckpoint); ()
-    })
     hub.join(auth, Seq("node"))
       .select(col("node"), col("h").as("hub_micro"), col("a").as("auth_micro"))
   }
@@ -1227,22 +1055,10 @@ object Graph {
                           iterations: Int = 4,
                           dampNumer: Int = 850, dampDenom: Int = 1000,
                           initMicro: Long = 1000000L): DataFrame = {
-    require(iterations >= 1, s"iterations=$iterations must be >= 1")
-    require(dampNumer > 0 && dampNumer < dampDenom,
-      s"damping $dampNumer/$dampDenom must lie in (0, 1)")
-    val e = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .distinct()
-    val withDeg = e
-      .repartition(col("src"))
-      .withColumn("__outdeg",
-        count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy("src")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = withDeg.select(col("src").as("node"))
-      .union(withDeg.select(col("dst").as("node")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val teleportMicro = initMicro * (dampDenom - dampNumer) / dampDenom
+    requireDamping(iterations, dampNumer, dampDenom)
+    val topo = outDegree(longEdges(edges, srcCol, dstCol)).persist(StorageLevel.MEMORY_AND_DISK)
+    val nodes = nodesOf(topo).persist(StorageLevel.MEMORY_AND_DISK)
+    val walk = RankWalk(topo, nodes, "rank div __outdeg", lit(_), dampNumer, dampDenom, initMicro)
     // Every rank level is CHECKPOINTED (lineage leaf, r16 — see
     // [[truncate]]): the diff agg and the next round both reference each
     // level, and under plain persist() every reference inlined the full
@@ -1250,36 +1066,19 @@ object Graph {
     // 775 Exchange nodes / 6117 explain lines for 4 iterations). All
     // levels stay referenced by the output union, so leaves release only
     // at cleanup.
-    var ranks = truncate(nodes.select(col("node"), lit(initMicro).as("rank")))
-    val leaves = scala.collection.mutable.ArrayBuffer[DataFrame](ranks)
-    val rounds = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    for (i <- 1 to iterations) {
-      val inbound = withDeg
-        .join(nodeSide(ranks.withColumnRenamed("node", "src")), "src")
-        .select(col("dst").as("node"), expr("rank div __outdeg").as("__contrib"))
-        .groupBy("node")
-        .agg(sum("__contrib").as("__in"))
-      val next = truncate(nodes
-        .join(inbound, Seq("node"), "left")
-        .select(col("node"),
-          (lit(teleportMicro) +
-            expr(s"($dampNumer * coalesce(__in, 0L)) div $dampDenom")).as("rank")))
-      leaves += next
-      rounds += ranks.select(col("node"), col("rank").as("__prev"))
+    val leaves = graft.util.Truncate.leaves(topo, nodes)
+    val levels = (1 to iterations).scanLeft(leaves.keep(truncate(walk.init))) {
+      (ranks, _) => leaves.keep(truncate(walk.round(ranks)))
+    }
+    levels.zip(levels.tail).zipWithIndex.map { case ((prev, next), i) =>
+      prev.select(col("node"), col("rank").as("__prev"))
         .join(next, Seq("node"))
         .agg(sum(abs(col("rank") - col("__prev"))).as("l1_delta"),
           max(abs(col("rank") - col("__prev"))).as("max_delta"),
           sum(when(col("rank") =!= col("__prev"), 1L).otherwise(0L))
             .as("moved_nodes"))
-        .select(lit(i.toLong).as("iter"), col("l1_delta"), col("max_delta"),
+        .select(lit(i + 1L).as("iter"), col("l1_delta"), col("max_delta"),
           col("moved_nodes"))
-      ranks = next
-    }
-    val snapshot = leaves.toList
-    graft.QueryCleanup.register(() => {
-      withDeg.unpersist(); nodes.unpersist()
-      snapshot.foreach(releaseCheckpoint)
-    })
-    rounds.reduce(_.unionByName(_)).orderBy("iter")
+    }.reduce(_.unionByName(_)).orderBy("iter")
   }
 }

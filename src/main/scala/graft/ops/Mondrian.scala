@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.util.Truncate
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -49,24 +50,7 @@ import org.apache.spark.sql.functions._
   */
 object Mondrian {
 
-  /** Release the storage behind an eager localCheckpoint: the
-    * checkpointed RDD sits in the plan as a LogicalRDD leaf and is NOT
-    * released by DataFrame.unpersist (same contract as the CC loops'
-    * helper in Dedup). Walks the RDD lineage too, because the
-    * stats-reset wrapper below layers a conversion RDD on top of the
-    * persisted one. */
-  private def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        var rdd: org.apache.spark.rdd.RDD[_] = lr.rdd
-        while (rdd != null) {
-          rdd.unpersist(false)
-          rdd = rdd.dependencies.headOption.map(_.rdd).orNull
-        }
-      case _ => ()
-    }
-
-  /** Eager localCheckpoint + stats reset. `Dataset.localCheckpoint`
+  /** Eager truncation + stats reset. `Dataset.localCheckpoint`
     * snapshots the ORIGIN plan's estimated statistics into the new
     * LogicalRDD leaf, and Catalyst's size-only estimator multiplies
     * children's sizeInBytes through joins. `cur` feeds this loop's join
@@ -79,9 +63,10 @@ object Mondrian {
     * fresh LogicalRDD with the DEFAULT constant-width size estimate,
     * so per-level stats arithmetic stays O(1). Broadcast decisions are
     * unaffected: every small side in this loop carries an explicit
-    * broadcast() hint. */
+    * broadcast() hint. [[Truncate.release]] walks down through the
+    * wrapper to the checkpointed RDD. */
   private def checkpointResetStats(df: DataFrame): DataFrame = {
-    val ck = df.localCheckpoint(true)
+    val ck = Truncate(df)
     ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
   }
 
@@ -108,15 +93,14 @@ object Mondrian {
       c -> math.max(s.getDouble(1) - s.getDouble(0), 0.0)
     }.toMap
 
-    // Eager localCheckpoint rather than persist: every level derives
+    // Eager truncation rather than persist: every level derives
     // THREE plans from `cur` (stats, side counts, reassign), so an
     // accumulated join lineage is re-analyzed several times per level
     // and planning cost grows superlinearly in the level count (measured
     // 676 s at 10x sf0.1 with persist-only vs ~40 s checkpointed).
-    // Checkpointing keeps each level's plans constant-size; on a
-    // multi-node cluster swap in reliable `checkpoint` (executor loss
-    // loses local checkpoint blocks).
-    var cur = checkpointResetStats(df.withColumn("pid", lit(0L)))
+    // Checkpointing keeps each level's plans constant-size.
+    val leaves = Truncate.leaves()
+    var cur = leaves.keep(checkpointResetStats(df.withColumn("pid", lit(0L))))
     var level = 0
     var open = true
     while (open && level < maxLevels) {
@@ -139,14 +123,13 @@ object Mondrian {
       // the splitDf join both consume `cand`; leaving it lazy makes the
       // broadcast thread and the main job race to compute the stats agg
       // inside one job (measured 10x: 129 s lazy vs ~40 s materialized).
-      val cand = cur.groupBy(col("pid")).agg(aggs.head, aggs.tail: _*)
+      val cand = Truncate(cur.groupBy(col("pid")).agg(aggs.head, aggs.tail: _*)
         .filter(col("__n") >= lit(2L * k))
         .withColumn("__dims",
           sort_array(filter(array(dimStructs: _*), d => d("negw") < 0)))
         .filter(size(col("__dims")) > 0)
         .select(col("pid") +: col("__dims") +:
-          qiCols.map(c => col(s"__md_$c")): _*)
-        .localCheckpoint(true)
+          qiCols.map(c => col(s"__md_$c")): _*))
 
       // (2) exact side counts for every candidate (pid, dim) median, then
       // the in-plan cut choice: first dim in ranked order with >= k rows
@@ -163,26 +146,19 @@ object Mondrian {
         filter(col("__dims"), d =>
           element_at(leMap, d("dim")) >= lit(k.toLong) &&
             col("__sn") - element_at(leMap, d("dim")) >= lit(k.toLong)), lit(1))
-      // The cut table stays executor-resident; the eager localCheckpoint
-      // truncates its lineage so next level's plan does NOT nest this
-      // level's (cur ⨝ f(cur) would otherwise grow the logical plan
-      // exponentially in the level count). On a multi-node cluster swap
-      // in reliable `checkpoint` (the table is ≤ n/2k rows × 3 narrow
-      // columns — trivially re-derivable, but executor loss would lose
-      // local checkpoint blocks).
-      val splitDf = cand.select("pid", "__dims").join(sides, Seq("pid"))
-        .withColumn("__cut", chosen)
-        .filter(col("__cut").isNotNull)
-        .select(col("pid"), col("__cut")("dim").as("__sdim"),
-          col("__cut")("med").as("__smed"))
-        .localCheckpoint()
-
-      // The ONLY driver-bound value per level: the split count.
-      val nSplits = splitDf.count()
-      if (nSplits == 0L) {
-        open = false
-        unpersistCheckpoint(cand); unpersistCheckpoint(splitDf)
-      } else {
+      // The cut table stays executor-resident; the eager truncation cuts
+      // its lineage so next level's plan does NOT nest this level's
+      // (cur ⨝ f(cur) would otherwise grow the logical plan
+      // exponentially in the level count). The ONLY driver-bound value
+      // per level, the split count, is observed by the same job.
+      val (splitDf, m) = Truncate.observed(
+        cand.select("pid", "__dims").join(sides, Seq("pid"))
+          .withColumn("__cut", chosen)
+          .filter(col("__cut").isNotNull)
+          .select(col("pid"), col("__cut")("dim").as("__sdim"),
+            col("__cut")("med").as("__smed")))(count(lit(1)).as("n"))
+      if (m("n") == 0L) open = false
+      else {
         // (3) reassign: broadcast the cut table, renumber in one pass.
         val isLeft = qiCols.foldLeft(lit(false)) { (acc, c) =>
           when(col("__sdim") === c, col(c).cast("double") <= col("__smed"))
@@ -194,15 +170,13 @@ object Mondrian {
               .when(isLeft, col("pid") * 2 + 1)
               .otherwise(col("pid") * 2 + 2))
           .drop("__sdim", "__smed")
-        val nextCk = checkpointResetStats(next) // materializes, truncates lineage, resets stats
-        unpersistCheckpoint(cur); unpersistCheckpoint(cand); unpersistCheckpoint(splitDf)
-        cur = nextCk
+        // materializes, truncates lineage, resets stats; frees the old cur
+        cur = leaves.supersede(checkpointResetStats(next))
         level += 1
       }
+      Truncate.release(cand); Truncate.release(splitDf)
     }
-    val result = cur
-    graft.QueryCleanup.register(() => unpersistCheckpoint(result))
-    result
+    cur
   }
 
   /** Full Mondrian anonymization: partition, then replace each QI value

@@ -1420,7 +1420,7 @@ object Similarity {
     var v = (0 until dim).map(j => (j.toLong, if (j == 0) 1.0 else 0.0))
       .toDF("idx", "__v")
     var lastNorm: DataFrame = null
-    val leaves = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val leaves = graft.util.Truncate.leaves()
     for (_ <- 1 to rounds) {
       val s = xj.join(broadcast(v), col("__j") === col("idx"))
         .groupBy(col("__id"))
@@ -1428,11 +1428,10 @@ object Similarity {
       // checkpoint storage strategy-selected (graft.util.Truncate, r17):
       // local blocks in local mode, reliable on a cluster — an
       // unreplicated local checkpoint chain dies with its executor.
-      val u = graft.util.Truncate(xj.join(s, Seq("__id"))
+      val u = leaves.keep(graft.util.Truncate(xj.join(s, Seq("__id"))
         .groupBy(col("__j"))
         .agg(sum(round((col("__s") / 1e8) * col("__xv") * 1e6, 0).cast("long"))
-          .as("__u")))
-      leaves += u
+          .as("__u"))))
       val n2 = u.agg(sum(col("__u").cast("decimal(28,0)") * col("__u")).as("__n2"))
       lastNorm = n2
       v = u.crossJoin(broadcast(n2))
@@ -1440,9 +1439,6 @@ object Similarity {
           round(col("__u").cast("double") / sqrt(col("__n2").cast("double")), 9)
             .as("__v"))
     }
-    val snapshot = leaves.toList
-    graft.QueryCleanup.register(() =>
-      snapshot.foreach(graft.SparkInternals.releaseCheckpoint))
     (v, lastNorm)
   }
 }

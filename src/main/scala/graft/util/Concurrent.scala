@@ -16,6 +16,11 @@ package graft.util
   * chains (cache releases, checkpoint frees) would land in the Unscoped
   * bucket and leak past the harness's per-query drain.
   *
+  * Failure: both futures are SETTLED before the first failure (in
+  * argument order) is rethrown — otherwise the surviving chain would keep
+  * running jobs and registering hooks into a scope the harness is
+  * already draining.
+  *
   * Determinism: both builders are self-contained integer-exact pipelines;
   * interleaving their jobs changes scheduling, never results. */
 object Concurrent {
@@ -27,6 +32,8 @@ object Concurrent {
     val scope = graft.QueryCleanup.activeScope
     val f1 = Future(graft.QueryCleanup.scoped(scope)(fa))
     val f2 = Future(graft.QueryCleanup.scoped(scope)(fb))
-    (Await.result(f1, Duration.Inf), Await.result(f2, Duration.Inf))
+    val r1 = scala.util.Try(Await.result(f1, Duration.Inf))
+    val r2 = scala.util.Try(Await.result(f2, Duration.Inf))
+    (r1.get, r2.get)
   }
 }

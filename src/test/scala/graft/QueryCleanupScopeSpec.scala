@@ -45,6 +45,20 @@ class QueryCleanupScopeSpec extends SparkSpec {
     assert(ran, "second hook ran despite the first throwing")
   }
 
+  test("Concurrent.both settles the other chain before rethrowing a failure") {
+    val e = intercept[IllegalStateException] {
+      QueryCleanup.scoped("qBoth") {
+        util.Concurrent.both(
+          throw new IllegalStateException("boom"),
+          { Thread.sleep(300); QueryCleanup.register(() => ()); 1 })
+      }
+    }
+    assert(e.getMessage == "boom")
+    assert(QueryCleanup.pending("qBoth") == 1,
+      "the slow chain's hook is registered by the time both throws")
+    QueryCleanup.drain("qBoth")
+  }
+
   // The actual round-11/12 failure shape: query A builds an incremental
   // view over a scratch SnapshotStore chain in several eager steps;
   // between A's steps the harness consumes-and-drains an unrelated query
