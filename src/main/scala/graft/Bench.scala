@@ -58,6 +58,10 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "5").toInt
+    val scalingSet = BenchScaling.scalingFactor(sys.env.get("SPARK_GRAFT_SCALING_SET")) match {
+      case Left(msg) => System.err.println(msg); sys.exit(2)
+      case Right(k) => k
+    }
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -78,9 +82,9 @@ object Bench {
     // in-flight and prints its own one-line JSON INSTEAD of the main
     // suite (run it at two SPARK_GRAFT_CPUS values and compare). Without
     // the env var this block is inert and the bench below is unchanged.
-    sys.env.get("SPARK_GRAFT_SCALING_SET").map(_.trim).filter(_.nonEmpty) match {
-      case Some(kStr) =>
-        BenchScaling.run(spark, sfDir, kStr.toInt, reps)
+    scalingSet match {
+      case Some(k) =>
+        BenchScaling.run(spark, sfDir, k, reps)
         spark.stop()
         return
       case None => ()
@@ -186,9 +190,9 @@ object Bench {
     // q293 unflagged. So after the sweep, compare each median to the
     // previous round's committed bench_detail.json; any median > 2.5x
     // its prior (and >= 0.5 s absolute) is re-measured at 9 reps in the
-    // calm post-sweep tail and BOTH numbers publish side by side in the
-    // `drift` section — the in-bench median stays authoritative in
-    // `queries`, the drift row is the attribution. Skipped for filtered
+    // calm post-sweep tail. The re-measure is what `queries` publishes
+    // (see [[publishDriftMedians]]); the `drift` section keeps it beside
+    // the in-bench median as the attribution. Skipped for filtered
     // probe runs (SPARK_GRAFT_ONLY) — no stable prior mapping there.
     val priorMedians: Map[String, Double] =
       if (only.isDefined) Map.empty

@@ -38,6 +38,31 @@ object BenchScaling {
         d.withColumn(c, col(c) + lit(i.toLong * CopyShift)))
     }.reduce(_ unionByName _)
 
+  /** The distinct (supp, cust) pairs of the amplified supplier-customer
+    * graph. Supplier nodes shift by k more copies, past every copy's
+    * customer ids: copy i's suppliers sit at supp + (i + k)·CopyShift,
+    * while customers only reach copy k − 1's range, so no supplier of any
+    * copy takes a customer's id. */
+  private[graft] def tradePairs(s: SparkSession, dir: String, k: Int): DataFrame = {
+    val l = amplify(Tables.lineitem(s, dir).select("l_orderkey", "l_suppkey"),
+      k, Seq("l_orderkey", "l_suppkey"))
+    val o = amplify(Tables.orders(s, dir).select("o_orderkey", "o_custkey"),
+      k, Seq("o_orderkey", "o_custkey"))
+    l.join(o, col("l_orderkey") === col("o_orderkey"))
+      .select((col("l_suppkey") + lit(k * CopyShift)).as("supp"), col("o_custkey").as("cust"))
+      .distinct()
+  }
+
+  /** The amplification factor `SPARK_GRAFT_SCALING_SET` asks for: None when
+    * unset or blank, else an integer >= 1 — or a one-line error naming the
+    * variable. */
+  def scalingFactor(raw: Option[String]): Either[String, Option[Int]] =
+    raw.map(_.trim).filter(_.nonEmpty) match {
+      case None => Right(None)
+      case Some(v) => v.toIntOption.filter(_ >= 1).map(k => Right(Some(k)))
+        .getOrElse(Left(s"SPARK_GRAFT_SCALING_SET='$v': expected an integer >= 1"))
+    }
+
   /** The sentinel set: one representative per heavy operator family.
     * Each returns a DataFrame; the timed action (like the main bench) is
     * `queryExecution.toRdd.count()` over the full output. */
@@ -69,28 +94,15 @@ object BenchScaling {
     // supplier-customer graph (k disjoint copies; per-copy structure is
     // exactly q125's graph).
     "s3_pagerank" -> ((s: SparkSession, dir: String) => {
-      val l = amplify(Tables.lineitem(s, dir).select("l_orderkey", "l_suppkey"),
-        k, Seq("l_orderkey", "l_suppkey"))
-      val o = amplify(Tables.orders(s, dir).select("o_orderkey", "o_custkey"),
-        k, Seq("o_orderkey", "o_custkey"))
-      val pairs = l.join(o, col("l_orderkey") === col("o_orderkey"))
-        .select((col("l_suppkey") + lit(10 * CopyShift)).as("st"), col("o_custkey").as("c"))
-        .distinct()
-      val edges = pairs.select(col("st").as("src"), col("c").as("dst"))
-        .unionByName(pairs.select(col("c").as("src"), col("st").as("dst")))
+      val pairs = tradePairs(s, dir, k)
+      val edges = pairs.select(col("supp").as("src"), col("cust").as("dst"))
+        .unionByName(pairs.select(col("cust").as("src"), col("supp").as("dst")))
       graft.ops.Graph.pageRankFixedPoint(edges, "src", "dst", iterations = 3)
     }),
 
     // Peel-loop graph family: k-core over the same amplified graph.
     "s4_kcore" -> ((s: SparkSession, dir: String) => {
-      val l = amplify(Tables.lineitem(s, dir).select("l_orderkey", "l_suppkey"),
-        k, Seq("l_orderkey", "l_suppkey"))
-      val o = amplify(Tables.orders(s, dir).select("o_orderkey", "o_custkey"),
-        k, Seq("o_orderkey", "o_custkey"))
-      val pairs = l.join(o, col("l_orderkey") === col("o_orderkey"))
-        .select((col("l_suppkey") + lit(10 * CopyShift)).as("a"), col("o_custkey").as("b"))
-        .distinct()
-      graft.ops.Graph.kCore(pairs, "a", "b", k = 2, maxRounds = 12)
+      graft.ops.Graph.kCore(tradePairs(s, dir, k), "supp", "cust", k = 2, maxRounds = 12)
     }),
 
     // Text/dedup family: 8-gram hash explode + corpus-wide distinct —

@@ -10,12 +10,13 @@ import org.apache.spark.sql.functions._
   * (Archived/data-anonymity.py:79-83), and per-cluster min-max range
   * generalization (clustering-anon.py:51).
   *
-  * Equal-width binning is two-phase: a single min/max aggregate (one cheap
-  * all-to-one reduce — bytes of state regardless of table size) fixes the
-  * edges on the driver, then the bin id is a pure arithmetic expression that
-  * stays inside whole-stage codegen. We intentionally do NOT replicate
-  * pandas' 0.1% left-edge widening (SURVEY §2.8 F1); edges are exactly
-  * [min, max] with the top edge clamped into the last bin.
+  * Equal-width binning is two-phase: a single min/max aggregate over every
+  * binned column (one cheap all-to-one reduce — bytes of state regardless
+  * of table size) fixes the edges on the driver, then the bin id is a pure
+  * arithmetic expression that stays inside whole-stage codegen. We
+  * intentionally do NOT replicate pandas' 0.1% left-edge widening (SURVEY
+  * §2.8 F1); edges are exactly [min, max] with the top edge clamped into
+  * the last bin.
   */
 object Generalization {
 
@@ -23,9 +24,26 @@ object Generalization {
     * Returns the input with `outCol` appended.
     */
   def equalWidthBin(df: DataFrame, c: String, n: Int, outCol: String): DataFrame = {
-    val Array(mn, mx) = df.agg(min(col(c)).cast("double"), max(col(c)).cast("double"))
-      .head().toSeq.map(_.asInstanceOf[Double]).toArray
+    val Seq((mn, mx)) = ranges(df, Seq(c))
     df.withColumn(outCol, equalWidthBinExpr(col(c), mn, mx, n))
+  }
+
+  /** [[equalWidthBin]] over several (column, bin count) pairs from ONE
+    * min/max aggregate: each bin id replaces its column, which moves to the
+    * end of the schema in `bins` order. */
+  def equalWidthBins(df: DataFrame, bins: Seq[(String, Int)]): DataFrame =
+    if (bins.isEmpty) df
+    else bins.zip(ranges(df, bins.map(_._1))).foldLeft(df) {
+      case (acc, ((c, n), (mn, mx))) =>
+        acc.withColumn(c + "__bin", equalWidthBinExpr(col(c), mn, mx, n))
+          .drop(c).withColumnRenamed(c + "__bin", c)
+    }
+
+  /** (min, max) of each column as doubles, from one aggregate job. */
+  private def ranges(df: DataFrame, cols: Seq[String]): Seq[(Double, Double)] = {
+    val aggs = cols.flatMap(c => Seq(min(col(c)).cast("double"), max(col(c)).cast("double")))
+    df.agg(aggs.head, aggs.tail: _*).head().toSeq.map(_.asInstanceOf[Double])
+      .grouped(2).map { case Seq(mn, mx) => (mn, mx) }.toSeq
   }
 
   /** The pure-expression form, usable once min/max are known. Degenerate

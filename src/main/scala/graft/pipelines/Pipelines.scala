@@ -6,22 +6,25 @@ import graft.ops.{Generalization, KAnonymity, TCloseness}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The reference's three entry-point scripts as composable pipelines
-  * (SURVEY §3 E1/E2/E3). Each is a pure DataFrame → result function; the
-  * anonymized DataFrame is cached before the metric fan-out so the five
-  * metric aggregates don't recompute the suppression (SURVEY §4 "metric
-  * fan-out recomputation").
-  */
-/** `emdBasis` (E3 only): the table whose sensitive distribution the
-  * t-closeness filter measured groups against — the k-anonymized binned
-  * input. The violation recheck must reuse it: suppression shifts the
-  * surviving table's own distribution, so rechecking against the OUTPUT's
-  * distribution can flag boundary groups the filter correctly admitted. */
+/** What a pipeline releases: the anonymized rows, the privacy report and
+  * NCP. The pipelines below are the reference's three entry-point scripts
+  * made composable (SURVEY §3 E1/E2/E3). Each is a pure DataFrame → result
+  * function; the anonymized DataFrame is cached before the metric fan-out
+  * so the metric aggregates don't recompute the suppression (SURVEY §4
+  * "metric fan-out recomputation").
+  *
+  * `emdBasis` (E3 only): the sensitive distribution the t-closeness filter
+  * measured classes against — the per-position counts of the k-anonymized
+  * binned input, as the filter computed them (held on the driver on the
+  * class-table route). The violation recheck must reuse it: suppression
+  * shifts the surviving table's own distribution, so rechecking against
+  * the OUTPUT's distribution can flag boundary classes the filter
+  * correctly admitted. */
 final case class AnonymizationResult(
     anonymized: DataFrame,
     report: PrivacyReport,
     ncp: Double,
-    emdBasis: Option[DataFrame] = None)
+    emdBasis: Option[TCloseness.EmdBasis] = None)
 
 object NaiveSuppressionPipeline {
   /** E1 (naive-suppresion.py): k-anonymity by record suppression over the
@@ -59,15 +62,12 @@ object TClosenessPipeline {
     */
   def run(df: DataFrame, qis: Seq[String], sensitiveOrdinal: String,
           k: Int, t: Double, binCols: Map[String, Int] = Map.empty): AnonymizationResult = {
-    val binned = binCols.foldLeft(df) { case (acc, (c, n)) =>
-      Generalization.equalWidthBin(acc, c, n, c + "__bin")
-        .drop(c).withColumnRenamed(c + "__bin", c)
-    }
-    val anonymized = TCloseness.filter(binned, qis, sensitiveOrdinal, k, t).cache()
+    val binned = Generalization.equalWidthBins(df, binCols.toSeq)
+    val (filtered, basis) = TCloseness.filterWithBasis(binned, qis, sensitiveOrdinal, k, t)
+    val anonymized = filtered.cache()
     val report = PrivacyMetrics.report(binned, anonymized, qis, k)
     val ncp = PrivacyMetrics.ncp(binned, anonymized, qis)
-    AnonymizationResult(anonymized, report, ncp,
-      emdBasis = Some(KAnonymity.suppress(binned, qis, k)))
+    AnonymizationResult(anonymized, report, ncp, emdBasis = Some(basis))
   }
 
   /** The reference's own self-check (t-closeness.py:134-143): after the

@@ -689,4 +689,29 @@ class PlanShapeSpec extends SparkSpec {
     }
     assert(ex.getMessage.contains("integral"), ex.getMessage)
   }
+
+  test("q26 t-closeness filter: orders read once, at most 3 exchanges") {
+    // the class table materializes as a truncated leaf while the query is
+    // built, so the returned plan reads orders once (the semi-join probe)
+    // beside that leaf
+    val dir = java.nio.file.Files.createTempDirectory("graft-q26-plan")
+    // 15 classes of 20 rows, each spread evenly over the 4 price buckets;
+    // a 3-row class all in the lowest bucket (fails t) and a 2-row class
+    // (fails k = 3)
+    val price = Seq(10000.0, 100000.0, 200000.0, 350000.0)
+    val even = (0L until 300L).map(i => (i, Seq("F", "O", "P")((i % 3).toInt),
+      s"${i % 5 + 1}-PRIORITY", price(((i / 15) % 4).toInt)))
+    val skewed = (300L until 303L).map(i => (i, "X", "1-PRIORITY", price.head))
+    val small = (303L until 305L).map(i => (i, "Y", "1-PRIORITY", price.head))
+    (even ++ skewed ++ small)
+      .toDF("o_orderkey", "o_orderstatus", "o_orderpriority", "o_totalprice")
+      .write.parquet(s"$dir/orders.parquet")
+    val q26 = SparkEntry.queries("q26_tcloseness_filter")(spark, dir.toString)
+    val p = plan(q26)
+    assert(q26.count() == 300L)
+    graft.QueryCleanup.drain()
+    assert("FileScan parquet".r.findAllIn(p).length == 1, p)
+    assert(exchanges(p) <= 3, s"${exchanges(p)} exchanges:\n$p")
+    assertNoQuadratic(p)
+  }
 }

@@ -23,6 +23,18 @@ class GeneralizationSpec extends SparkSpec {
     assert(bins == Set(0L))
   }
 
+  test("equalWidthBins: each column binned as equalWidthBin does, moved to the end") {
+    val df = (0 to 10).map(i => (i.toDouble, s"r$i", (i * 7 % 11).toLong, 3.0)).toDF("x", "id", "y", "z")
+    val out = Generalization.equalWidthBins(df, Seq("x" -> 5, "y" -> 3, "z" -> 2))
+    assert(out.columns.toSeq == Seq("id", "x", "y", "z"))
+    val one = Seq("x" -> 5, "y" -> 3, "z" -> 2).foldLeft(df) { case (acc, (c, n)) =>
+      Generalization.equalWidthBin(acc, c, n, s"${c}_bin")
+    }
+    val want = one.select("id", "x_bin", "y_bin", "z_bin").as[(String, Long, Long, Long)]
+      .collect().sorted.toSeq
+    assert(out.as[(String, Long, Long, Long)].collect().sorted.toSeq == want)
+  }
+
   test("labeledBin matches pd.cut right-closed intervals") {
     val df = Seq(10.0, 25.0, 26.0, 60.0, 99.0, 150.0).toDF("age")
     val out = df.withColumn("lbl",

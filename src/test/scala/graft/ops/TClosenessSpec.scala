@@ -15,6 +15,10 @@ class TClosenessSpec extends SparkSpec {
     val emd = TCloseness.groupEmd(df, Seq("g"), "pos")
       .select("emd").as[Double].collect()
     assert(emd.forall(math.abs(_) < 1e-12))
+    // a one-position domain: every group equals the global distribution
+    val single = TCloseness.groupEmd(df.filter(col("pos") === 0.0), Seq("g"), "pos")
+      .select("emd").as[Double].collect()
+    assert(single.toSeq == Seq(0.0, 0.0), single.toSeq)
   }
 
   test("groupEmd: disjoint point masses = distance between positions") {
@@ -128,6 +132,39 @@ class TClosenessSpec extends SparkSpec {
     val ok = TCloseness.groupEmdAgainst(
       df.filter(col("pos") === 0.0), df, Seq("g"), "pos")
     assert(ok.count() == 1)
+  }
+
+  test("violationCount against a held basis counts what groupEmd flags and rejects positions outside it") {
+    val rows =
+      (1 to 10).map(i => ("big", if (i <= 5) 0L else 3L)) ++
+        (1 to 4).map(_ => ("odd", 3L)) ++ Seq(("tiny", 0L), ("mid", 1L), ("mid", 3L))
+    val df = rows.toDF("g", "pos")
+    val own = TCloseness.EmdBasis.Held(Vector(0L -> 6L, 1L -> 1L, 3L -> 11L)) // df's own
+    Seq(0.0, 0.3, 1.0, 2.0).foreach { t =>
+      val windowed = TCloseness.groupEmd(df, Seq("g"), "pos").filter(col("emd") > t).count()
+      assert(TCloseness.violationCount(df, Seq("g"), "pos", t, Some(own)) == windowed, s"t=$t")
+    }
+    val basis = TCloseness.EmdBasis.Held(Vector(0L -> 6L, 3L -> 9L)) // no pos=1
+    val e = intercept[IllegalArgumentException] {
+      TCloseness.violationCount(df, Seq("g"), "pos", 0.3, Some(basis))
+    }
+    assert(e.getMessage.contains("positions 1 occur") &&
+      e.getMessage.contains("not in referenceDf"), e.getMessage)
+    assert(TCloseness.violationCount(df.filter(col("pos") =!= 1L), Seq("g"), "pos", 10.0,
+      Some(basis)) == 0L)
+  }
+
+  test("a NULL sensitive position has no ground distance: no class is released") {
+    // the domain {NULL, 0}: every class is densified against it, so every
+    // EMD is NULL — even g2's, which holds no NULL row itself
+    val df = Seq(("g1", Some(0L)), ("g1", None), ("g2", Some(0L)), ("g2", Some(0L)))
+      .toDF("g", "pos")
+    val emd = TCloseness.groupEmd(df, Seq("g"), "pos").select("emd").collect()
+    assert(emd.length == 2 && emd.forall(_.isNullAt(0)), emd.toSeq)
+    assert(TCloseness.filter(df, Seq("g"), "pos", k = 1, t = 10.0).count() == 0)
+    // and the same with more than one non-NULL position
+    val wider = df.union(Seq(("g1", Some(1L)), ("g2", Some(1L))).toDF("g", "pos"))
+    assert(TCloseness.filter(wider, Seq("g"), "pos", k = 1, t = 10.0).count() == 0)
   }
 
   test("ordinal encodes alphabetically from 0") {

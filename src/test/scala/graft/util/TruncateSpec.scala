@@ -2,7 +2,8 @@ package graft.util
 
 import graft.SparkSpec
 import graft.ml.DeterministicKMeans
-import graft.ops.{BpeTrain, Dedup, Graph, Mondrian}
+import graft.ops.{BpeTrain, Dedup, Graph, Mondrian, TCloseness}
+import graft.pipelines.TClosenessPipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{count, lit, sum}
@@ -28,6 +29,10 @@ class TruncateSpec extends SparkSpec {
   // plus a second component
   private lazy val tinyGraph = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L),
     (4L, 5L), (5L, 6L), (7L, 8L), (8L, 9L), (9L, 7L)).toDF("src", "dst")
+
+  private lazy val microdata = (1 to 40)
+    .map(i => (if (i % 4 == 0) "odd" else "big", 20 + i % 9, (i % 3).toLong))
+    .toDF("g", "age", "pos")
 
   test("auto on a local master = localCheckpoint (no checkpoint file)") {
     val df = spark.range(100).toDF("id")
@@ -112,7 +117,16 @@ class TruncateSpec extends SparkSpec {
     }),
     "Mondrian.assignPartitions" -> (() => Mondrian.assignPartitions(
       (1 to 40).map(i => (i, (i * 7) % 13)).toDF("a", "b"), Seq("a", "b"), k = 3)
-      .collect()))
+      .collect()),
+    "TCloseness.filter" -> (() =>
+      TCloseness.filter(microdata, Seq("g"), "pos", k = 2, t = 0.3).collect()),
+    "TClosenessPipeline.run" -> (() => {
+      val r = TClosenessPipeline.run(microdata, Seq("g", "age"), "pos", k = 2,
+        t = 0.3, binCols = Map("age" -> 3))
+      r.anonymized.collect()
+      // the released rows are cached for the caller, who frees them
+      r.anonymized.unpersist(blocking = true)
+    }))
 
   leakCases.foreach { case (name, run) =>
     test(s"$name frees every RDD it persisted at the query's drain") {
