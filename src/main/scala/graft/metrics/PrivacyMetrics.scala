@@ -1,6 +1,5 @@
 package graft.metrics
 
-import graft.ops.KAnonymity
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -9,10 +8,10 @@ import org.apache.spark.sql.functions._
   * suppression rate, NCP (naive-suppresion.py:42-83, t-closeness.py:179-234,
   * clustering-anon.py:58-92).
   *
-  * Everything is computed from ONE aggregation over the equivalence-class
-  * sizes plus one count of the original table — the reference's five separate
-  * passes collapse into a single shuffle. Risk uses the closed form
-  * mean_records(1/grpSize) = nGroups / nRows.
+  * The reference's five passes collapse into TWO aggregations, one SQL
+  * execution each: the original's row and distinct counts, and the
+  * release's class table for the sizes and released distinct counts. Risk
+  * uses the closed form mean_records(1/grpSize) = nGroups / nRows.
   */
 final case class PrivacyReport(
     originalRows: Long,
@@ -28,60 +27,42 @@ final case class PrivacyReport(
 
 object PrivacyMetrics {
 
-  /** Full report for `anonymized` (already suppressed) against `original`. */
-  def report(original: DataFrame, anonymized: DataFrame, qis: Seq[String], k: Int): PrivacyReport = {
-    val gs = KAnonymity.groupSizes(anonymized, qis)
-    val row = gs.agg(
-      coalesce(sum("grp_cnt"), lit(0L)).as("rows"),
-      count(lit(1)).as("groups"),
-      coalesce(min("grp_cnt"), lit(0L)).as("kmin"),
-      coalesce(max("grp_cnt"), lit(0L)).as("kmax"),
-      coalesce(sum(when(col("grp_cnt") === 1, 1L).otherwise(0L)), lit(0L)).as("singletons"))
-      .head()
-    val origRows = original.count()
-    val rows = row.getAs[Long]("rows")
-    val groups = row.getAs[Long]("groups")
-    val singles = row.getAs[Long]("singletons")
-    PrivacyReport(
+  /** The report and NCP of a release of `original`, at `k`. `classes` is
+    * the release's class table: one row per equivalence class, its size
+    * `grp_cnt` and its released value of each `ncpCols` column
+    * (`KAnonymity.groupSizes` of the released rows, or
+    * `Generalization.minMaxRanges`). NCP, the per-column fraction of
+    * distinct values lost averaged over `ncpCols` (naive-suppresion.py:76-83),
+    * is exact on it: every released row carries its class's value and every
+    * class has a row, so the distinct counts (NULL ignored) are the rows'. */
+  def evaluate(original: DataFrame, classes: DataFrame, ncpCols: Seq[String],
+               k: Int): (PrivacyReport, Double) = {
+    val distincts = ncpCols.map(c => countDistinct(col(c)))
+    val o = original.agg(count(lit(1)), distincts: _*).head()
+    val a = classes.agg(
+      coalesce(sum("grp_cnt"), lit(0L)),
+      (Seq(count(lit(1)),
+        coalesce(min("grp_cnt"), lit(0L)),
+        coalesce(max("grp_cnt"), lit(0L)),
+        coalesce(sum(when(col("grp_cnt") === 1, 1L).otherwise(0L)), lit(0L))) ++
+        distincts): _*).head()
+    val origRows = o.getLong(0)
+    val Seq(rows, groups, kMin, kMax, singles) = (0 until 5).map(a.getLong)
+    val report = PrivacyReport(
       originalRows = origRows,
       anonymizedRows = rows,
       nGroups = groups,
-      kMin = row.getAs[Long]("kmin"),
-      kMax = row.getAs[Long]("kmax"),
-      kSatisfied = groups == 0 || row.getAs[Long]("kmin") >= k,
+      kMin = kMin,
+      kMax = kMax,
+      kSatisfied = groups == 0 || kMin >= k,
       uniquenessRate = if (groups > 0) singles.toDouble / groups else 0.0,
       uniquenessRateRecords = if (rows > 0) singles.toDouble / rows else 0.0,
       reidentificationRisk = if (rows > 0) groups.toDouble / rows else 0.0,
       suppressionRate = if (origRows > 0) (origRows - rows).toDouble / origRows else 0.0)
-  }
-
-  /** Normalized Certainty Penalty: per-column fraction of distinct values
-    * lost, averaged over the QI columns (naive-suppresion.py:76-83).
-    * Exact distinct counts; see [[ncpApprox]] for the 100 TB variant.
-    */
-  def ncp(original: DataFrame, anonymized: DataFrame, cols: Seq[String]): Double =
-    ncpImpl(original, anonymized, cols, exact = true)
-
-  /** NCP with HyperLogLog distinct counts — sketch-sized state per column,
-    * the right trade at lake scale where exact nunique is a full shuffle.
-    */
-  def ncpApprox(original: DataFrame, anonymized: DataFrame, cols: Seq[String]): Double =
-    ncpImpl(original, anonymized, cols, exact = false)
-
-  private def ncpImpl(original: DataFrame, anonymized: DataFrame, cols: Seq[String], exact: Boolean): Double = {
-    def distincts(df: DataFrame): Map[String, Long] = {
-      val aggs = cols.map { c =>
-        if (exact) countDistinct(col(c)).as(c) else approx_count_distinct(col(c)).as(c)
-      }
-      val r = df.agg(aggs.head, aggs.tail: _*).head()
-      cols.map(c => c -> r.getAs[Long](c)).toMap
+    val perCol = ncpCols.indices.map { i =>
+      val ov = o.getLong(1 + i)
+      if (ov > 0) (ov - a.getLong(5 + i)).toDouble / ov else 0.0
     }
-    val o = distincts(original)
-    val a = distincts(anonymized)
-    val perCol = cols.map { c =>
-      val ov = o(c)
-      if (ov > 0) (ov - a(c)).toDouble / ov else 0.0
-    }
-    if (perCol.isEmpty) 0.0 else perCol.sum / perCol.size
+    (report, if (perCol.isEmpty) 0.0 else perCol.sum / perCol.size)
   }
 }

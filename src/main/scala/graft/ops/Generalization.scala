@@ -91,12 +91,15 @@ object Generalization {
     * "min-max" range string of its group (clustering-anon.py:51). One
     * aggregate per group (single shuffle) then a broadcast join back — the
     * group table is |groups| rows, tiny relative to the input.
+    *
+    * The table also carries each group's row count `grp_cnt`, so it is the
+    * release's class table for [[graft.metrics.PrivacyMetrics.evaluate]].
     */
   def minMaxRanges(df: DataFrame, groupCol: String, cols: Seq[String]): DataFrame = {
     val aggs = cols.flatMap(c => Seq(min(col(c)).as(s"__min_$c"), max(col(c)).as(s"__max_$c")))
     df.groupBy(col(groupCol))
-      .agg(aggs.head, aggs.tail: _*)
-      .select(col(groupCol) +: cols.map(c =>
+      .agg(count(lit(1)).as("grp_cnt"), aggs: _*)
+      .select(col(groupCol) +: col("grp_cnt") +: cols.map(c =>
         concat_ws("-", col(s"__min_$c").cast("string"), col(s"__max_$c").cast("string")).as(c)): _*)
   }
 

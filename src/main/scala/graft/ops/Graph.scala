@@ -785,6 +785,10 @@ object Graph {
       val q = spark.newSession()
       q.conf.set("spark.sql.adaptive.enabled", "false")
       q.conf.set("spark.sql.shuffle.partitions", SmallParts.toString)
+      // a new session sees only the static conf: carry over the runtime
+      // truncation settings, so its rounds truncate as the caller asked
+      Seq("spark.graft.truncate", "spark.graft.checkpointDir").foreach(key =>
+        spark.conf.getOption(key).foreach(q.conf.set(key, _)))
       q
     }
     def roundPlan(living: Long)(plan: DataFrame): DataFrame =

@@ -31,14 +31,6 @@ object TextAnalysis {
   /** Whitespace token count (the fast pre-filter before real BPE). */
   def tokenCount(text: Column): Column = size(tokens(text))
 
-  /** BPE-ish subword proxy: count of alternating letter/digit/punct runs,
-    * the regex analogue of a byte-pair pre-tokenizer's word splitter.
-    * Cheap and SQL-oracle-expressible; for REAL byte-pair-encoding counts
-    * (ranked merges table, compiled kernel) use
-    * [[graft.functions.GraftFunctions.bpeCountNative]] (q89 packs on it). */
-  def subwordCount(text: Column): Column =
-    size(filter(split(lower(trim(text)), "[^a-z0-9]+"), t => length(t) > 0))
-
   /** Sliding-window character chunking — the retrieval/context-window
     * fan-out of a RAG or long-context pipeline. Chunk i of a document
     * covers characters [i·stride, i·stride + size), i ∈ [0,

@@ -3,8 +3,7 @@ package graft.streaming
 import graft.ops.DifferentialPrivacy
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured-Streaming twins of the batch event-time operators. The
   * reference is batch-only (SURVEY §1/§2.10 — no stream surface), so this
@@ -148,9 +147,4 @@ object EventStream {
         col(tsCol) >= col(startCol) && col(tsCol) <= col(endCol) &&
         col(tsCol) <= col(startCol) + expr(s"INTERVAL $maxIntervalSeconds SECONDS"))
   }
-
-  /** Convenience writer: append stream to an in-memory table for tests /
-    * interactive inspection. */
-  def toMemorySink(df: DataFrame, queryName: String): DataStreamWriter[Row] =
-    df.writeStream.format("memory").queryName(queryName).outputMode("append")
 }

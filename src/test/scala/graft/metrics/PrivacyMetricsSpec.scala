@@ -12,9 +12,14 @@ class PrivacyMetricsSpec extends SparkSpec {
     (50, "C")
   ).toDF("age", "zip")
 
+  private def evaluate(k: Int): (PrivacyReport, Double) = {
+    val qis = Seq("age", "zip")
+    PrivacyMetrics.evaluate(orig,
+      KAnonymity.groupSizes(KAnonymity.suppress(orig, qis, k), qis), qis, k)
+  }
+
   test("report on k=2 suppression") {
-    val anon = KAnonymity.suppress(orig, Seq("age", "zip"), 2)
-    val r = PrivacyMetrics.report(orig, anon, Seq("age", "zip"), 2)
+    val (r, _) = evaluate(2)
     assert(r.originalRows == 6 && r.anonymizedRows == 5)
     assert(r.nGroups == 2 && r.kMin == 2 && r.kMax == 3)
     assert(r.kSatisfied)
@@ -24,15 +29,13 @@ class PrivacyMetricsSpec extends SparkSpec {
   }
 
   test("report handles empty anonymized set") {
-    val anon = KAnonymity.suppress(orig, Seq("age", "zip"), 100)
-    val r = PrivacyMetrics.report(orig, anon, Seq("age", "zip"), 100)
+    val (r, _) = evaluate(100)
     assert(r.anonymizedRows == 0 && r.suppressionRate == 1.0 && r.kSatisfied)
   }
 
   test("ncp measures distinct-value loss over QI columns") {
-    val anon = KAnonymity.suppress(orig, Seq("age", "zip"), 2)
-    // age: 3 -> 2 distinct, zip: 3 -> 2 distinct => mean((1/3 + 1/3)) /?? per-col avg
-    val v = PrivacyMetrics.ncp(orig, anon, Seq("age", "zip"))
+    // age: 3 -> 2 distinct, zip: 3 -> 2 distinct => mean of 1/3 and 1/3
+    val (_, v) = evaluate(2)
     assert(math.abs(v - (1.0 / 3 + 1.0 / 3) / 2) < 1e-12)
   }
 }

@@ -2,6 +2,9 @@ package graft.ml
 
 import graft.SparkSpec
 import graft.metrics.PrivacyMetrics
+import graft.ops.Generalization
+import org.apache.spark.ml.feature.StringIndexer
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import scala.util.Random
 
@@ -68,11 +71,26 @@ class ClusteringMlSpec extends SparkSpec {
   test("clustering drives privacy metrics like the reference E2") {
     val res = ClusteringAnonymizer.anonymize(data, Seq("amount"), Seq("color"),
       nClusters = 2, seed = 42L)
-    val report = PrivacyMetrics.report(data, res.clustered, Seq("cluster"), k = 5)
+    val (report, ncp) = PrivacyMetrics.evaluate(data,
+      Generalization.minMaxRanges(res.clustered, "cluster", Seq("amount")), Seq("amount"), k = 5)
     assert(report.kSatisfied) // 60 rows over 2 clusters
     assert(report.reidentificationRisk <= 1.0 / 5)
-    val ncp = PrivacyMetrics.ncp(data, res.generalized, Seq("amount"))
     assert(ncp > 0.0 && ncp <= 1.0) // ranges collapse the value domain
+  }
+
+  test("one-aggregation dictionaries equal StringIndexer alphabetAsc labels") {
+    // NULLs, an integer categorical ("10" < "2" as strings), mixed case,
+    // non-ASCII, and a double column with NaN
+    val odd = Seq[(Option[String], Option[Int], Option[Double])](
+      (Some("b"), Some(10), Some(1.5)), (Some("B"), Some(2), Some(Double.NaN)),
+      (None, None, None), (Some("été"), Some(10), Some(-0.5)),
+      (Some("Zoë"), Some(-3), Some(1.5)), (Some("a"), None, Some(Double.NaN)),
+      (Some(""), Some(2), Some(1e10)), (Some("ä"), Some(0), None))
+      .toDF("s", "i", "d")
+    val cols = Seq("s", "i", "d")
+    val built = ClusteringAnonymizer.alphabetLabels(odd, cols).map(_.toSeq).toSeq
+    assert(built == ClusteringMlSpec.fittedLabels(odd, cols))
+    assert(built(1) == Seq("-3", "0", "10", "2"))
   }
 
   test("rfAccuracy separates a linearly separable label and is deterministic") {
@@ -114,4 +132,13 @@ class ClusteringMlSpec extends SparkSpec {
     assert(orig.accuracy >= anon.accuracy - 0.2) // anonymization shouldn't ADD signal
     assert(drop.abs <= 1.0)
   }
+}
+
+object ClusteringMlSpec {
+  /** The reference for [[ClusteringAnonymizer.alphabetLabels]]: the labels
+    * of a `StringIndexer` alphabetAsc/keep fit per column. */
+  def fittedLabels(df: DataFrame, cols: Seq[String]): Seq[Seq[String]] =
+    cols.map(c => new StringIndexer().setInputCol(c).setOutputCol(s"${c}_idx")
+      .setStringOrderType("alphabetAsc").setHandleInvalid("keep")
+      .fit(df).labelsArray.head.toSeq)
 }

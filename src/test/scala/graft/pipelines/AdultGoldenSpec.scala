@@ -1,7 +1,7 @@
 package graft.pipelines
 
 import graft.SparkSpec
-import graft.ml.UtilityMetrics
+import graft.ml.{ClusteringAnonymizer, ClusteringMlSpec, UtilityMetrics}
 import graft.ops.TCloseness
 import graft.schema.AdultSchema
 import graft.sources.CsvSource
@@ -27,7 +27,7 @@ import graft.sources.CsvSource
   * | RF accuracy drop (E3) | "negligible" | 0.005     | band-asserted |
   *
   * SPARK-VERSION COUPLING: the exact-value assertions (1e-9 on Spark
-  * aggregations) and the E2 bands over spark.ml KMeans internals are
+  * aggregations) and the E2 pins over spark.ml KMeans internals are
   * deterministic on Spark 4.1.2 but are implementation-coupled — a Spark
   * upgrade that changes aggregation accumulation order or KMeans
   * init/iteration details may shift them. On upgrade: re-run, eyeball the
@@ -115,10 +115,17 @@ class AdultGoldenSpec extends SparkSpec {
     assert(report.suppressionRate == 0.0)
     // mean(1/clusterSize) = nClusters/rows when all clusters non-empty
     assert(approx(report.reidentificationRisk, 10.0 / 29111.0)) // ref: 0.0003
-    // KMeans-assignment-dependent shape: banded, not pinned (seed is
-    // fixed but assignments are an implementation detail of spark.ml)
-    assert(report.kMin >= 100L && report.kMax <= 15000L)
-    assert(ncp > 0.5 && ncp < 0.95) // ref: 0.5671 (impl-dependent, see table)
+    // KMeans-assignment-dependent shape, pinned for this fixed local[4]
+    // session: the seed is fixed, and the dictionaries, features and
+    // fit are deterministic on it (see SPARK-VERSION COUPLING above)
+    assert(report.kMin == 542L && report.kMax == 6781L)
+    assert(ncp == 0.8074074074074074) // ref: 0.5671 (impl-dependent, see table)
+  }
+
+  test("golden E2 dictionaries: one aggregation gives StringIndexer's labels") {
+    val cats = qis.filterNot(Seq("age", "capital_gain", "capital_loss").contains)
+    assert(ClusteringAnonymizer.alphabetLabels(adult, cats).map(_.toSeq).toSeq ==
+      ClusteringMlSpec.fittedLabels(adult, cats))
   }
 
   test("golden utility: RF accuracy drop through E3 is negligible") {

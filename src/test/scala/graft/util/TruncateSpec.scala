@@ -76,6 +76,25 @@ class TruncateSpec extends SparkSpec {
     }
   }
 
+  test("kCore's small-state rounds follow a runtime 'reliable' strategy") {
+    // tinyGraph is far below kCore's small-state gate, so every peel round
+    // runs on its quiet child session, which must see the parent's
+    // runtime truncation conf
+    val dir = java.nio.file.Files.createTempDirectory("graft-truncate-kcore")
+    spark.conf.set("spark.graft.truncate", "reliable")
+    spark.conf.set("spark.graft.checkpointDir", dir.toString)
+    try {
+      val core = Graph.kCore(tinyGraph, "src", "dst", k = 2)
+      assert(leafRdd(core).getCheckpointFile.isDefined,
+        "the last peel round truncated without the reliable strategy")
+      assert(rows(core).size == 6)
+    } finally {
+      graft.QueryCleanup.drain()
+      spark.conf.unset("spark.graft.truncate")
+      spark.conf.unset("spark.graft.checkpointDir")
+    }
+  }
+
   test("an unknown strategy fails loudly instead of picking one") {
     spark.conf.set("spark.graft.truncate", "local")
     try intercept[IllegalArgumentException](Truncate(spark.range(3).toDF("id")))
