@@ -23,18 +23,20 @@ object Bench {
     } catch { case scala.util.control.NonFatal(_) => Map.empty }
   }
 
-  /** Queries whose in-bench median regressed vs the prior round by more
-    * than `factor` — the channel the rep-spread requeue structurally
+  /** Queries whose in-bench median moved vs the prior round by more than
+    * `factor` either way — the channel the rep-spread requeue structurally
     * cannot see (uniformly slow reps look calm; r15 shipped q296
-    * 0.49->3.54 s and q297 0.91->6.04 s unflagged that way). The
-    * absolute floor keeps sub-noise queries (0.1->0.3 s) from burning
+    * 0.49->3.54 s and q297 0.91->6.04 s unflagged that way). A speed-up
+    * that large is as suspect as a slow-down (a skipped step, a cached
+    * input), so both get the re-measure. The absolute floor, on the larger
+    * of the two medians, keeps sub-noise queries (0.1->0.3 s) from burning
     * 9-rep re-measures. Deterministic order (name asc). */
   def driftCandidates(current: Map[String, Double], prior: Map[String, Double],
                       factor: Double = 2.5,
                       floorSec: Double = 0.5): Seq[String] =
     current.toSeq.sortBy(_._1).collect {
-      case (name, med) if med >= floorSec && prior.get(name).exists(p =>
-        p > 0 && med > factor * p) => name
+      case (name, med) if prior.get(name).exists(p => p > 0 &&
+        math.max(med, p) >= floorSec && (med > factor * p || med < p / factor)) => name
     }
 
   /** For drift-flagged queries, the PUBLISHED median is the post-sweep

@@ -10,28 +10,24 @@ import org.apache.spark.sql.functions.udaf
   * Reference: scipy.stats.wasserstein_distance over integer positions
   * (t-closeness.py:81,200). For sorted positions p_0 < ... < p_m with
   * cumulative masses P, Q, the closed form is
-  *   EMD = sum_i |cumP_i - cumQ_i| * (p_{i+1} - p_i).
+  *   EMD = sum_i |cumP_i - cumQ_i| * (p_{i+1} - p_i),
+  * computed by [[EmdAggregator.closedForm]], the engine's one EMD loop.
   *
-  * This typed Aggregator holds a position->count map per group (bounded by
-  * the sensitive-attribute domain, which is small by construction — 2 values
-  * in the reference) and computes the closed form against the broadcast
-  * global distribution in `finish`. One shuffle for all groups, map-side
-  * partial aggregation included — this replaces the reference's driver-side
-  * per-group Python loop (t-closeness.py:110-121), its biggest scalability
-  * sin (SURVEY §3).
+  * This typed Aggregator holds a position->count map per group and
+  * computes the closed form against the broadcast global distribution in
+  * `finish`. One shuffle for all groups, map-side partial aggregation
+  * included — this replaces the reference's driver-side per-group Python
+  * loop (t-closeness.py:110-121), its biggest scalability sin (SURVEY §3).
   *
   * `global` maps position -> probability and must cover every position in
   * the data (it is the dataset-wide distribution, so it does).
   *
   * State bound: the per-group map and the broadcast global dictionary are
   * both capped at [[EmdAggregator.MaxDomain]] positions (enforced at
-  * construction). The map-per-group formulation is only the right
-  * topology for SMALL ordinal domains; a high-cardinality numeric
-  * sensitive column would grow a map per group plus a driver-side
-  * collect, an OOM at lake scale. Callers with wider domains must use
-  * the windowed closed form ([[graft.ops.TCloseness.groupEmd]]), whose
-  * state never leaves executors — [[graft.ops.TCloseness.groupEmdAgg]]
-  * probes the domain size and routes there automatically.
+  * construction), so the map-per-group formulation only serves SMALL
+  * ordinal domains; [[graft.ops.TCloseness.groupEmdAgg]] probes the domain
+  * and routes a wider one to the sparse class table
+  * ([[graft.ops.TCloseness.groupEmd]]).
   */
 class EmdAggregator(global: Map[Double, Double])
     extends Aggregator[Double, Map[Double, Long], Double] {
@@ -39,9 +35,10 @@ class EmdAggregator(global: Map[Double, Double])
   require(global.size <= EmdAggregator.MaxDomain,
     s"EmdAggregator: global domain of ${global.size} positions exceeds the " +
       s"${EmdAggregator.MaxDomain}-position state bound — use " +
-      "TCloseness.groupEmd (windowed closed form, executor-resident state)")
+      "TCloseness.groupEmd (the sparse class table)")
 
   private val positions: Array[Double] = global.keys.toArray.sorted
+  private val q: Array[Double] = positions.map(global)
 
   override def zero: Map[Double, Long] = Map.empty
 
@@ -53,18 +50,8 @@ class EmdAggregator(global: Map[Double, Double])
 
   override def finish(counts: Map[Double, Long]): Double = {
     val total = counts.values.sum.toDouble
-    if (total == 0 || positions.length < 2) return 0.0
-    var cumP = 0.0 // group
-    var cumQ = 0.0 // global
-    var emd = 0.0
-    var i = 0
-    while (i < positions.length - 1) {
-      cumP += counts.getOrElse(positions(i), 0L) / total
-      cumQ += global(positions(i))
-      emd += math.abs(cumP - cumQ) * (positions(i + 1) - positions(i))
-      i += 1
-    }
-    emd
+    if (total == 0) 0.0
+    else EmdAggregator.closedForm(positions, q, positions.map(counts.getOrElse(_, 0L)), total)
   }
 
   override def bufferEncoder: Encoder[Map[Double, Long]] =
@@ -81,6 +68,26 @@ object EmdAggregator {
     * count, while real ordinal sensitive domains (the reference's is 2)
     * sit far below it. */
   val MaxDomain = 1024
+
+  /** The closed form over ascending `positions`, where a group of `n` rows
+    * holds `counts(i)` at `positions(i)` and the reference distribution
+    * `q(i)`. It sums in position order — cumP += c/n, cumQ += q,
+    * emd += |cumP − cumQ|·(p_{i+1} − p_i) — so every caller gets the same
+    * double for the same group; a one-position domain gives 0. */
+  def closedForm(positions: Array[Double], q: Array[Double], counts: Array[Long],
+                 n: Double): Double = {
+    var cumP = 0.0 // group
+    var cumQ = 0.0 // global
+    var emd = 0.0
+    var i = 0
+    while (i < positions.length - 1) {
+      cumP += counts(i) / n
+      cumQ += q(i)
+      emd += math.abs(cumP - cumQ) * (positions(i + 1) - positions(i))
+      i += 1
+    }
+    emd
+  }
 
   /** Column form: `df.groupBy(qis).agg(EmdAggregator.emd(globalDist)(col))`. */
   def emd(global: Map[Double, Double]): Column => Column = {

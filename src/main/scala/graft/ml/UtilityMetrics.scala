@@ -3,7 +3,7 @@ package graft.ml
 import org.apache.spark.ml.Pipeline
 import org.apache.spark.ml.classification.RandomForestClassifier
 import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
-import org.apache.spark.ml.feature.{StringIndexer, VectorAssembler}
+import org.apache.spark.ml.feature.{StringIndexerModel, VectorAssembler}
 import org.apache.spark.sql.DataFrame
 
 /** The reference's utility-evaluation block (M1-M6): train a RandomForest
@@ -12,7 +12,11 @@ import org.apache.spark.sql.DataFrame
   * t-closeness.py:146-176, clustering-anon.py:95-113).
   *
   * Feature prep: every non-label column is used; string columns are
-  * label-encoded in alphabetAsc order (sklearn LabelEncoder parity, M1).
+  * label-encoded in alphabetAsc order (sklearn LabelEncoder parity, M1) by
+  * one prebuilt `StringIndexerModel` whose labels come from one aggregation
+  * over the train split ([[ClusteringAnonymizer.alphabetLabels]], the
+  * labels a `StringIndexer` fit per column would find, at 2 jobs instead
+  * of 2 per column).
   * Split is randomSplit(0.7/0.3, seed) (M4). Accuracy numbers are NOT
   * bit-comparable with sklearn (different RNG/tree impl); callers assert
   * tolerance bands (SURVEY §5 item 4).
@@ -28,12 +32,7 @@ object UtilityMetrics {
     val stringCols = df.schema.fields
       .filter(f => featureCols.contains(f.name) && f.dataType.typeName == "string")
       .map(_.name).toSeq
-    val indexers = (stringCols :+ labelCol).map { c =>
-      new StringIndexer()
-        .setInputCol(c).setOutputCol(s"__idx_$c")
-        .setStringOrderType("alphabetAsc")
-        .setHandleInvalid("keep")
-    }
+    val indexed = stringCols :+ labelCol
     val features = featureCols.map(c => if (stringCols.contains(c)) s"__idx_$c" else c)
     val assembler = new VectorAssembler()
       .setInputCols(features.toArray).setOutputCol("__features")
@@ -41,17 +40,19 @@ object UtilityMetrics {
     val rf = new RandomForestClassifier()
       .setLabelCol(s"__idx_$labelCol").setFeaturesCol("__features")
       .setNumTrees(numTrees).setSeed(seed)
-    val pipeline = new Pipeline().setStages((indexers :+ assembler :+ rf).toArray)
 
     val Array(train, test) = df.randomSplit(Array(0.7, 0.3), seed) // M4
-    // The pipeline re-reads its input once per stage fit (each indexer,
-    // the RF's internal RDD build) plus transform/evaluate/counts —
-    // 6+ scans of an uncached randomSplit each re-running the upstream
-    // plan. Persist both splits for the fit's lifetime.
+    // The fit re-reads its input several times (the label aggregation, the
+    // RF's internal RDD build) plus transform/evaluate/counts — each scan
+    // of an uncached randomSplit re-runs the upstream plan. Persist both
+    // splits for the fit's lifetime.
     train.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     test.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val model = pipeline.fit(train)
+      val indexer = new StringIndexerModel(ClusteringAnonymizer.alphabetLabels(train, indexed))
+        .setInputCols(indexed.toArray).setOutputCols(indexed.map(c => s"__idx_$c").toArray)
+        .setHandleInvalid("keep")
+      val model = new Pipeline().setStages(Array(indexer, assembler, rf)).fit(train)
       val predictions = model.transform(test)
       val accuracy = new MulticlassClassificationEvaluator()
         .setLabelCol(s"__idx_$labelCol").setPredictionCol("prediction")
@@ -67,20 +68,17 @@ object UtilityMetrics {
   /** The reference's headline comparison: accuracy on original vs
     * anonymized data (same label/features/config). The two fits are
     * independent (separate inputs, separate models) and individually far
-    * from saturating a cluster's task slots, so they run CONCURRENTLY —
-    * Spark's scheduler interleaves their jobs; on local[32] this
-    * reclaims the serial fit's idle cores. Results are deterministic
-    * either way (each fit is seeded and self-contained). */
+    * from saturating a cluster's task slots, so they run CONCURRENTLY
+    * through [[graft.util.Concurrent.both]] — Spark's scheduler interleaves
+    * their jobs, both fits stay in the caller's cleanup scope, and both
+    * settle before a failure is rethrown. Results are deterministic either
+    * way (each fit is seeded and self-contained). */
   def accuracyDrop(original: DataFrame, anonymized: DataFrame, labelCol: String,
                    featureCols: Seq[String], numTrees: Int = 100,
                    seed: Long = 42L): (UtilityReport, UtilityReport, Double) = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val of = Future(rfAccuracy(original, labelCol, featureCols, numTrees, seed))
-    val af = Future(rfAccuracy(anonymized, labelCol, featureCols, numTrees, seed))
-    val o = Await.result(of, Duration.Inf)
-    val a = Await.result(af, Duration.Inf)
+    val (o, a) = graft.util.Concurrent.both(
+      rfAccuracy(original, labelCol, featureCols, numTrees, seed),
+      rfAccuracy(anonymized, labelCol, featureCols, numTrees, seed))
     (o, a, o.accuracy - a.accuracy)
   }
 }

@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   *
   * `emdBasis` (E3 only): the sensitive distribution the t-closeness filter
   * measured classes against — the per-position counts of the k-anonymized
-  * binned input, as the filter computed them (held on the driver on the
-  * class-table route). The violation recheck must reuse it: suppression
+  * binned input, held on the driver as the filter collected them. The
+  * violation recheck must reuse it: suppression
   * shifts the surviving table's own distribution, so rechecking against
   * the OUTPUT's distribution can flag boundary classes the filter
   * correctly admitted. */

@@ -98,8 +98,9 @@ object AnonymityQueries {
     }),
 
     // Intended t-closeness semantics: per-group 1-D EMD of the sensitive
-    // bucket distribution vs. the global one (closed-form cumsum — the
-    // reference's per-group Python loop collapsed into one plan).
+    // bucket distribution vs. the global one (the closed form over each
+    // class's sparse (bucket, count) entries — the reference's per-group
+    // Python loop collapsed into one plan).
     "q25_tcloseness_emd" -> ((s, dir) => {
       val o = withSbin(Tables.orders(s, dir))
       TCloseness.groupEmd(o, Seq("o_orderstatus", "o_orderpriority"), "sbin")
@@ -152,8 +153,8 @@ object AnonymityQueries {
     }),
 
     // q25 recomputed through the typed EmdAggregator (custom-UDAF path):
-    // one shuffle, map-side partial count-maps, closed-form EMD in
-    // finish(). Must hash-match the same SQL oracle as q25.
+    // one shuffle, map-side partial count-maps, and finish() runs the same
+    // closed-form loop as q25's class table. Must hash-match q25's oracle.
     "q55_tcloseness_emd_agg" -> ((s, dir) => {
       val o = withSbin(Tables.orders(s, dir))
       TCloseness.groupEmdAgg(o, Seq("o_orderstatus", "o_orderpriority"), "sbin")

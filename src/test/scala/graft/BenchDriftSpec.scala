@@ -25,10 +25,21 @@ class BenchDriftSpec extends AnyFunSuite {
     assert(Bench.driftCandidates(Map("qx" -> 0.5), Map("qx" -> 0.1)) == Seq("qx"))
   }
 
-  test("driftCandidates: new queries (no prior) and improvements never fire") {
+  test("driftCandidates: new queries (no prior) and sub-factor improvements never fire") {
     val prior = Map("qa" -> 2.0)
     assert(Bench.driftCandidates(
       Map("qa" -> 1.0, "qnew" -> 50.0), prior).isEmpty)
+  }
+
+  test("driftCandidates fires on a uniform speed-up past factor too") {
+    // q296's slow-down read backwards: 3.54 -> 0.49 s is 7x faster
+    assert(Bench.driftCandidates(Map("q296_auc" -> 0.49), Map("q296_auc" -> 3.54)) ==
+      Seq("q296_auc"))
+    // strictly below prior / factor, as the slow-down side is strictly above
+    assert(Bench.driftCandidates(Map("qa" -> 0.4), Map("qa" -> 1.0)).isEmpty)
+    assert(Bench.driftCandidates(Map("qa" -> 0.39), Map("qa" -> 1.0)) == Seq("qa"))
+    // the floor reads the larger median: 0.4 -> 0.1 s stays sub-noise
+    assert(Bench.driftCandidates(Map("qx" -> 0.1), Map("qx" -> 0.4)).isEmpty)
   }
 
   test("driftCandidates: boundary is strictly greater than factor x prior") {

@@ -25,7 +25,7 @@ class EmdAggregatorSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getAs[Double]("emd")).toMap
 
     assert(expected.keySet == got.keySet)
-    expected.foreach { case (k, v) => assert(math.abs(v - got(k)) < 1e-9, s"group $k") }
+    assert(expected == got)
     df.unpersist()
   }
 }

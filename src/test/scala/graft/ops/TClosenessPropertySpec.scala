@@ -5,12 +5,15 @@ import org.apache.spark.sql.DataFrame
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.rng.Seed
 
-/** Properties of the class-table t-closeness filter on generated small
-  * tables: NULL QIs, single-row classes, duplicate rows and 2–6 sensitive
-  * positions. The filter must release exactly the rows the windowed
-  * formulation releases, every released class must be k-anonymous and
-  * within t of the filter's basis, and the recheck against that basis
-  * must find nothing. ScalaCheck runs directly (`Prop.forAll` +
+/** Properties of the t-closeness entry points on generated tables: NULL
+  * QIs, single-row classes, duplicate rows, NULL positions, and sensitive
+  * domains of 2–6, 60–70 and over 1,000 positions. The reference is a
+  * plain-Scala model — the classes, the basis their positions form, and
+  * EmdAggregator.finish's loop — and the engine must match it exactly:
+  * the same released ids from [[TCloseness.filter]] and the same double
+  * per class from [[TCloseness.groupEmd]]. Released classes must be
+  * k-anonymous and within t of the filter's basis, and the recheck against
+  * that basis must find nothing. ScalaCheck runs directly (`Prop.forAll` +
   * `Test.check`) with a fixed seed, so every run checks the same tables. */
 class TClosenessPropertySpec extends SparkSpec {
   import TClosenessPropertySpec._
@@ -19,25 +22,39 @@ class TClosenessPropertySpec extends SparkSpec {
   private val qis = Seq("a", "b")
   private def frame(c: Case): DataFrame = c.rows.toDF("id", "a", "b", "pos")
 
-  private def table(positions: Gen[Long], minRows: Int, maxRows: Int): Gen[Seq[Row4]] =
+  /** Rows over `domain`: every position once, then `extra` random ones;
+    * with `nulls`, about one row in ten has a NULL position. */
+  private def table(domain: Seq[Long], extra: Int, nulls: Boolean): Gen[Seq[Row4]] = {
+    val pos = if (nulls) Gen.frequency(9 -> Gen.oneOf(domain).map(Some(_)), 1 -> Gen.const(None))
+      else Gen.oneOf(domain).map(Some(_))
+    val key = for {
+      a <- Gen.frequency(4 -> Gen.oneOf("x", "y").map(Some(_)), 1 -> Gen.const(None))
+      b <- Gen.frequency(4 -> Gen.choose(0, 2).map(Some(_)), 1 -> Gen.const(None))
+    } yield (a, b)
     for {
-      n <- Gen.choose(minRows, maxRows)
-      rows <- Gen.listOfN(n, for {
-        a <- Gen.frequency(4 -> Gen.oneOf("x", "y").map(Some(_)), 1 -> Gen.const(None))
-        b <- Gen.frequency(4 -> Gen.choose(0, 2).map(Some(_)), 1 -> Gen.const(None))
-        p <- positions
-      } yield (a, b, p))
-    } yield rows.zipWithIndex.map { case ((a, b, p), i) => (i.toLong, a, b, p) }
+      rest <- Gen.listOfN(extra, pos)
+      positions = domain.map(Some(_)) ++ rest
+      keys <- Gen.listOfN(positions.size, key)
+    } yield keys.zip(positions).zipWithIndex.map { case (((a, b), p), i) => (i.toLong, a, b, p) }
+  }
 
-  // 2–6 positions drawn from a sparse range, so gaps between positions
-  // (the EMD's ground distances) vary
-  private val narrow: Gen[Case] = for {
-    m <- Gen.choose(2, 6)
-    domain <- Gen.pick(m, 0L to 12L)
-    rows <- table(Gen.oneOf(domain.toSeq), 1, 40)
+  /** `width` positions drawn from a sparse range, so the gaps between them
+    * (the EMD's ground distances) vary; t is `tPerPosition` times the
+    * width, which scales it with the EMDs the domain yields. */
+  private def cases(width: Gen[Int], extra: Gen[Int], nulls: Gen[Boolean],
+                    tPerPosition: Gen[Double]): Gen[Case] = for {
+    m <- width
+    domain <- Gen.pick(m, 0L to 2L * m)
+    e <- extra
+    n <- nulls
+    rows <- table(domain.toSeq.sorted, e, n)
     k <- Gen.choose(1, 4)
-    t <- Gen.oneOf(0.0, 0.05, 0.1, 0.25, 0.5, 1.0)
-  } yield Case(rows, k, t)
+    f <- tPerPosition
+  } yield Case(rows, k, f * m)
+
+  private val tScale = Gen.oneOf(0.0, 0.05, 0.1, 0.2, 0.4, 1.0)
+  private val narrow = cases(Gen.choose(2, 6), Gen.choose(0, 40), Gen.oneOf(false, false, true), tScale)
+  private val mid = cases(Gen.choose(60, 70), Gen.choose(0, 60), Gen.oneOf(false, false, true), tScale)
 
   private def ids(df: DataFrame): Seq[Long] = df.select("id").as[Long].collect().sorted.toSeq
 
@@ -63,59 +80,79 @@ class TClosenessPropertySpec extends SparkSpec {
     out
   }
 
-  test("class-table filter releases the windowed filter's rows") {
-    check("equivalence", Prop.forAll(narrow) { c =>
-      val df = frame(c)
-      ids(TCloseness.filter(df, qis, "pos", c.k, c.t)) ==
-        ids(TCloseness.windowedFilter(df, qis, "pos", c.k, c.t)._1)
-    }, cases = 20)
+  private def classes(rows: Seq[Row4]): Map[Key, Seq[Row4]] = rows.groupBy(r => (r._2, r._3))
+
+  /** The positions of `rows` with their counts, in position order; None
+    * when one is NULL (the basis then measures nothing). */
+  private def basisOf(rows: Iterable[Row4]): Option[IndexedSeq[(Long, Long)]] =
+    Option.when(rows.forall(_._4.isDefined))(rows.groupBy(_._4.get)
+      .map { case (p, rs) => p -> rs.size.toLong }.toIndexedSeq.sortBy(_._1))
+
+  /** Each class's EMD against `basis`: None for a NULL basis or a class
+    * holding a NULL position. */
+  private def modelEmd(rows: Seq[Row4], basis: Option[IndexedSeq[(Long, Long)]]): Map[Key, Option[Double]] =
+    classes(rows).map { case (key, rs) =>
+      key -> basis.filter(_ => rs.forall(_._4.isDefined))
+        .map(emd(rs.groupBy(_._4.get).map { case (p, v) => p -> v.size.toLong }, _))
+    }
+
+  /** The model filter: classes of at least k rows whose EMD against those
+    * classes' basis is at most t. */
+  private def modelFilter(c: Case): Seq[Long] = {
+    val kept = classes(c.rows).filter(_._2.size >= c.k)
+    val emds = modelEmd(kept.values.flatten.toSeq, basisOf(kept.values.flatten))
+    kept.filter { case (key, _) => emds(key).exists(_ <= c.t) }.values.flatten.map(_._1).toSeq.sorted
+  }
+
+  private def engineEmd(df: DataFrame): Map[Key, Option[Double]] =
+    TCloseness.groupEmd(df, qis, "pos").select("a", "b", "emd")
+      .as[(Option[String], Option[Int], Option[Double])].collect()
+      .map { case (a, b, e) => (a, b) -> e }.toMap
+
+  private def matchesModel(c: Case): Boolean = {
+    val df = frame(c)
+    ids(TCloseness.filter(df, qis, "pos", c.k, c.t)) == modelFilter(c) &&
+      engineEmd(df) == modelEmd(c.rows, basisOf(c.rows))
+  }
+
+  test("2-6 positions: filter and groupEmd match the plain-Scala model") {
+    check("narrow", Prop.forAll(narrow)(matchesModel), cases = 20)
+  }
+
+  test("60-70 positions: filter and groupEmd match the plain-Scala model") {
+    check("mid", Prop.forAll(mid)(matchesModel), cases = 8)
+  }
+
+  test("over 1,000 positions: filter and groupEmd match the plain-Scala model") {
+    val wide = cases(Gen.const(1200), Gen.const(800), Gen.const(false), Gen.oneOf(0.03, 0.05))
+      .map(_.copy(k = 2))
+    check("wide", Prop.forAll(wide)(matchesModel), cases = 2)
   }
 
   test("released classes are k-anonymous, within t of the basis, and recheck clean") {
     check("privacy", Prop.forAll(narrow) { c =>
       val df = frame(c)
       val (out, basis) = TCloseness.filterWithBasis(df, qis, "pos", c.k, c.t)
-      val held = basis match {
-        case TCloseness.EmdBasis.Held(b) => b.map { case (p, n) => (p.asInstanceOf[Long], n) }
-        case other => fail(s"a ${c.rows.map(_._4).distinct.size}-position domain took $other")
-      }
+      val kept = classes(c.rows).filter(_._2.size >= c.k).values.flatten
       // the basis is the k-anonymized input's distribution
-      val classes = c.rows.groupBy(r => (r._2, r._3))
-      val expectedBasis = classes.values.filter(_.size >= c.k).flatten
-        .groupBy(_._4).map { case (p, rs) => p -> rs.size.toLong }.toIndexedSeq.sortBy(_._1)
-      val released = out.select("a", "b", "pos").as[(Option[String], Option[Int], Long)]
+      val expected = kept.groupBy(_._4).map { case (p, rs) => p -> rs.size.toLong }
+      val held = basis.counts.map { case (p, n) => Option(p.toLong) -> n } ++
+        Option.when(basis.nulls > 0)(Option.empty[Long] -> basis.nulls)
+      val released = out.select("a", "b", "pos").as[(Option[String], Option[Int], Option[Long])]
         .collect().groupBy(r => (r._1, r._2))
       val classesOk = released.forall { case (key, rs) =>
-        rs.length == classes(key).size && rs.length >= c.k &&
-          emd(rs.groupBy(_._3).map { case (p, v) => p -> v.length.toLong }, held) <= c.t
+        rs.length == classes(c.rows)(key).size && rs.length >= c.k &&
+          emd(rs.groupBy(_._3.get).map { case (p, v) => p -> v.length.toLong },
+            basis.counts.map { case (p, n) => p.toLong -> n }) <= c.t
       }
-      held == expectedBasis && classesOk &&
-        TCloseness.violationCount(out, qis, "pos", c.t, Some(basis)) == 0L
+      held.toMap == expected && basis.counts.map(_._1) == basis.counts.map(_._1).sorted &&
+        classesOk && TCloseness.violationCount(out, qis, "pos", c.t, Some(basis)) == 0L
     }, cases = 15)
-  }
-
-  test("a MaxClassDomain-position domain stays on the class table, a wider one goes windowed, same rows") {
-    val wide: Gen[Case] = for {
-      d <- Gen.choose(TCloseness.MaxClassDomain + 1, TCloseness.MaxClassDomain + 6)
-      rows <- table(Gen.const(0L), d + 1, d + 60)
-      k <- Gen.choose(1, 3)
-      t <- Gen.oneOf(0.5, 5.0, 20.0)
-    } yield Case(rows.map { case (i, a, b, _) => (i, a, b, i % d) }, k, t)
-    def sameRows(c: Case, windowed: Boolean): Boolean = {
-      val df = frame(c)
-      val out = TCloseness.filter(df, qis, "pos", c.k, c.t)
-      out.queryExecution.optimizedPlan.toString.contains("Window") == windowed &&
-        ids(out) == ids(TCloseness.windowedFilter(df, qis, "pos", c.k, c.t)._1)
-    }
-    check("domain bound", Prop.forAll(wide) { c =>
-      val atBound = c.copy(rows = c.rows.map { case (i, a, b, _) =>
-        (i, a, b, i % TCloseness.MaxClassDomain) })
-      sameRows(c, windowed = true) && sameRows(atBound, windowed = false)
-    }, cases = 4)
   }
 }
 
 object TClosenessPropertySpec {
-  type Row4 = (Long, Option[String], Option[Int], Long)
+  type Row4 = (Long, Option[String], Option[Int], Option[Long])
+  type Key = (Option[String], Option[Int])
   final case class Case(rows: Seq[Row4], k: Int, t: Double)
 }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class TClosenessSpec extends SparkSpec {
@@ -75,24 +76,46 @@ class TClosenessSpec extends SparkSpec {
     assert(tvNull.toSeq == Seq(0.25))
   }
 
-  test("groupEmdAgg routes a >MaxDomain sensitive domain to the windowed form") {
+  test("groupEmdAgg routes a >MaxDomain sensitive domain to groupEmd") {
     import graft.functions.EmdAggregator
     // 1500 distinct positions > MaxDomain=1024: the map-per-group
     // aggregator would hold unbounded state, so the call must fall back
-    // to the windowed closed form — and still produce the right numbers.
+    // to groupEmd's class table — and still produce the right numbers.
     val wide = spark.range(3000)
       .selectExpr("concat('g', id % 2) AS g", "CAST(id % 1500 AS DOUBLE) AS pos")
-    val viaAgg = TCloseness.groupEmdAgg(wide, Seq("g"), "pos")
-      .select("g", "emd").as[(String, Double)].collect().toMap
-    val viaWindow = TCloseness.groupEmd(wide, Seq("g"), "pos")
+    val agg = TCloseness.groupEmdAgg(wide, Seq("g"), "pos")
+    assert(!agg.queryExecution.optimizedPlan.toString.contains("EmdAggregator"))
+    val viaAgg = agg.select("g", "emd").as[(String, Double)].collect().toMap
+    val viaGroupEmd = TCloseness.groupEmd(wide, Seq("g"), "pos")
       .select("g", "emd").as[(String, Double)].collect().toMap
     assert(viaAgg.keySet == Set("g0", "g1"))
-    assert(viaAgg.forall { case (g, e) => math.abs(e - viaWindow(g)) < 1e-12 })
+    assert(viaAgg == viaGroupEmd)
+    // g0 holds 2/1500 at each even position against the global 1/1500 at
+    // every position: cumP − cumQ alternates 1/1500 and 0 over 1499 unit
+    // gaps, 750 times 1/1500
+    assert(math.abs(viaAgg("g0") - 1.0 / 2) < 1e-9, viaAgg)
     // and constructing the aggregator above the bound is an eager error
     val tooWide = (0 to EmdAggregator.MaxDomain)
       .map(i => i.toDouble -> 1.0 / (EmdAggregator.MaxDomain + 1)).toMap
     val err = intercept[IllegalArgumentException] { new EmdAggregator(tooWide) }
     assert(err.getMessage.contains("state bound"))
+  }
+
+  test("no t-closeness EMD plan holds a window, and groupEmdAgg equals groupEmd") {
+    val df = (1 to 40).map(i => (s"g${i % 3}", (i % 5).toLong)).toDF("g", "pos")
+    def windowless(p: DataFrame): Boolean = {
+      val plan = p.queryExecution.executedPlan.toString
+      !plan.contains("Window") && !plan.contains("CartesianProduct")
+    }
+    val emd = TCloseness.groupEmd(df, Seq("g"), "pos")
+    assert(windowless(emd))
+    assert(windowless(TCloseness.groupEmdAgainst(df.filter(col("pos") < 3), df, Seq("g"), "pos")))
+    assert(windowless(TCloseness.filter(df, Seq("g"), "pos", k = 2, t = 0.5)))
+    graft.QueryCleanup.drain()
+    val agg = TCloseness.groupEmdAgg(df, Seq("g"), "pos")
+    assert(agg.queryExecution.optimizedPlan.toString.contains("EmdAggregator"))
+    val viaAgg = agg.select("g", "emd").as[(String, Double)].collect().toMap
+    assert(viaAgg == emd.select("g", "emd").as[(String, Double)].collect().toMap)
   }
 
   test("groupEmd and filter handle NULL-QI groups") {
@@ -139,12 +162,13 @@ class TClosenessSpec extends SparkSpec {
       (1 to 10).map(i => ("big", if (i <= 5) 0L else 3L)) ++
         (1 to 4).map(_ => ("odd", 3L)) ++ Seq(("tiny", 0L), ("mid", 1L), ("mid", 3L))
     val df = rows.toDF("g", "pos")
-    val own = TCloseness.EmdBasis.Held(Vector(0L -> 6L, 1L -> 1L, 3L -> 11L)) // df's own
+    val own = TCloseness.EmdBasis(Vector(0.0 -> 6L, 1.0 -> 1L, 3.0 -> 11L)) // df's own
     Seq(0.0, 0.3, 1.0, 2.0).foreach { t =>
-      val windowed = TCloseness.groupEmd(df, Seq("g"), "pos").filter(col("emd") > t).count()
-      assert(TCloseness.violationCount(df, Seq("g"), "pos", t, Some(own)) == windowed, s"t=$t")
+      val flagged = TCloseness.groupEmd(df, Seq("g"), "pos").filter(col("emd") > t).count()
+      assert(TCloseness.violationCount(df, Seq("g"), "pos", t, Some(own)) == flagged, s"t=$t")
+      assert(TCloseness.violationCount(df, Seq("g"), "pos", t) == flagged, s"t=$t")
     }
-    val basis = TCloseness.EmdBasis.Held(Vector(0L -> 6L, 3L -> 9L)) // no pos=1
+    val basis = TCloseness.EmdBasis(Vector(0.0 -> 6L, 3.0 -> 9L)) // no pos=1
     val e = intercept[IllegalArgumentException] {
       TCloseness.violationCount(df, Seq("g"), "pos", 0.3, Some(basis))
     }

@@ -24,7 +24,7 @@ import graft.sources.CsvSource
   * | E3 suppression        | 38%       | 52.2%        | EXPECTED divergence: the reference's E3 loop compares each group's distribution to itself, so its t-filter never fires and 38% is k-anonymity-only (BASELINE.md caveat); ours applies intended t-closeness |
   * | E3 NCP                | 0.2532    | 0.3407       | follows from the stricter (working) t-filter |
   * | E3 t-violations       | 0 (vacuous) | 0 (structural) | recheck shares the filter's distribution basis |
-  * | RF accuracy drop (E3) | "negligible" | 0.005     | band-asserted |
+  * | RF accuracy drop (E3) | "negligible" | -0.0035   | accuracies pinned (0.7636 / 0.7670) |
   *
   * SPARK-VERSION COUPLING: the exact-value assertions (1e-9 on Spark
   * aggregations) and the E2 pins over spark.ml KMeans internals are
@@ -132,8 +132,12 @@ class AdultGoldenSpec extends SparkSpec {
     val (o, a, drop) = UtilityMetrics.accuracyDrop(
       withOrd.drop("income_pos"), e3.anonymized.drop("income_pos"),
       "income", qis, numTrees = 50) // ref: 50 trees, 30% test split
-    assert(o.accuracy > 0.70 && o.accuracy < 0.82, s"orig=${o.accuracy}")
-    assert(a.accuracy > 0.70 && a.accuracy < 0.82, s"anon=${a.accuracy}")
+    // pinned for this fixed local[4] session, like E2: the split is
+    // seeded, the label dictionaries and the forest deterministic on it
+    // (see SPARK-VERSION COUPLING above); both sit in the 0.70–0.82 band
+    assert(o.accuracy == 0.7635613207547169, s"orig=${o.accuracy}")
+    assert(a.accuracy == 0.7670454545454546, s"anon=${a.accuracy}")
+    assert((o.trainRows, o.testRows, a.trainRows, a.testRows) == (20631L, 8480L, 9859L, 4048L))
     assert(math.abs(drop) < 0.05, s"drop=$drop") // ref: "negligible"
   }
 }
