@@ -7,11 +7,12 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, FloatType, StringType}
 
-/** The reference's E2 pipeline (clustering-anon.py:37-51) as a spark.ml
-  * Pipeline: label-encode categorical QIs (M1, alphabetAsc for sklearn
-  * LabelEncoder parity), assemble + standardize features (M2), KMeans into
-  * k anonymization groups (M3, seed fixed), then per-cluster min-max
-  * generalization (A9/F3 via Generalization.generalize).
+/** The reference's E2 pipeline (clustering-anon.py:37-51): a spark.ml
+  * Pipeline label-encodes categorical QIs (M1, alphabetAsc for sklearn
+  * LabelEncoder parity) and assembles + standardizes features (M2);
+  * [[GraftKMeans.fit]] clusters them into k anonymization groups (M3, seed
+  * fixed), then per-cluster min-max generalization (A9/F3 via
+  * Generalization.generalize).
   *
   * M1's dictionaries come from ONE aggregation ([[alphabetLabels]]) into a
   * prebuilt `StringIndexerModel`: on the Adult fixture's seven categoricals
@@ -22,10 +23,14 @@ import org.apache.spark.sql.types.{DoubleType, FloatType, StringType}
   * init/rounding; SURVEY §7.4) — tests assert invariants (k clusters,
   * generalized QI domain = cluster ranges), never label equality.
   *
-  * Scale: KMeans is driver-coordinated Lloyd iterations — one pass over
-  * the data per iteration, centroid state is k×dims doubles broadcast each
-  * step; generalization adds one groupBy(cluster) + broadcast join. Both
-  * hold at 100 TB (cost is the iteration scans, trivially parallel).
+  * Scale: the KMeans fit ([[GraftKMeans.fit]]) runs MLlib's k-means||
+  * init distributed, then collects the features in one job and runs the
+  * 20 Lloyd rounds on the driver with MLlib's arithmetic — centers equal
+  * to spark.ml's, 8 jobs where the spark.ml fit ran 31 (one shuffle job
+  * per round). Above 2^22 feature cells (rows × dims, 32 MB on the
+  * driver) the rounds stay distributed, one pass over the data each, so
+  * the fit holds at 100 TB; generalization adds one groupBy(cluster) +
+  * broadcast join.
   */
 final case class ClusteringResult(
     clustered: DataFrame,   // input + `cluster` column
@@ -45,25 +50,24 @@ object ClusteringAnonymizer {
         .setInputCols(categoricalCols.toArray)
         .setOutputCols(categoricalCols.map(c => s"__idx_$c").toArray)
         .setHandleInvalid("keep"))
-    val features = numericCols ++ categoricalCols.map(c => s"__idx_$c")
     val assembler = new VectorAssembler()
-      .setInputCols(features.toArray).setOutputCol("__features_raw")
+      .setInputCols((numericCols ++ categoricalCols.map(c => s"__idx_$c")).toArray)
+      .setOutputCol("__features_raw")
     val scaler = new StandardScaler()
       .setInputCol("__features_raw").setOutputCol("__features")
       .setWithMean(true).setWithStd(true) // sklearn StandardScaler defaults (M2)
+    val features = new Pipeline().setStages((indexer.toSeq :+ assembler :+ scaler).toArray)
+      .fit(df).transform(df)
     // shared construction point: degenerate inputs may yield fewer than
-    // nClusters centers; downstream sizes from predictions, never from k
-    val kmeans = GraftKMeans.estimator(nClusters, seed, "__features", "cluster")
-    val pipeline = new Pipeline().setStages((indexer.toSeq :+ assembler :+ scaler :+ kmeans).toArray)
-
-    val model = pipeline.fit(df)
+    // nClusters centers; downstream sizes from assignments, never from k
+    val fit = GraftKMeans.fit(features, "__features", nClusters, seed)
     val genCols = generalizeColsOpt.getOrElse(numericCols)
     // Encoded-categorical columns survive when they are themselves being
     // generalized (clustering-anon.py:51 generalizes EVERY QI, encoded
     // categoricals included — their cluster range is over the label codes).
     val dropCols = categoricalCols.map(c => s"__idx_$c")
       .filterNot(genCols.contains) :+ "__features_raw" :+ "__features"
-    val clustered = model.transform(df).drop(dropCols: _*)
+    val clustered = features.withColumn("cluster", fit.cluster).drop(dropCols: _*)
     ClusteringResult(clustered,
       Generalization.generalize(clustered, "cluster", genCols))
   }

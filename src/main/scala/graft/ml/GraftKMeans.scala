@@ -1,36 +1,106 @@
 package graft.ml
 
-import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
+import org.apache.spark.ml.linalg.Vector
+import org.apache.spark.mllib.clustering.{GraftLloyd, KMeans, KMeansModel}
+import org.apache.spark.mllib.linalg.{Vectors => OldVectors}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.storage.StorageLevel
 
 /** The single construction point for every KMeans fit in the engine
   * (IVF coarse quantizer, PQ sub-codebooks, clustering anonymizer), so
-  * the degenerate-input contract lives in exactly one place:
+  * the fit and its degenerate-input contract live in exactly one place:
   *
   * MLlib's KMeans returns FEWER than k centers when the training data
   * has fewer distinct points (its init dedups seeds) — so consumers must
-  * size every downstream structure from the MODEL, never from the
+  * size every downstream structure from the FIT, never from the
   * requested k. [[roundedCenters]] is that sizing point for the two
-  * centroid-table consumers; prediction consumers are safe by
+  * centroid-table consumers; assignment consumers are safe by
   * construction (cluster ids always index actual centers).
+  *
+  * Scale: the k-means|| init runs distributed (MLlib's own, 7 jobs). The
+  * Lloyd rounds are one shuffle job each when distributed, and a fit on
+  * the Adult fixture never converges before the 20th, so the cost is the
+  * number of rounds, not the data: inputs of at most [[MaxDriverCells]]
+  * feature cells (rows × dims, 32 MB of doubles) are collected in one
+  * job and iterate on the driver with MLlib's arithmetic
+  * ([[org.apache.spark.mllib.clustering.GraftLloyd]]), so the centers,
+  * round count and assignments equal spark.ml `KMeans`'s at the same k,
+  * seed and partitioning (GraftKMeansSpec). Larger inputs run MLlib's
+  * distributed rounds from the same init.
   */
 object GraftKMeans {
 
-  /** Canonically-configured estimator: fixed seed for replayability,
-    * explicit feature/prediction columns. */
-  def estimator(k: Int, seed: Long, featuresCol: String,
-                predictionCol: String): KMeans = {
+  /** spark.ml `KMeans` defaults: 20 rounds, tolerance 1e-4. */
+  private val MaxIter = 20
+  private val Tol = 1e-4
+
+  /** Feature cells (rows × dims) the driver rounds hold at most. */
+  val MaxDriverCells: Long = 1L << 22
+
+  /** A fitted model: the centers (sized from the data, at most k), the
+    * Lloyd rounds run, and `cluster`, each row's center index (int) over
+    * the fitted features column — usable on any frame that has it. */
+  final case class Fit(centers: IndexedSeq[Vector], numIter: Int, cluster: Column)
+
+  /** Fit `k` centers (seed fixed) to the ml vectors in `featuresCol`. */
+  def fit(df: DataFrame, featuresCol: String, k: Int, seed: Long): Fit =
+    fitWithin(df, featuresCol, k, seed, MaxDriverCells)
+
+  /** [[fit]] with the driver bound as an argument, so a test can route a
+    * small input through the distributed rounds. */
+  private[ml] def fitWithin(df: DataFrame, featuresCol: String, k: Int,
+                            seed: Long, maxDriverCells: Long): Fit = {
     require(k >= 1, s"k=$k must be at least 1")
-    new KMeans().setK(k).setSeed(seed)
-      .setFeaturesCol(featuresCol).setPredictionCol(predictionCol)
+    val sc = df.sparkSession.sparkContext
+    // counted as the init's first job fills the cache; a recomputed
+    // partition only over-counts, which routes to the distributed rounds
+    val rows = sc.longAccumulator
+    val feats = df.select(featuresCol).rdd.map { r =>
+      rows.add(1L)
+      val v = r.getAs[Vector](0)
+      // spark.ml's fit rejects these too (DatasetUtils.checkNonNanVectors)
+      require(v != null, s"$featuresCol holds a null vector")
+      v.foreachActive((_, x) =>
+        require(!x.isNaN && !x.isInfinite, s"$featuresCol holds NaN or Infinity"))
+      OldVectors.fromML(v)
+    }.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val init = new KMeans().setK(k).setSeed(seed).setMaxIterations(0)
+        .run(feats).clusterCenters
+      val (centers, numIter) =
+        if (rows.sum * init.head.size <= maxDriverCells)
+          GraftLloyd.rounds(feats.glom().collect(), init, MaxIter, Tol)
+        else {
+          val m = new KMeans().setK(init.length)
+            .setInitialModel(new KMeansModel(init))
+            .setMaxIterations(MaxIter).setEpsilon(Tol).run(feats)
+          (m.clusterCenters, GraftLloyd.numIter(m))
+        }
+      val model = new KMeansModel(centers)
+      val assign = udf((v: Vector) => model.predict(OldVectors.fromML(v)))
+      Fit(centers.map(_.asML).toIndexedSeq, numIter, assign(col(featuresCol)))
+    } finally releaseOver(feats)
   }
 
-  /** Cluster centers sized from the model (NOT the requested k), each
+  /** Unpersist `root` and whatever was persisted over it: MLlib's fit
+    * persists (and, unless it throws, frees) RDDs derived from its input. */
+  private def releaseOver(root: RDD[_]): Unit = {
+    def reaches(r: RDD[_]): Boolean =
+      r.id == root.id || r.dependencies.exists(d => d.rdd.id >= root.id && reaches(d.rdd))
+    root.sparkContext.getPersistentRDDs.values
+      .filter(r => r.id >= root.id && reaches(r))
+      .foreach(_.unpersist(blocking = false))
+  }
+
+  /** Cluster centers sized from the fit (NOT the requested k), each
     * element rounded to 6dp before any routing comparison — the
     * rank-stability contract, with HALF_UP so an oracle replaying
     * trained centroids agrees on exact midpoints (math.rint would round
     * half-to-even). */
-  def roundedCenters(model: KMeansModel): IndexedSeq[IndexedSeq[Double]] =
-    model.clusterCenters.map(_.toArray.map(x =>
+  def roundedCenters(fit: Fit): IndexedSeq[IndexedSeq[Double]] =
+    fit.centers.map(_.toArray.map(x =>
       BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-      .toIndexedSeq).toIndexedSeq
+      .toIndexedSeq)
 }

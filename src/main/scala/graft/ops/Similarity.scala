@@ -319,16 +319,14 @@ object Similarity {
       array_to_vector(col(vecCol).cast("array<double>")).as("__fv"))
     val train = if (sampleFraction < 1.0)
       vecs.sample(withReplacement = false, sampleFraction, seed) else vecs
-    val model = graft.ml.GraftKMeans.estimator(nlist, seed, "__fv", "__cell")
-      .fit(train)
-    val assignments = model.transform(vecs)
-      .select(col(idCol), col("__cell").cast("int").as("cell"))
-    // centroid table sized from the MODEL and rounded via the shared
+    val fit = graft.ml.GraftKMeans.fit(train, "__fv", nlist, seed)
+    val assignments = vecs.select(col(idCol), fit.cluster.as("cell"))
+    // centroid table sized from the FIT and rounded via the shared
     // contract (GraftKMeans.roundedCenters) — degenerate inputs yield
     // fewer than nlist centers and the table must match them exactly
     val spark = corpus.sparkSession
     import spark.implicits._
-    val cents = graft.ml.GraftKMeans.roundedCenters(model).zipWithIndex
+    val cents = graft.ml.GraftKMeans.roundedCenters(fit).zipWithIndex
       .map { case (v, i) => (i, v.toSeq) }
       .toSeq.toDF("cell", "centroid")
     IvfIndex(assignments, cents)
@@ -624,9 +622,8 @@ object Similarity {
     val books = (0 until m).map { j =>
       val slices = corpus.select(array_to_vector(
         slice(col(vecCol), j * subDim + 1, subDim).cast("array<double>")).as("__fv"))
-      val model = graft.ml.GraftKMeans.estimator(ksub, seed + j, "__fv", "__c")
-        .fit(slices)
-      graft.ml.GraftKMeans.roundedCenters(model)
+      graft.ml.GraftKMeans.roundedCenters(
+        graft.ml.GraftKMeans.fit(slices, "__fv", ksub, seed + j))
     }
     PqIndex(books, m, ksub, subDim)
   }

@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
   * [[PrivacyMetrics.evaluate]]'s two aggregations (the original, and the
   * release's class table), so they don't recompute the suppression (SURVEY
   * §4 "metric fan-out recomputation"). perfbench `--trace 1` on the Adult
-  * fixture at seed 42: E1 runs 8 jobs, E3 24 and E2 43.
+  * fixture at seed 42: E1 runs 8 jobs, E3 24 and E2 20 (its KMeans fit 8,
+  * the Lloyd rounds on the driver — [[graft.ml.GraftKMeans]]).
   *
   * `emdBasis` (E3 only): the sensitive distribution the t-closeness filter
   * measured classes against — the per-position counts of the k-anonymized

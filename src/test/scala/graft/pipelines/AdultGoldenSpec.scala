@@ -27,11 +27,15 @@ import graft.sources.CsvSource
   * | RF accuracy drop (E3) | "negligible" | -0.0035   | accuracies pinned (0.7636 / 0.7670) |
   *
   * SPARK-VERSION COUPLING: the exact-value assertions (1e-9 on Spark
-  * aggregations) and the E2 pins over spark.ml KMeans internals are
-  * deterministic on Spark 4.1.2 but are implementation-coupled — a Spark
-  * upgrade that changes aggregation accumulation order or KMeans
-  * init/iteration details may shift them. On upgrade: re-run, eyeball the
-  * new values against the reference magnitudes above, re-pin.
+  * aggregations) and the E2 pins are deterministic on Spark 4.1.2 but
+  * are implementation-coupled. The E2 pins rest on MLlib's k-means|| init
+  * (run distributed) and on MLlib's own distance, centroid and
+  * convergence code, which GraftKMeans's driver rounds call through the
+  * `mllib.clustering.GraftLloyd` shim; GraftKMeansSpec checks those rounds
+  * against spark.ml's fit. A Spark upgrade that changes aggregation
+  * accumulation order, the init, or that code may shift them. On upgrade:
+  * re-run, eyeball the new values against the reference magnitudes
+  * above, re-pin.
   */
 class AdultGoldenSpec extends SparkSpec {
 

@@ -158,24 +158,12 @@ class TruncateSpec extends SparkSpec {
   }
 
   test("no module outside Truncate checkpoints or frees checkpoints") {
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"run from the project root (no ${root.getAbsolutePath})")
-    def files(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(files)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    // comments and string literals stripped: only code counts
-    def code(f: java.io.File): String = {
-      val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      "(?s)/\\*.*?\\*/".r.replaceAllIn(src, "")
-        .linesIterator.map(l => "\"(\\\\.|[^\"\\\\])*\"".r.replaceAllIn(l, "\"\"")
-          .replaceAll("//.*", ""))
-        .mkString("\n")
-    }
+    import graft.SourceScan.{code, files, root}
     val checkpointCall = "localCheckpoint\\(|\\.checkpoint\\(".r
     // a checkpoint-release helper: a def named like one, or code that
     // walks a plan's LogicalRDD leaves (how such a helper finds the RDD)
     val releaseHelper = "(?i)def\\s+\\w*(release|unpersist|free)\\w*checkpoint|LogicalRDD".r
-    val offenders = files(root).filterNot(_.getPath.endsWith("util/Truncate.scala"))
+    val offenders = files.filterNot(_.getPath.endsWith("util/Truncate.scala"))
       .flatMap { f =>
         val c = code(f)
         (checkpointCall.findAllIn(c) ++ releaseHelper.findAllIn(c))
