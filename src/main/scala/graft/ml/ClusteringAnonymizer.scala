@@ -27,10 +27,11 @@ import org.apache.spark.sql.types.{DoubleType, FloatType, StringType}
   * init distributed, then collects the features in one job and runs the
   * 20 Lloyd rounds on the driver with MLlib's arithmetic — centers equal
   * to spark.ml's, 8 jobs where the spark.ml fit ran 31 (one shuffle job
-  * per round). Above 2^22 feature cells (rows × dims, 32 MB on the
-  * driver) the rounds stay distributed, one pass over the data each, so
-  * the fit holds at 100 TB; generalization adds one groupBy(cluster) +
-  * broadcast join.
+  * per round). Past 32 MB of points on the driver or 2^24 distance terms
+  * a round ([[GraftKMeans.onDriver]], where the distributed rounds were
+  * measured to catch up) the rounds stay distributed, one pass over the
+  * data each, so the fit holds at 100 TB; generalization adds one
+  * groupBy(cluster) + broadcast join.
   */
 final case class ClusteringResult(
     clustered: DataFrame,   // input + `cluster` column

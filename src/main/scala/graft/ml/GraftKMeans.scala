@@ -21,14 +21,14 @@ import org.apache.spark.storage.StorageLevel
   *
   * Scale: the k-means|| init runs distributed (MLlib's own, 7 jobs). The
   * Lloyd rounds are one shuffle job each when distributed, and a fit on
-  * the Adult fixture never converges before the 20th, so the cost is the
-  * number of rounds, not the data: inputs of at most [[MaxDriverCells]]
-  * feature cells (rows × dims, 32 MB of doubles) are collected in one
-  * job and iterate on the driver with MLlib's arithmetic
+  * the Adult fixture never converges before the 20th, so there the cost
+  * is the number of rounds, not the data: the features are collected in
+  * one job and the rounds iterate on the driver with MLlib's arithmetic
   * ([[org.apache.spark.mllib.clustering.GraftLloyd]]), so the centers,
   * round count and assignments equal spark.ml `KMeans`'s at the same k,
-  * seed and partitioning (GraftKMeansSpec). Larger inputs run MLlib's
-  * distributed rounds from the same init.
+  * seed and partitioning (GraftKMeansSpec). Inputs past [[onDriver]]'s
+  * bounds (32 MB held on the driver, 2^24 distance terms a round) run
+  * MLlib's distributed rounds from the same init.
   */
 object GraftKMeans {
 
@@ -36,8 +36,33 @@ object GraftKMeans {
   private val MaxIter = 20
   private val Tol = 1e-4
 
-  /** Feature cells (rows × dims) the driver rounds hold at most. */
-  val MaxDriverCells: Long = 1L << 22
+  /** A row of `dims` doubles holds `8 * dims + RowBytes` bytes on the
+    * driver: the collected `DenseVector` with its array header, MLlib's
+    * `VectorWithNorm` and two array slots (JDK 17, compressed oops;
+    * measured after a full GC at 80 B a row at dims 1, 152 B at dims 10). */
+  private val RowBytes = 72L
+  private val MaxDriverBytes = 32L << 20
+  private val MaxDriverTerms = 1L << 24
+
+  /** Whether the Lloyd rounds over `rows` points of `dims` doubles and `k`
+    * centers run on the driver: only where they were measured to fit and
+    * to win (uniform tables, 20 rounds, `local[2]`, 4 partitions, 4-vCPU
+    * VM, 3 GB heap).
+    *  - Memory: at most [[MaxDriverBytes]] of points held (the collect
+    *    briefly adds its serialized results, `8 * dims + 16` bytes a row).
+    *  - Time: at most [[MaxDriverTerms]] distance terms (rows × dims × k)
+    *    a round. A driver round is one thread's work; a distributed round
+    *    splits it over the task threads but pays a job. The distributed
+    *    fit caught up at about 2·10^7 terms (2,000,000 × 1 and 300,000 ×
+    *    10, both k = 10) to 10^8 (100,000 × 10, k = 100). At 2^22 cells
+    *    and k = 10 it was the faster: 13.1–14.2 s against 16.0 s at dims
+    *    1, where the driver held 335 MB of points, and 3.5–3.9 s against
+    *    4.0–4.2 s at dims 10.
+    * E2's fit on the Adult fixture (29,111 × 10, k = 10: 4.4 MB, 2.9·10^6
+    * terms) stays on the driver; a table of that shape fit in 0.5 s there
+    * against 1.4 s distributed. */
+  private[ml] def onDriver(rows: Long, dims: Int, k: Int): Boolean =
+    rows * (8L * dims + RowBytes) <= MaxDriverBytes && rows * dims * k <= MaxDriverTerms
 
   /** A fitted model: the centers (sized from the data, at most k), the
     * Lloyd rounds run, and `cluster`, each row's center index (int) over
@@ -46,12 +71,12 @@ object GraftKMeans {
 
   /** Fit `k` centers (seed fixed) to the ml vectors in `featuresCol`. */
   def fit(df: DataFrame, featuresCol: String, k: Int, seed: Long): Fit =
-    fitWithin(df, featuresCol, k, seed, MaxDriverCells)
+    fitWithin(df, featuresCol, k, seed, onDriver)
 
-  /** [[fit]] with the driver bound as an argument, so a test can route a
-    * small input through the distributed rounds. */
-  private[ml] def fitWithin(df: DataFrame, featuresCol: String, k: Int,
-                            seed: Long, maxDriverCells: Long): Fit = {
+  /** [[fit]] with the routing as an argument, so a test can send a small
+    * input through either route. */
+  private[ml] def fitWithin(df: DataFrame, featuresCol: String, k: Int, seed: Long,
+                            driver: (Long, Int, Int) => Boolean): Fit = {
     require(k >= 1, s"k=$k must be at least 1")
     val sc = df.sparkSession.sparkContext
     // counted as the init's first job fills the cache; a recomputed
@@ -70,7 +95,7 @@ object GraftKMeans {
       val init = new KMeans().setK(k).setSeed(seed).setMaxIterations(0)
         .run(feats).clusterCenters
       val (centers, numIter) =
-        if (rows.sum * init.head.size <= maxDriverCells)
+        if (driver(rows.sum, init.head.size, init.length))
           GraftLloyd.rounds(feats.glom().collect(), init, MaxIter, Tol)
         else {
           val m = new KMeans().setK(init.length)

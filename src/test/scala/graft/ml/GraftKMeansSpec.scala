@@ -54,8 +54,8 @@ class GraftKMeansSpec extends SparkSpec {
   private def compare(c: Case): String = {
     val df = frame(c)
     val (centers, rounds, refIds) = reference(df, c.k, c.seed)
-    Seq("driver" -> GraftKMeans.MaxDriverCells, "distributed" -> 0L).flatMap { case (route, cells) =>
-      val fit = GraftKMeans.fitWithin(df, "f", c.k, c.seed, cells)
+    Seq("driver" -> true, "distributed" -> false).flatMap { case (route, onDriver) =>
+      val fit = GraftKMeans.fitWithin(df, "f", c.k, c.seed, (_, _, _) => onDriver)
       Seq(
         Option.when(bits(fit.centers) != bits(centers))(
           s"$route centers ${fit.centers} != $centers"),
@@ -155,7 +155,21 @@ class GraftKMeansSpec extends SparkSpec {
   }
   leakCase("a distributed fit") {
     GraftKMeans.fitWithin(frame(blobs.pureApply(Gen.Parameters.default, Seed(5L))),
-      "f", 3, 5L, maxDriverCells = 0L)
+      "f", 3, 5L, (_, _, _) => false)
+  }
+
+  test("the driver rounds take what fits and wins there, and no more") {
+    assert(GraftKMeans.onDriver(29111, 10, 10)) // E2 on the Adult fixture
+    assert(GraftKMeans.onDriver(100000, 10, 10))
+    assert(GraftKMeans.onDriver(250000, 1, 10))
+    // where the distributed rounds were measured as fast or faster, or
+    // the points would hold over 32 MB on the driver
+    assert(!GraftKMeans.onDriver(1L << 22, 1, 10))
+    assert(!GraftKMeans.onDriver(419430, 10, 10))
+    assert(!GraftKMeans.onDriver(300000, 10, 10))
+    assert(!GraftKMeans.onDriver(200000, 10, 30))
+    assert(!GraftKMeans.onDriver(100000, 10, 100))
+    assert(!GraftKMeans.onDriver(1000000, 1, 1))
   }
 
   test("no module outside GraftKMeans constructs an MLlib or spark.ml KMeans") {
