@@ -96,29 +96,29 @@ object ClusteringAnonymizer {
     * oracle-checkable end to end (the q45/q69 path; MLlib stays behind
     * [[anonymize]] for the recall-band trainers).
     *
-    * Label encoding here is the broadcast form of alphabetAsc: the tiny
-    * distinct-value table ranks once (row_number over value order, 0-
-    * based — sklearn LabelEncoder parity) and joins back, instead of
-    * StringIndexer's driver-collected labels array — same codes, no
-    * whole-column collect. */
+    * Label encoding ranks the tiny distinct-value table once (row_number
+    * over the column's NATIVE order, 0-based — sklearn LabelEncoder
+    * parity) and joins it back, with no whole-column collect. For a
+    * string column that is StringIndexer's alphabetAsc and gives the same
+    * codes; a numeric column orders by value (2 before 10), where
+    * alphabetAsc orders its string form ("10" before "2"). A NULL
+    * categorical gets no code and fails the fit. */
   def anonymizeDeterministic(df: DataFrame, numericCols: Seq[String],
                              categoricalCols: Seq[String], nClusters: Int,
                              iters: Int = 8,
-                             generalizeColsOpt: Option[Seq[String]] = None,
-                             memoKey: Option[String] = None): ClusteringResult = {
+                             generalizeColsOpt: Option[Seq[String]] = None): ClusteringResult = {
     var encoded = df
     categoricalCols.foreach { c =>
       val codes = df.select(col(c)).distinct()
         .select(col(c), (row_number().over(
           org.apache.spark.sql.expressions.Window.orderBy(col(c))) - 1)
           .cast("double").as(s"__idx_$c"))
-      encoded = encoded.join(broadcast(codes), Seq(c))
+      encoded = encoded.join(broadcast(codes), Seq(c), "left")
     }
     val features = numericCols ++ categoricalCols.map(c => s"__idx_$c")
     val genCols = generalizeColsOpt.getOrElse(numericCols)
     val dropCols = categoricalCols.map(c => s"__idx_$c").filterNot(genCols.contains)
-    val clustered = DeterministicKMeans.assign(encoded, features, nClusters,
-        iters, memoKey)
+    val clustered = DeterministicKMeans.assign(encoded, features, nClusters, iters)
       .drop(dropCols: _*)
     ClusteringResult(clustered,
       Generalization.generalize(clustered, "cluster", genCols))

@@ -6,32 +6,44 @@ import graft.ops.Generalization
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** ML-boundary queries (SURVEY §2.9, pipeline E2). KMeans/RF outputs are
-  * engine-specific (no DuckDB oracle — the driver records a rows-only
-  * check); invariants are asserted in ClusteringMlSpec instead.
+/** ML-boundary queries (SURVEY §2.9, pipeline E2). The E2 releases (q45,
+  * q69) use the deterministic KMeans and are hash-checked against a DuckDB
+  * replay of the whole fit ([[oracles]]); the RandomForest outputs (q46,
+  * q68) are engine-specific, so Verify records a rows-only check and
+  * ClusteringMlSpec asserts their invariants.
   */
 object MlQueries {
   type Q = (SparkSession, String) => DataFrame
+
+  /** E2's deterministic release of customer per dataset dir, both QIs
+    * generalized: q45 reads its acctbal range, q69 both. The fit is
+    * deterministic per dataset and an offline artifact (the IVF/PQ index
+    * memo in VectorEventQueries), so reps time assignment and
+    * generalization, not the Lloyd rounds. Holds lazy DataFrames only. */
+  private val e2Cache =
+    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+
+  private def e2Release(s: SparkSession, dir: String): DataFrame =
+    e2Cache.computeIfAbsent(dir, _ => {
+      // pre-fix the (2-dp) balance to decimal so the rendered range
+      // strings are the engine-stable decimal form (the q14 contract)
+      val c = Tables.customer(s, dir)
+        .withColumn("c_acctbal", col("c_acctbal").cast("decimal(18,2)"))
+      ClusteringAnonymizer.anonymizeDeterministic(c,
+        numericCols = Seq("c_acctbal"),
+        categoricalCols = Seq("c_mktsegment"),
+        nClusters = 10,
+        generalizeColsOpt = Some(Seq("c_acctbal", "__idx_c_mktsegment"))).generalized
+    })
 
   val queries: Map[String, Q] = Map(
     // E2: cluster customers on (acctbal, mktsegment), generalize acctbal
     // to per-cluster min-max ranges. Deterministic integer-micro KMeans
     // (DeterministicKMeans) — the full fit unrolls in the SQL oracle, so
     // assignments AND ranges are hash-checked, not just invariant-checked.
-    "q45_cluster_generalize" -> ((s, dir) => {
-      // pre-fix the (2-dp) balance to decimal so the rendered range
-      // strings are the engine-stable decimal form (the q14 contract)
-      val c = Tables.customer(s, dir)
-        .withColumn("c_acctbal", col("c_acctbal").cast("decimal(18,2)"))
-      // memoKey: the fit is deterministic per dataset, so reps time
-      // assignment + generalization, not re-training (r13 advice #5)
-      ClusteringAnonymizer.anonymizeDeterministic(c,
-        numericCols = Seq("c_acctbal"),
-        categoricalCols = Seq("c_mktsegment"),
-        nClusters = 10, memoKey = Some(s"q45|$dir")).generalized
-        .select("c_custkey", "cluster", "c_acctbal")
-        .orderBy("c_custkey")
-    }),
+    "q45_cluster_generalize" -> ((s, dir) =>
+      e2Release(s, dir).select("c_custkey", "cluster", "c_acctbal")
+        .orderBy("c_custkey")),
 
     // M4-M6: RF accuracy predicting order priority band from order facts
     // (single-row utility report).
@@ -72,20 +84,11 @@ object MlQueries {
     // E2 with EVERY QI generalized (clustering-anon.py:51): the numeric QI
     // and the label-encoded categorical QI are both replaced by their
     // cluster's min-max range.
-    "q69_multicol_generalize" -> ((s, dir) => {
-      val c = Tables.customer(s, dir)
-        .withColumn("c_acctbal", col("c_acctbal").cast("decimal(18,2)"))
-      ClusteringAnonymizer.anonymizeDeterministic(c,
-        numericCols = Seq("c_acctbal"),
-        categoricalCols = Seq("c_mktsegment"),
-        nClusters = 10,
-        generalizeColsOpt = Some(Seq("c_acctbal", "__idx_c_mktsegment")),
-        memoKey = Some(s"q69|$dir"))
-        .generalized
+    "q69_multicol_generalize" -> ((s, dir) =>
+      e2Release(s, dir)
         .select(col("c_custkey"), col("cluster"), col("c_acctbal"),
           col("__idx_c_mktsegment").as("mktsegment_range"))
-        .orderBy("c_custkey")
-    }))
+        .orderBy("c_custkey")))
 
   /** DuckDB replay of the ENTIRE deterministic E2 fit (q45/q69): label
     * encode, exact-moment standardization to integer micros, the

@@ -72,4 +72,51 @@ class DeterministicKMeansSpec extends SparkSpec {
       .agg(max(greatest($"rb", $"rs"))).head().getLong(0)
     assert(ranges == 1L, "exactly one rendered range per cluster per QI")
   }
+
+  /** The messages down `body`'s exception cause chain. */
+  private def failure(body: => Any): String = {
+    val e = intercept[Exception](body)
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString(" / ")
+  }
+
+  test("assign fails on a NULL feature, naming the column") {
+    val df = (1 to 20).map(i => (i.toLong, Option.when(i != 7)(i.toDouble)))
+      .toDF("id", "balance")
+    val msg = failure(DeterministicKMeans.assign(df, Seq("balance"), k = 2).collect())
+    graft.QueryCleanup.drain()
+    assert(msg.contains("balance holds a NULL value"), msg)
+  }
+
+  test("fitArrayMicros fails on a NULL vector, a NULL element or a ragged vector") {
+    val good = (1 to 20).map(i => (i.toLong, Option(Seq(Option(i.toDouble), Option(1.0)))))
+    val isNull = "emb holds a NULL vector or element"
+    Seq(((21L, None), isNull), ((21L, Some(Seq(Some(2.0), None))), isNull),
+        ((21L, Some(Seq(Some(2.0)))), "emb holds a vector of length 1")).foreach {
+      case (bad, expected) =>
+        val df = (good :+ bad).toDF("id", "emb")
+        val msg = failure(DeterministicKMeans.fitArrayMicros(df, "emb", k = 3)._2.collect())
+        graft.QueryCleanup.drain()
+        assert(msg.contains(expected), msg)
+    }
+  }
+
+  test("fitGroupedArrayMicros fails on a ragged vector within a group") {
+    val df = ((1 to 20).map(i => (i % 2, Seq(i.toDouble, 1.0))) :+ ((1, Seq(5.0))))
+      .toDF("g", "emb")
+    val msg = failure(DeterministicKMeans.fitGroupedArrayMicros(df, "g", "emb", k = 3))
+    graft.QueryCleanup.drain()
+    assert(msg.contains("emb holds a vector of length 1"), msg)
+  }
+
+  test("anonymizeDeterministic fails on a NULL categorical instead of dropping its row") {
+    val df = (1 to 40).map(i =>
+      (i.toLong, (i * 31 % 97).toDouble, Option.when(i != 5)(if (i % 3 == 0) "AUTO" else "HOUSE")))
+      .toDF("id", "bal", "seg")
+    val msg = failure(ClusteringAnonymizer.anonymizeDeterministic(df,
+      numericCols = Seq("bal"), categoricalCols = Seq("seg"), nClusters = 4)
+      .generalized.collect())
+    graft.QueryCleanup.drain()
+    assert(msg.contains("__idx_seg holds a NULL value"), msg)
+  }
 }

@@ -126,6 +126,13 @@ class TruncateSpec extends SparkSpec {
     "DeterministicKMeans.assign" -> (() => DeterministicKMeans.assign(
       (1 to 40).map(i => (i.toDouble, (i % 7).toDouble)).toDF("x", "y"),
       Seq("x", "y"), k = 3).collect()),
+    "DeterministicKMeans.fitArrayMicros" -> (() => DeterministicKMeans.fitArrayMicros(
+      (1 to 40).map(i => Seq(i.toDouble, (i % 7).toDouble)).toDF("v"), "v", k = 3)
+      ._2.collect()),
+    "DeterministicKMeans.fitGroupedArrayMicros" -> (() =>
+      DeterministicKMeans.fitGroupedArrayMicros(
+        (1 to 40).map(i => (i % 3, Seq(i.toDouble, (i % 7).toDouble))).toDF("g", "v"),
+        "g", "v", k = 3)),
     "dedupClustersReleasable" -> (() => {
       val (c, release) = Dedup.dedupClustersReleasable(tinyGraph, "src", "dst")
       c.collect(); release()
