@@ -19,9 +19,9 @@ import org.apache.spark.sql.functions._
   *  - `laplace`: u from Spark's `rand(seed)` — per-run random, the
   *    production path (seed from SecureRandom upstream).
   *
-  * Budget accounting is simple sequential composition: ε_total = Σ ε_i,
-  * tracked by PrivacyBudget on the driver (queries are planned on the
-  * driver; the accountant gates plan construction, not execution).
+  * Budget accounting is [[BudgetLedger]]: ε under sequential composition
+  * (ε_total = Σ ε_i) or zCDP ρ for Gaussian releases, charged before a
+  * release is planned (it gates plan construction, not execution).
   *
   * Scale: noise is a per-row codegen'd expression over the aggregated
   * result — cost is the aggregation itself; the mechanism adds nothing.
@@ -59,9 +59,8 @@ object DifferentialPrivacy {
       coalesce(col(c).cast("string"), lit("\u0000null"))): _*)
 
   /** Noise an already-aggregated value keyed on its group columns — the
-    * composition point for pipelines that aggregate elsewhere (e.g. a
-    * watermarked streaming window agg) and only need the release step.
-    * Pure per-row expression over the aggregate, so it is streaming-safe:
+    * composition point for pipelines that aggregate elsewhere and only
+    * need the release step. Pure per-row expression over the aggregate:
     * no extra shuffle, no state. The hash-keyed draw means re-releasing
     * the same group (batch replay, complete-mode re-emit) repeats the
     * SAME noise instead of averaging it away — repeated observation of
@@ -370,21 +369,22 @@ object DifferentialPrivacy {
   }
 }
 
-/** DURABLE budget ledger: [[PrivacyBudget]]/[[ZCdpBudget]] are
-  * process-local, but a real deployment must refuse an over-budget
-  * release ACROSS sessions — the analyst who re-runs tomorrow's job
-  * gets tomorrow's remaining budget, not a fresh one. State lives as a
-  * [[graft.sources.SnapshotStore]] table of (release_id, amount, meta)
-  * rows plus one `__total` row; every charge is one atomic versioned
-  * commit, so a reader never sees a half-applied charge and a crashed
-  * release leaves the previous ledger state live.
+/** The privacy-budget accountant, durable: a deployment must refuse an
+  * over-budget release ACROSS sessions — the analyst who re-runs
+  * tomorrow's job gets tomorrow's remaining budget, not a fresh one.
+  * State lives as a [[graft.sources.SnapshotStore]] table of
+  * (release_id, amount, meta) rows plus one `__total` row; every charge
+  * is one atomic versioned commit, so a reader never sees a half-applied
+  * charge and a crashed release leaves the previous ledger state live.
   *
   * Idempotent by release id: re-charging an id already in the ledger is
   * a no-op (the crashed-release replay converges instead of
   * double-spending — same contract as the ingest paths). `amount` is
-  * whatever the caller accounts in — ε under sequential composition, ρ
-  * under zCDP ([[ZCdpBudget.rhoOf]] gives the Gaussian ρ;
-  * [[epsilonFor]] converts the spent ρ to a final (ε, δ)).
+  * whatever the caller accounts in — ε under sequential composition, or
+  * ρ under zero-concentrated DP (Bun & Steinke, TCC 2016):
+  * [[chargeGaussian]] charges a Gaussian release ρ = Δ²/(2σ²), and
+  * [[epsilonFor]] converts the spent ρ to a final (ε, δ). Under zCDP the
+  * ε of k Gaussian releases grows as √k instead of k.
   *
   * The ledger is a human-scale artifact (one row per RELEASE, not per
   * row of data) — reading it to the driver is bounded by construction.
@@ -474,56 +474,4 @@ object BudgetLedger {
   def charges(spark: org.apache.spark.sql.SparkSession,
               dir: String): DataFrame =
     SnapshotStore.read(spark, dir).filter(col("release_id") =!= TotalId)
-}
-
-/** Sequential-composition ε-budget accountant (driver-side plan gate). */
-final class PrivacyBudget(val totalEpsilon: Double) {
-  private var spentEps = 0.0
-  def spent: Double = spentEps
-  def remaining: Double = totalEpsilon - spentEps
-  /** Reserve ε for a query; throws if the budget would be exceeded. */
-  def charge(epsilon: Double): Unit = synchronized {
-    require(epsilon > 0, s"epsilon must be positive, got $epsilon")
-    require(spentEps + epsilon <= totalEpsilon + 1e-12,
-      f"privacy budget exhausted: spent $spentEps%.3f + $epsilon%.3f > $totalEpsilon%.3f")
-    spentEps += epsilon
-  }
-}
-
-/** zero-Concentrated DP accountant (Bun & Steinke, "Concentrated
-  * Differential Privacy: Simplifications, Extensions, and Lower Bounds",
-  * TCC 2016). Why a second accountant: under sequential composition the
-  * pure-ε ledger grows linearly in the number of Gaussian releases, while
-  * the zCDP ledger grows linearly in ρ = Δ²/(2σ²) — and converts to a
-  * FINAL (ε, δ) via ε = ρ + 2·sqrt(ρ·ln(1/δ)), i.e. ε grows as √k over k
-  * releases instead of k. The daily-release pipeline (one noisy stats
-  * table per ingest) lives or dies on that difference.
-  *
-  * Usage: charge each Gaussian release by its (sensitivity, σ); read the
-  * cumulative guarantee with [[epsilonFor]] at any δ. */
-final class ZCdpBudget(val totalRho: Double) {
-  private var spentRho = 0.0
-  def spent: Double = spentRho
-  def remaining: Double = totalRho - spentRho
-
-  /** ρ cost of one Gaussian mechanism invocation: Δ²/(2σ²). */
-  def rhoOf(sensitivity: Double, sigma: Double): Double = {
-    require(sensitivity > 0 && sigma > 0, s"need positive sensitivity/sigma")
-    sensitivity * sensitivity / (2.0 * sigma * sigma)
-  }
-
-  /** Reserve the ρ for a Gaussian release; throws if over budget. */
-  def chargeGaussian(sensitivity: Double, sigma: Double): Unit = synchronized {
-    val rho = rhoOf(sensitivity, sigma)
-    require(spentRho + rho <= totalRho + 1e-12,
-      f"zCDP budget exhausted: spent $spentRho%.4f + $rho%.4f > $totalRho%.4f")
-    spentRho += rho
-  }
-
-  /** The (ε, δ) guarantee the SPENT ρ implies (Bun-Steinke Prop. 1.3):
-    * ε(δ) = ρ + 2·sqrt(ρ·ln(1/δ)). */
-  def epsilonFor(delta: Double): Double = {
-    require(delta > 0 && delta < 1, s"delta must be in (0,1), got $delta")
-    spentRho + 2.0 * math.sqrt(spentRho * math.log(1.0 / delta))
-  }
 }

@@ -36,6 +36,8 @@ object KAnonymity {
     * Matches the reference's merge-with-frequent-combinations idiom
     * (naive-suppresion.py:40); the pandas `merge(how='inner')` against a
     * deduplicated key table is a left-semi join in relational terms.
+    * The join is null-safe: `groupBy` counts a NULL-QI class like any
+    * other, so a plain USING join would drop it even at >= k rows.
     */
   def suppressSemiJoin(df: DataFrame, qis: Seq[String], k: Int): DataFrame = {
     val frequent = df.groupBy(qis.map(col): _*)
@@ -45,7 +47,7 @@ object KAnonymity {
     // no forced broadcast: the frequent-key set is data-dependent (for
     // fine-grained QIs it approaches the group count); Catalyst/AQE
     // auto-broadcasts when it fits under the threshold
-    df.join(frequent, qis, "left_semi")
+    NullSafe.semi(df, frequent, qis)
   }
 
   /** Equivalence-class sizes: one row per distinct QI combination. */

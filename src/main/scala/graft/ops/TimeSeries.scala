@@ -6,9 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** Event-time operators over the `events` table: tumbling-window
   * aggregation and gap-based sessionization. The reference is batch-only
-  * (SURVEY §1), so these are the extension surface that also composes with
-  * Structured Streaming (graft.streaming.EventStream runs the same
-  * windowed-count logic under readStream + watermark).
+  * (SURVEY §1), so these are an extension surface over batch tables.
   *
   * Scale: both operators shuffle once on their natural key (window/user);
   * sessionization's window functions run inside the per-user partition, so
@@ -17,8 +15,7 @@ import org.apache.spark.sql.functions._
   */
 object TimeSeries {
 
-  /** Tumbling-window counts/sums per event_type: the batch twin of the
-    * streaming windowed aggregation. */
+  /** Tumbling-window counts and sums per event_type. */
   def windowAgg(events: DataFrame, every: String = "1 hour"): DataFrame =
     events
       .groupBy(window(col("ts"), every).as("w"), col("event_type"))

@@ -775,8 +775,7 @@ object VectorEventQueries {
         .orderBy("event_type", "bucket")
     }),
 
-    // Tumbling 1-hour windowed aggregation (batch twin of the streaming
-    // path in graft.streaming.EventStream). Window start rendered as a
+    // Tumbling 1-hour windowed aggregation. Window start rendered as a
     // string so timestamp precision never affects the compare.
     "q41_window_agg" -> ((s, dir) => {
       TimeSeries.windowAgg(Tables.events(s, dir), "1 hour")

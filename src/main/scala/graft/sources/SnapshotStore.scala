@@ -24,10 +24,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * HDFS namespace; O_EXCL-shaped locally — the protocol Delta Lake's
   * HDFS LogStore uses for commit files), so two racing committers
   * cannot both publish the same version (the second create fails).
-  * Markers double as an idempotence ledger: callers stash a
-  * replay key (e.g. a streaming batchId) in the marker body and skip
-  * work when it is already committed — see
-  * [[graft.streaming.StreamCdc]].
+  * Markers double as an idempotence ledger: callers stash a replay key
+  * (e.g. a batch id) in the marker body and skip work when it is
+  * already committed.
   *
   * Retained versions are free time travel: [[readVersion]] pins any
   * committed version and [[diffVersions]] audits what a refresh did

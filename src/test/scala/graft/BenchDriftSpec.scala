@@ -80,4 +80,16 @@ class BenchDriftSpec extends AnyFunSuite {
     val current = Map("q296_auc_roc_by_segment" -> 3.54, "q05_anti" -> 0.21)
     assert(Bench.driftCandidates(current, prior) == Seq("q296_auc_roc_by_segment"))
   }
+
+  test("repSpread ignores a slow warm-up rep 1 but flags a slow later rep") {
+    // rep 1 carries JIT, codegen and memo fills: 4x the steady reps
+    val warmUp = Seq(Some(2.0), Some(0.5), Some(0.52), Some(0.5), Some(0.51))
+    assert(Bench.repSpread(warmUp) <= Bench.spreadLimit(0.51))
+    // the same 4x in rep 3 is a host hiccup and is re-measured
+    val hiccup = Seq(Some(0.5), Some(0.52), Some(2.0), Some(0.5), Some(0.51))
+    assert(Bench.repSpread(hiccup) > Bench.spreadLimit(0.51))
+    assert(math.abs(Bench.repSpread(hiccup) - 4.0) < 1e-12)
+    // fewer than two steady reps give no spread
+    assert(Bench.repSpread(Seq(Some(9.0), Some(1.0))) == 1.0)
+  }
 }

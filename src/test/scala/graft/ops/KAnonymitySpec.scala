@@ -24,10 +24,17 @@ class KAnonymitySpec extends SparkSpec {
   }
 
   test("suppressSemiJoin agrees with suppress") {
-    val a = KAnonymity.suppress(fixture, Seq("age", "zip"), 2)
-    val b = KAnonymity.suppressSemiJoin(fixture, Seq("age", "zip"), 2)
-    assert(a.select("id").as[Int].collect().sorted.toSeq ==
-      b.select("id").as[Int].collect().sorted.toSeq)
+    // NULL-QI classes: (NULL,"A") x2 and (NULL,NULL) x2 meet k = 2,
+    // (30,NULL) x1 does not
+    val withNulls = fixture.union(Seq[(Option[Int], Option[String], Int)](
+      (None, Some("A"), 7), (None, Some("A"), 8), (Some(30), None, 9),
+      (None, None, 10), (None, None, 11)).toDF("age", "zip", "id"))
+    val a = KAnonymity.suppress(withNulls, Seq("age", "zip"), 2)
+      .select("id").as[Int].collect().sorted.toSeq
+    val b = KAnonymity.suppressSemiJoin(withNulls, Seq("age", "zip"), 2)
+      .select("id").as[Int].collect().sorted.toSeq
+    assert(a == Seq(1, 2, 3, 4, 5, 7, 8, 10, 11))
+    assert(b == a)
   }
 
   test("groupSizes counts equivalence classes") {

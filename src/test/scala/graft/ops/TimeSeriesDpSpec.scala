@@ -134,14 +134,6 @@ class TimeSeriesDpSpec extends SparkSpec {
     assert(math.abs(got("view") - 103.0) < 1.0)
   }
 
-  test("PrivacyBudget enforces sequential composition") {
-    val b = new PrivacyBudget(1.0)
-    b.charge(0.4); b.charge(0.6)
-    assert(b.remaining < 1e-9)
-    intercept[IllegalArgumentException](b.charge(0.1))
-    intercept[IllegalArgumentException](new PrivacyBudget(1.0).charge(-1.0))
-  }
-
   test("dpCountGaussian is seed-deterministic and unbiased-ish") {
     val a = DifferentialPrivacy.dpCountGaussian(events, Seq("event_type"),
       epsilon = 0.8, delta = 1e-6, seed = 13L).as[(String, Double)].collect().toMap
@@ -194,6 +186,9 @@ class TimeSeriesDpSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       BudgetLedger.init(spark, dir, total = 5.0)
     }
+    // a non-positive amount is refused before it touches the ledger
+    intercept[IllegalArgumentException](BudgetLedger.charge(spark, dir, "neg", -1.0))
+    intercept[IllegalArgumentException](BudgetLedger.charge(spark, dir, "zero", 0.0))
     val r1 = BudgetLedger.charge(spark, dir, "daily-2026-08-14", 0.4)
     assert(math.abs(r1 - 0.6) < 1e-9)
     // "restart": all state is on disk, so a fresh read IS the restart
@@ -212,41 +207,26 @@ class TimeSeriesDpSpec extends SparkSpec {
     assert(math.abs(BudgetLedger.remaining(spark, dir) - 0.1) < 1e-9)
   }
 
-  test("BudgetLedger: Gaussian zCDP accounting matches the in-process ZCdpBudget") {
+  test("BudgetLedger: zCDP rho composes additively and converts to (eps, delta)") {
     val dir = s"/tmp/graft_ledger_z_${System.nanoTime()}"
-    BudgetLedger.init(spark, dir, total = 0.5)
-    BudgetLedger.chargeGaussian(spark, dir, "r1",
-      sensitivity = 1.0, sigma = 2.0)
-    BudgetLedger.chargeGaussian(spark, dir, "r2",
-      sensitivity = 2.0, sigma = 4.0)
-    val mem = new ZCdpBudget(0.5)
-    mem.chargeGaussian(1.0, 2.0); mem.chargeGaussian(2.0, 4.0)
-    assert(math.abs(BudgetLedger.spent(spark, dir) - mem.spent) < 1e-12)
-    assert(math.abs(BudgetLedger.epsilonFor(spark, dir, 1e-6)
-      - mem.epsilonFor(1e-6)) < 1e-12)
-  }
-
-  test("ZCdpBudget: rho composes additively and converts to (eps, delta)") {
-    val sigma = 2.0
-    val b = new ZCdpBudget(totalRho = 0.25)
-    // two Gaussian releases at sensitivity 1, sigma 2: rho = 1/8 each
-    b.chargeGaussian(1.0, sigma)
-    b.chargeGaussian(1.0, sigma)
-    assert(math.abs(b.spent - 0.25) < 1e-12)
-    assert(b.remaining < 1e-12)
-    intercept[IllegalArgumentException](b.chargeGaussian(1.0, sigma))
-    // Bun-Steinke conversion at the spent rho
+    BudgetLedger.init(spark, dir, total = 0.25)
+    intercept[IllegalArgumentException] {
+      BudgetLedger.chargeGaussian(spark, dir, "bad", sensitivity = 1.0, sigma = 0.0)
+    }
+    // rho = Δ²/(2σ²): 1/8 at (1, 2), and again 1/8 at (2, 4)
+    BudgetLedger.chargeGaussian(spark, dir, "r1", sensitivity = 1.0, sigma = 2.0)
+    BudgetLedger.chargeGaussian(spark, dir, "r2", sensitivity = 2.0, sigma = 4.0)
+    assert(math.abs(BudgetLedger.spent(spark, dir) - 0.25) < 1e-12)
+    assert(BudgetLedger.remaining(spark, dir) < 1e-12)
+    // over budget: a third release refuses
+    intercept[IllegalStateException] {
+      BudgetLedger.chargeGaussian(spark, dir, "r3", sensitivity = 1.0, sigma = 2.0)
+    }
+    // Bun-Steinke conversion at the spent rho: ε(δ) = ρ + 2·sqrt(ρ·ln(1/δ))
     val delta = 1e-6
     val expected = 0.25 + 2.0 * math.sqrt(0.25 * math.log(1.0 / delta))
-    assert(math.abs(b.epsilonFor(delta) - expected) < 1e-12)
-    // sqrt-composition advantage: k Gaussian releases cost eps ~ sqrt(k),
-    // not k — the zCDP ledger for 16 releases is well under 16x one
-    // release's pure-eps price at the same sigma
-    val many = new ZCdpBudget(totalRho = 16.0 / 8.0)
-    (1 to 16).foreach(_ => many.chargeGaussian(1.0, sigma))
-    val one = new ZCdpBudget(totalRho = 1.0)
-    one.chargeGaussian(1.0, sigma)
-    assert(many.epsilonFor(delta) < 16.0 * one.epsilonFor(delta))
+    assert(math.abs(BudgetLedger.epsilonFor(spark, dir, delta) - expected) < 1e-12)
+    intercept[IllegalArgumentException](BudgetLedger.epsilonFor(spark, dir, 0.0))
   }
 
   test("rangeJoin equals the naive BETWEEN join, including bucket edges") {
