@@ -134,6 +134,18 @@ class TimeSeriesDpSpec extends SparkSpec {
     assert(math.abs(got("view") - 103.0) < 1.0)
   }
 
+  test("PrivacyBudget enforces sequential composition") {
+    val dir = s"/tmp/graft_ledger_seq_${System.nanoTime()}"
+    BudgetLedger.init(spark, dir, total = 1.0)
+    BudgetLedger.charge(spark, dir, "a", 0.4); BudgetLedger.charge(spark, dir, "b", 0.6)
+    assert(BudgetLedger.remaining(spark, dir) < 1e-9)
+    intercept[IllegalStateException](BudgetLedger.charge(spark, dir, "c", 0.1))
+    // a non-positive amount is refused before it touches the ledger
+    intercept[IllegalArgumentException](BudgetLedger.charge(spark, dir, "neg", -1.0))
+    intercept[IllegalArgumentException](BudgetLedger.charge(spark, dir, "zero", 0.0))
+    assert(BudgetLedger.charges(spark, dir).count() == 2L)
+  }
+
   test("dpCountGaussian is seed-deterministic and unbiased-ish") {
     val a = DifferentialPrivacy.dpCountGaussian(events, Seq("event_type"),
       epsilon = 0.8, delta = 1e-6, seed = 13L).as[(String, Double)].collect().toMap
@@ -186,9 +198,6 @@ class TimeSeriesDpSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       BudgetLedger.init(spark, dir, total = 5.0)
     }
-    // a non-positive amount is refused before it touches the ledger
-    intercept[IllegalArgumentException](BudgetLedger.charge(spark, dir, "neg", -1.0))
-    intercept[IllegalArgumentException](BudgetLedger.charge(spark, dir, "zero", 0.0))
     val r1 = BudgetLedger.charge(spark, dir, "daily-2026-08-14", 0.4)
     assert(math.abs(r1 - 0.6) < 1e-9)
     // "restart": all state is on disk, so a fresh read IS the restart
@@ -207,7 +216,24 @@ class TimeSeriesDpSpec extends SparkSpec {
     assert(math.abs(BudgetLedger.remaining(spark, dir) - 0.1) < 1e-9)
   }
 
-  test("BudgetLedger: zCDP rho composes additively and converts to (eps, delta)") {
+  test("BudgetLedger: Gaussian zCDP accounting matches the in-process ZCdpBudget") {
+    val dir = s"/tmp/graft_ledger_zm_${System.nanoTime()}"
+    BudgetLedger.init(spark, dir, total = 0.5)
+    val releases = Seq((1.0, 2.0), (2.0, 4.0), (1.0, 3.0))
+    releases.zipWithIndex.foreach { case ((d, sigma), i) =>
+      BudgetLedger.chargeGaussian(spark, dir, s"r$i", sensitivity = d, sigma = sigma)
+    }
+    // the same zCDP arithmetic folded in process: ρ = Σ Δ²/(2σ²),
+    // ε(δ) = ρ + 2·sqrt(ρ·ln(1/δ))
+    val rho = releases.map { case (d, sigma) => d * d / (2.0 * sigma * sigma) }.sum
+    val delta = 1e-6
+    assert(math.abs(BudgetLedger.spent(spark, dir) - rho) < 1e-12)
+    assert(math.abs(BudgetLedger.remaining(spark, dir) - (0.5 - rho)) < 1e-12)
+    assert(math.abs(BudgetLedger.epsilonFor(spark, dir, delta)
+      - (rho + 2.0 * math.sqrt(rho * math.log(1.0 / delta)))) < 1e-12)
+  }
+
+  test("ZCdpBudget: rho composes additively and converts to (eps, delta)") {
     val dir = s"/tmp/graft_ledger_z_${System.nanoTime()}"
     BudgetLedger.init(spark, dir, total = 0.25)
     intercept[IllegalArgumentException] {
@@ -227,6 +253,17 @@ class TimeSeriesDpSpec extends SparkSpec {
     val expected = 0.25 + 2.0 * math.sqrt(0.25 * math.log(1.0 / delta))
     assert(math.abs(BudgetLedger.epsilonFor(spark, dir, delta) - expected) < 1e-12)
     intercept[IllegalArgumentException](BudgetLedger.epsilonFor(spark, dir, 0.0))
+    // sqrt-composition advantage: k Gaussian releases cost eps ~ sqrt(k),
+    // not k — the zCDP ledger for 16 releases is well under 16x one
+    // release's eps at the same sigma
+    val many = s"/tmp/graft_ledger_z16_${System.nanoTime()}"
+    BudgetLedger.init(spark, many, total = 16.0 / 8.0)
+    (1 to 16).foreach(i => BudgetLedger.chargeGaussian(spark, many, s"r$i", 1.0, 2.0))
+    val one = s"/tmp/graft_ledger_z1_${System.nanoTime()}"
+    BudgetLedger.init(spark, one, total = 1.0)
+    BudgetLedger.chargeGaussian(spark, one, "r1", 1.0, 2.0)
+    assert(BudgetLedger.epsilonFor(spark, many, delta)
+      < 16.0 * BudgetLedger.epsilonFor(spark, one, delta))
   }
 
   test("rangeJoin equals the naive BETWEEN join, including bucket edges") {
