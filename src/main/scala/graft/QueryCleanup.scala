@@ -27,12 +27,12 @@ import scala.util.Try
   * ORDERING CONTRACT (unchanged): drain a query's hooks only AFTER its
   * result has been fully consumed. Hooks that release plain caches are
   * benign to run early (an unpersisted cache merely recomputes), but
-  * hooks that release localCheckpoint storage (q76 / the corpus pipeline
-  * register these via dedupClustersReleasable) free storage whose
-  * LINEAGE WAS TRUNCATED — after such a hook runs, the associated
-  * DataFrame is unreadable, not merely slower. drain swallows hook
-  * FAILURES so one broken hook can't strand the rest, but it cannot make
-  * an early drain safe.
+  * hooks that release checkpointed storage (the one every iterative
+  * operator's `Truncate.leaves` registers — q76, the corpus pipeline)
+  * free storage whose LINEAGE WAS TRUNCATED — after such a hook runs,
+  * the associated DataFrame is unreadable, not merely slower. drain
+  * swallows hook FAILURES so one broken hook can't strand the rest, but
+  * it cannot make an early drain safe.
   */
 object QueryCleanup {
 

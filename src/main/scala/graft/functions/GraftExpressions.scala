@@ -209,7 +209,7 @@ object TextHashImpl {
 
   /** Cosine similarity with index-ordered double accumulation — the same
     * arithmetic (and therefore bit-identical result) as the declarative
-    * zip_with/aggregate formulation in Similarity.cosineDeclarative.
+    * zip_with/aggregate formulation over Similarity.dot.
     * `aFloat`/`bFloat` select the element reader (array<float> embeddings
     * vs array<double> centroids). Null (boxed) if either array contains a
     * null element; dimension mismatch still throws (a wrong-shape corpus
@@ -752,7 +752,6 @@ object GraftFunctions {
     "graft_normalize_text" -> (args => GraftNormalizeText(args.head)),
     "graft_jaro_winkler" -> (args => GraftJaroWinkler(args(0), args(1))),
     "graft_bpe_count" -> (args => GraftBpeCount(args.head)),
-    "graft_bpe_tokens" -> (args => GraftBpeTokens(args.head)),
     // aggregate: the analyzer wraps AggregateFunction builders in an
     // AggregateExpression automatically
     "graft_topk" -> (args => TopKPairs(args(0), args(1), args(2))))
@@ -786,7 +785,6 @@ object GraftFunctions {
   def jaroWinklerNative(a: Column, b: Column): Column =
     call_function("graft_jaro_winkler", a, b)
   def bpeCountNative(text: Column): Column = call_function("graft_bpe_count", text)
-  def bpeTokensNative(text: Column): Column = call_function("graft_bpe_tokens", text)
 }
 
 /** SparkSessionExtensions injection point (spark.sql.extensions). */

@@ -70,20 +70,15 @@ object Dedup {
   val HashA: Seq[Long] = graft.functions.TextHashImpl.Dedup16.HashA.toSeq
   val HashB: Seq[Long] = graft.functions.TextHashImpl.Dedup16.HashB.toSeq
 
-  /** MinHash signature (array of NumHashes longs) of an element-set array
-    * column, computed per-row: sig[j] = min over elements of
-    * h_j(phash(elem)). Pure expression tree — no shuffle.
+  /** MinHash signature (array of NumHashes longs) from pre-hashed
+    * elements: sig[j] = min over elements of h_j(hash). Arithmetic only —
+    * md5 already paid once; pure expression tree, no shuffle.
     *
-    * Callers pass word n-gram shingles, NOT unigram token sets: over a
+    * Callers hash word n-gram shingles, NOT unigram token sets: over a
     * small vocabulary every document covers most unigrams, so unigram
     * MinHash collides on everything and the LSH candidate set degenerates
     * to O(n²). Shingle space grows as vocab^n and keeps unrelated
-    * documents apart. */
-  def minhashSignature(elems: Column): Column =
-    minhashFromHashes(transform(elems, t => phashMod(t)))
-
-  /** Signature from pre-hashed elements (arithmetic only — md5 already
-    * paid once). IMPORTANT for performance: pass an ATTRIBUTE (a column
+    * documents apart. IMPORTANT for performance: pass an ATTRIBUTE (a column
     * materialized by an earlier projection), not an inline expression —
     * higher-order lambdas are interpreted, and any non-attribute child is
     * re-evaluated once per outer-lambda element (16× here). */
@@ -102,15 +97,11 @@ object Dedup {
       struct(b.as("band_idx"),
         md5(concat_ws(",", slice(sig, b * BandRows + 1, lit(BandRows)))).as("band_key")))
 
-  /** Exact Jaccard similarity of two token-set arrays (both distinct). */
-  def jaccard(a: Column, b: Column): Column =
-    round(size(array_intersect(a, b)).cast("double")
-      / size(array_union(a, b)).cast("double"), 6)
-
-  /** [[jaccard]] for SORTED-distinct arrays (every shingle relation here —
-    * [[GraftFunctions.shinglesNative]] emits TreeSet order): one compiled
-    * merge scan instead of two hash-set builds, bit-identical output
-    * (DedupSpec pins it against the builtin form). The verify join over
+  /** Exact Jaccard similarity (6 dp) of two SORTED-distinct arrays (every
+    * shingle relation here — [[GraftFunctions.shinglesNative]] emits
+    * TreeSet order): one compiled merge scan instead of two hash-set
+    * builds, bit-identical to the builtin array_intersect/array_union form
+    * (DedupSpec pins it against that form). The verify join over
     * banded candidates is the near-dup pipeline's per-pair hot loop — at
     * the 10× stress the candidate surface is output-quadratic by
     * construction, so per-pair cost is the wall clock. */
@@ -128,20 +119,12 @@ object Dedup {
     * shuffle and its rows are ~40 bytes regardless of document size; token
     * arrays enter a shuffle only on the candidate side, once per id, never
     * replicated per band.
+    *
+    * The two staged relations are unpersisted by a hook registered with
+    * [[graft.QueryCleanup]] under the caller's query scope.
     */
   def minhashLsh(df: DataFrame, idCol: String, textCol: String,
                  shingleN: Int, threshold: Double): DataFrame = {
-    val (pairs, release) = minhashLshReleasable(df, idCol, textCol,
-      shingleN, threshold)
-    graft.QueryCleanup.register(release)
-    pairs
-  }
-
-  /** [[minhashLsh]] returning its cache-release hook instead of handing
-    * it to [[graft.QueryCleanup]] — for composite owners (the corpus
-    * pipeline) whose own unpersist() must account for every cache. */
-  def minhashLshReleasable(df: DataFrame, idCol: String, textCol: String,
-                           shingleN: Int, threshold: Double): (DataFrame, () => Unit) = {
     // Staged projections: tokens -> shingles -> element hashes -> signature.
     // Each stage materializes a column so the next stage's lambdas read an
     // attribute; collapsing them into one expression would re-split the
@@ -175,7 +158,8 @@ object Dedup {
       .select(col("id_a"), col("id_b"),
         jaccardSorted(col("__toks_a"), col("__toks_b")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-    (pairs, () => { toks.unpersist(); banded.unpersist(); () })
+    graft.QueryCleanup.register(() => { toks.unpersist(); banded.unpersist(); () })
+    pairs
   }
 
   /** Shingle relation (__id, __toks) — the staged projection feeding both
@@ -216,8 +200,8 @@ object Dedup {
         partitionCols)
       .select("id_a", "id_b")
     val toks = shingleToks(df, idCol, textCol, shingleN)
-    // staged: both self-join sides read the band relation (r16 — the
-    // minhashLshReleasable rationale)
+    // staged: both self-join sides read the band relation (r16 —
+    // minhashLsh's staging rationale)
     val banded = bandedKeys(toks)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     graft.QueryCleanup.register(() => { banded.unpersist(); () })
@@ -269,7 +253,7 @@ object Dedup {
     // staged (r16): toks feeds banding + two verify join-backs; banded
     // feeds both self-join sides; cand feeds the verify branch AND the
     // candidate count — unstaged, each extra reference re-runs the whole
-    // chain beneath it (the minhashLshReleasable rationale)
+    // chain beneath it (minhashLsh's staging rationale)
     val toks = shingleToks(df, idCol, textCol, shingleN)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val banded = bandedKeys(toks)
@@ -332,7 +316,7 @@ object Dedup {
     val spark = df.sparkSession
     import spark.implicits._
     // staged (r16): toks feeds banding + two verify join-backs, banded
-    // feeds both self-join sides (the minhashLshReleasable rationale)
+    // feeds both self-join sides (minhashLsh's staging rationale)
     val toks = shingleToks(df, idCol, textCol, shingleN)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val banded = bandedKeys(toks)
@@ -374,7 +358,7 @@ object Dedup {
     GraftFunctions.ensureRegistered(df.sparkSession)
     // staged (r16): toks feeds sigs + banding + two verify join-backs,
     // sigs feeds both estimate join sides, banded both self-join sides
-    // (the minhashLshReleasable rationale)
+    // (minhashLsh's staging rationale)
     val toks = shingleToks(df, idCol, textCol, shingleN)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sigs = toks
@@ -453,7 +437,7 @@ object Dedup {
     GraftFunctions.ensureRegistered(a.sparkSession)
     // staged (r16): each side's shingle relation feeds its banding AND
     // its verify join-back — unstaged, the tokenize+shingle kernel runs
-    // twice per side (the minhashLshReleasable rationale)
+    // twice per side (minhashLsh's staging rationale)
     val ta = shingleToks(a, idCol, textCol, shingleN)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val tb = shingleToks(b, idCol, textCol, shingleN)
@@ -696,35 +680,6 @@ object Dedup {
     fresh.join(firsts, Seq(idCol), "left_semi").drop("__h")
   }
 
-  /** [[ingestDedup]] with a Bloom-filter pre-pass: a compact sketch of
-    * the corpus' content hashes broadcasts to every executor, and only
-    * batch rows the sketch says MIGHT be seen pay the exact anti-join —
-    * definite-negatives (the vast majority of a typical crawl batch)
-    * skip it entirely. False positives are resolved by the exact join,
-    * so the result is IDENTICAL to [[ingestDedup]] (spec-asserted); the
-    * sketch only routes. `expectedItems`/`fpp` size the sketch (~1.2 GB
-    * per 10^9 docs at 1% fpp — broadcastable where the corpus itself
-    * never is). EAGER: building the sketch is one aggregation job.
-    * The membership probe is a Scala UDF by necessity: Spark's native
-    * bloom expressions (BloomFilterMightContain) are internal-only, and
-    * the probe is a cheap per-row bit test off the hot codegen path. */
-  def ingestDedupBloom(batch: DataFrame, corpus: DataFrame, idCol: String,
-                       textCol: String, expectedItems: Long,
-                       fpp: Double = 0.01): DataFrame = {
-    val bloom = corpus.stat.bloomFilter(md5(col(textCol).cast("string")), expectedItems, fpp)
-    val spark = batch.sparkSession
-    val bloomBc = spark.sparkContext.broadcast(bloom)
-    val mightBeSeen = udf((h: String) => bloomBc.value.mightContainString(h))
-    val hashed = batch.withColumn("__h", md5(col(textCol).cast("string")))
-    val definiteNew = hashed.filter(!mightBeSeen(col("__h")))
-    val residual = hashed.filter(mightBeSeen(col("__h")))
-      .join(corpus.select(md5(col(textCol).cast("string")).as("__h")).distinct(),
-        Seq("__h"), "left_anti")
-    val fresh = definiteNew.unionByName(residual)
-    val firsts = fresh.groupBy(col("__h")).agg(min(col(idCol)).as(idCol)).select(idCol)
-    fresh.join(firsts, Seq(idCol), "left_semi").drop("__h")
-  }
-
   /** Connected components over a near-duplicate PAIR list: every document
     * in a pair gets a `cluster` label = the smallest doc id transitively
     * reachable through pairs. This is the canonicalization step after
@@ -748,36 +703,29 @@ object Dedup {
     * aggregation; the hooked table is checkpointed before the self-join
     * so both sides read materialized storage instead of recomputing the
     * hook. Labels are eagerly localCheckpointed per round to truncate
-    * the growing lineage, and each superseded checkpoint is unpersisted
-    * as soon as its successor is materialized — a run holds at most
-    * three label-sized tables at once.
+    * the growing lineage, and each superseded checkpoint is freed as soon
+    * as its successor is materialized — a run holds at most three
+    * label-sized tables at once.
     * EAGER: runs the iteration loop (one small job per round) at call
     * time. Output: (id, cluster) for documents appearing in >= 1 pair;
     * absent documents are implicitly their own singleton cluster.
     *
-    * The RETURNED DataFrame is backed by the final checkpoint's storage;
-    * it is released by the driver's ContextCleaner once the result is
-    * unreferenced. Callers needing deterministic release (long-lived
-    * sessions, pipelines) use [[dedupClustersReleasable]].
+    * The RETURNED DataFrame is backed by the final checkpoint's storage,
+    * held in [[Truncate.leaves]]: it is freed by the hook registered under
+    * the caller's query scope, once [[graft.QueryCleanup]] drains it. The
+    * edge list is freed as soon as the loop ends.
     */
   def dedupClusters(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
-                    maxIterations: Int = 20): DataFrame =
-    dedupClustersReleasable(pairs, idA, idB, maxIterations)._1
-
-  /** [[dedupClusters]] plus a release thunk that unpersists the final
-    * label checkpoint — call it once the labels (and every plan derived
-    * from them) have been fully consumed. */
-  def dedupClustersReleasable(pairs: DataFrame, idA: String = "id_a",
-                              idB: String = "id_b",
-                              maxIterations: Int = 20): (DataFrame, () => Unit) = {
+                    maxIterations: Int = 20): DataFrame = {
     val edges = Truncate(pairs.select(col(idA).as("src"), col(idB).as("dst"))
       .unionByName(pairs.select(col(idB).as("src"), col(idA).as("dst")))
       .distinct())
-    var labels = Truncate(edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")))
+    val leaves = Truncate.leaves()
+    var labels = leaves.keep(Truncate(edges.select(col("src").as("id")).distinct()
+      .withColumn("label", col("id"))))
     var converged = false
     var i = 0
-    while (!converged && i < maxIterations) {
+    try while (!converged && i < maxIterations) {
       val nbrMin = edges
         .join(labels.select(col("id").as("dst"), col("label").as("__nl")), Seq("dst"))
         .groupBy(col("src").as("id")).agg(min("__nl").as("__nmin"))
@@ -791,9 +739,9 @@ object Dedup {
       // (r17, the kCore observed-metric pattern — one fewer serial
       // driver stall per round; the loop is round-count × job-floor
       // bound, not data bound).
-      val hooked = Truncate(labels.join(nbrMin, Seq("id"), "left")
+      val hooked = leaves.keep(Truncate(labels.join(nbrMin, Seq("id"), "left")
         .select(col("id"), col("label").as("__old"),
-          least(col("label"), coalesce(col("__nmin"), col("label"))).as("label")))
+          least(col("label"), coalesce(col("__nmin"), col("label"))).as("label"))))
       // shortcut: label(v) <- min(label(v), label(label(v))). Left join —
       // every label value is a node id present in the table, but the
       // coalesce keeps the plan total rather than proving it to Catalyst.
@@ -804,21 +752,17 @@ object Dedup {
           least(col("label"), coalesce(col("__ll"), col("label"))).as("label"),
           col("__old")))(
         sum(when(col("label") =!= col("__old"), 1L).otherwise(0L)).as("changed"))
-      Truncate.release(hooked) // round-local; next is materialized
-      Truncate.release(labels) // superseded; next is materialized
-      labels = next.drop("__old")
+      // next is materialized: the round's hooked table and the
+      // superseded labels go
+      labels = leaves.supersede(next).drop("__old")
       converged = m("changed") == 0L
       i += 1
-    }
-    Truncate.release(edges)
-    if (!converged) {
-      Truncate.release(labels)
+    } finally Truncate.release(edges)
+    if (!converged)
       throw new IllegalStateException(
         s"dedupClusters did not converge in $maxIterations pointer-jumping " +
           "rounds (covers diameters ~2^rounds) — raise maxIterations")
-    }
-    (labels.select(col("id"), col("label").as("cluster")),
-      () => Truncate.release(labels))
+    labels.select(col("id"), col("label").as("cluster"))
   }
 
   /** Connected components via ALTERNATING LARGE-STAR / SMALL-STAR — the
@@ -853,20 +797,14 @@ object Dedup {
     * the whole component as direct neighbors — which the map-side
     * partial min absorbs on the aggregation side and AQE skew-join
     * splitting absorbs on the join side. Checkpoint discipline matches
-    * [[dedupClustersReleasable]]: the edge list is re-materialized per
-    * round, superseded checkpoints are unpersisted immediately, and a
-    * run holds at most two edge tables at once.
+    * [[dedupClusters]]: the edge list is re-materialized per round,
+    * superseded checkpoints are freed as soon as their successor is
+    * materialized, and the final edge list (the returned labels read it)
+    * is freed at the caller's query cleanup.
     */
   def dedupClustersStar(pairs: DataFrame, idA: String = "id_a",
                         idB: String = "id_b",
-                        maxIterations: Int = 50): DataFrame =
-    dedupClustersStarReleasable(pairs, idA, idB, maxIterations)._1
-
-  /** [[dedupClustersStar]] plus a release thunk for the final checkpoint
-    * — call it once the labels have been fully consumed. */
-  def dedupClustersStarReleasable(pairs: DataFrame, idA: String = "id_a",
-                                  idB: String = "id_b",
-                                  maxIterations: Int = 50): (DataFrame, () => Unit) = {
+                        maxIterations: Int = 50): DataFrame = {
     // Row counts are OBSERVED during each checkpoint's own
     // materialization ([[Truncate.observed]]) instead of costing a
     // separate count job per table per round; the previous round's count
@@ -875,12 +813,14 @@ object Dedup {
       val (cp, m) = Truncate.observed(df)(count(lit(1)).as("n"))
       (cp, m("n"))
     }
+    val leaves = Truncate.leaves()
     // canonical hi -> lo orientation, self-pairs dropped
     var (edges, edgesN) = observedCount(pairs
       .select(greatest(col(idA), col(idB)).as("hi"),
         least(col(idA), col(idB)).as("lo"))
       .filter(col("hi") =!= col("lo"))
       .distinct())
+    leaves.keep(edges)
     var converged = false
     var i = 0
     while (!converged && i < maxIterations) {
@@ -890,10 +830,10 @@ object Dedup {
         .unionByName(edges.select(col("lo").as("u"), col("hi").as("v")))
       val mins = nbrs.groupBy("u").agg(min("v").as("__mn"))
         .select(col("u"), least(col("u"), col("__mn")).as("m"))
-      val large = Truncate(nbrs.filter(col("v") > col("u"))
+      val large = leaves.keep(Truncate(nbrs.filter(col("v") > col("u"))
         .join(mins, Seq("u"))
         .select(col("v").as("hi"), col("m").as("lo"))
-        .distinct())
+        .distinct()))
       // small-star on the canonical orientation: per hi, every smaller
       // neighbor and hi itself link to the smallest neighbor
       val smins = large.groupBy("hi").agg(min("lo").as("m"))
@@ -902,29 +842,26 @@ object Dedup {
         .filter(col("hi") =!= col("lo"))
         .unionByName(smins.select(col("hi"), col("m").as("lo")))
         .distinct())
-      Truncate.release(large) // round-local; small is materialized
       // fixpoint = the round rewired nothing: same distinct-set size and
       // an empty one-sided difference imply set equality (the exceptAll
       // probe only runs when the counts already match — near fixpoint)
       converged = smallN == edgesN &&
         small.exceptAll(edges).take(1).isEmpty
-      Truncate.release(edges)
-      edges = small
+      // small is materialized: the round's large table and the
+      // superseded edge list go
+      edges = leaves.supersede(small)
       edgesN = smallN
       i += 1
     }
-    if (!converged) {
-      Truncate.release(edges)
+    if (!converged)
       throw new IllegalStateException(
         s"dedupClustersStar did not converge in $maxIterations alternating " +
           "star rounds (worst case O(log^2 n)) — raise maxIterations")
-    }
     // star forest: non-roots appear exactly once on the hi side pointing
     // at the component min; roots appear only on the lo side
-    val labels = edges.select(col("hi").as("id"), col("lo").as("cluster"))
+    edges.select(col("hi").as("id"), col("lo").as("cluster"))
       .unionByName(
         edges.select(col("lo").as("id"), col("lo").as("cluster")).distinct())
-    (labels, () => Truncate.release(edges))
   }
 
   /** C4-style PARAGRAPH-level exact dedup: split each document on
@@ -1268,39 +1205,22 @@ object Dedup {
     * tokenize+shingle+hash kernel chain over the full corpus (measured
     * 2.3× end-to-end at sf0.1).
     *
-    * CACHE OWNERSHIP (who unpersists the staging table, per call path):
-    *  - [[ngramJaccardPairsPrefixReleasable]] — the caller: it receives
-    *    the release thunk and runs it after fully consuming the result.
-    *    Harness-driven queries (q64) register that thunk with
-    *    [[graft.QueryCleanup]], whose ordering contract (drain only
-    *    after full consumption) is stricter than this cache needs —
-    *    lineage is KEPT, so an early release merely recomputes, it never
-    *    strands the DataFrame.
-    *  - this method and the [[ngramJaccardPairs]] dispatcher — nobody
-    *    eagerly: the persist stays registered until session end. That is
-    *    a deliberate lean on Spark's LRU: MEMORY_AND_DISK blocks are
-    *    evictable under pressure, so the worst case is recomputation,
-    *    not OOM. A session running many direct dedup builds should call
-    *    the Releasable form (or `spark.catalog.clearCache()`). */
+    * The staging table (and the scoped route's degenerate-key leaf) is
+    * held in [[Truncate.leaves]], whose hook — registered under the
+    * caller's query scope — frees both when [[graft.QueryCleanup]]
+    * drains it. Lineage is kept, so an early drain merely recomputes. */
   def ngramJaccardPairsPrefix(df: DataFrame, idCol: String, textCol: String,
                               n: Int, threshold: Double,
-                              partitionCols: Seq[String] = Nil): DataFrame =
-    ngramJaccardPairsPrefixReleasable(df, idCol, textCol, n, threshold, partitionCols)._1
-
-  /** [[ngramJaccardPairsPrefix]] plus the release thunk that unpersists
-    * the shingle-hash staging table — run it after consuming the result
-    * (safe to run early: lineage is kept, blocks recompute). */
-  def ngramJaccardPairsPrefixReleasable(df: DataFrame, idCol: String, textCol: String,
-                                        n: Int, threshold: Double,
-                                        partitionCols: Seq[String] = Nil): (DataFrame, () => Unit) = {
+                              partitionCols: Seq[String] = Nil): DataFrame = {
     val sh = shingleHashes(df, idCol, textCol, n, partitionCols)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val leaves = Truncate.leaves(sh)
     val perScope = sh
       .select(partitionCols.map(col) :+ explode(col("__sh")).as("__s"): _*)
       .groupBy(partitionCols.map(col): _*)
       .agg((count(lit(1)).cast("double") / approx_count_distinct(col("__s")))
         .as("__ratio"))
-    val result = if (partitionCols.isEmpty) {
+    if (partitionCols.isEmpty) {
       // unscoped: one global statistic, one topology
       perScope.head().getAs[Any](0) match {
         case null => countTopology(sh, threshold, partitionCols) // no shingles
@@ -1319,13 +1239,11 @@ object Dedup {
       // (one row) runs eagerly here; the key set itself stays
       // distributed and is checkpointed driver-free so the two joins
       // below don't each re-run the stats aggregation.
-      val degenKeys = Truncate(perScope
+      val degenKeys = leaves.keep(Truncate(perScope
         .filter(col("__ratio") > MaxMeanPostingFreq)
-        .select(partitionCols.map(col): _*))
-      if (degenKeys.isEmpty) {
-        Truncate.release(degenKeys) // empty; nothing routes through it
-        prefixTopology(sh, threshold, partitionCols)
-      } else {
+        .select(partitionCols.map(col): _*)))
+      if (degenKeys.isEmpty) prefixTopology(sh, threshold, partitionCols)
+      else {
         val dk = broadcast(
           degenKeys.select(partitionCols.map(c => col(c).as(s"__dk_$c")): _*))
         // <=> so a scope keyed by NULL still routes (plain = would drop it)
@@ -1335,7 +1253,6 @@ object Dedup {
             prefixTopology(sh.join(dk, cond, "left_anti"), threshold, partitionCols))
       }
     }
-    (result, () => { sh.unpersist(); () })
   }
 
   /** Mean shingle document-frequency (postings / distinct shingles) above

@@ -75,18 +75,6 @@ object Generalization {
     })
   }
 
-  /** Explicit-edge binning with string labels, as a codegen-friendly CASE
-    * chain. `edges` has length labels.size + 1; intervals are
-    * (edges(i), edges(i+1)] like pd.cut's default right-closed intervals.
-    */
-  def labeledBin(c: Column, edges: Seq[Double], labels: Seq[String]): Column = {
-    require(edges.size == labels.size + 1, "need one more edge than labels")
-    val first = when(c <= edges(1) && c > edges.head, labels.head)
-    labels.indices.tail.foldLeft(first) { (acc, i) =>
-      acc.when(c <= edges(i + 1) && c > edges(i), labels(i))
-    }
-  }
-
   /** Per-group min-max generalization: every QI value replaced by the
     * "min-max" range string of its group (clustering-anon.py:51). One
     * aggregate per group (single shuffle) then a broadcast join back — the

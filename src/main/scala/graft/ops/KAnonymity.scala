@@ -60,11 +60,12 @@ object KAnonymity {
 
   /** Records belonging to at-risk groups, with the group size attached
     * (true inner join — the right side carries the `grp_cnt` payload;
-    * Archived/data-anonymity.py:70).
+    * Archived/data-anonymity.py:70). The join is null-safe: a NULL-QI
+    * class below k is at risk like any other.
     */
   def vulnerableRecords(df: DataFrame, qis: Seq[String], k: Int): DataFrame =
     // at-risk groups are MOST groups when QIs are fine-grained (the
     // audit's common case) — forcing a broadcast would OOM the driver;
     // let the planner choose
-    df.join(atRiskGroups(df, qis, k), qis, "inner")
+    NullSafe.join(df, atRiskGroups(df, qis, k), qis, "inner")
 }

@@ -55,16 +55,6 @@ object LDiversity {
     semiJoinDiverse(df, qis, groupDiversity(df, qis, sensitive)
       .filter(col("l_distinct") >= l))
 
-  /** ENTROPY l-diversity suppression: keep only rows whose class's
-    * sensitive entropy is at least ln(l). Strictly stronger than the
-    * distinct form at the same l (entropy >= ln(l) forces >= l distinct
-    * values, but not vice versa). `l` is a Double — fractional l is
-    * meaningful here (the paper's recommendation when strict integer l is
-    * unattainable for a skewed global distribution). */
-  def suppressEntropy(df: DataFrame, qis: Seq[String], sensitive: String, l: Double): DataFrame =
-    semiJoinDiverse(df, qis, groupDiversity(df, qis, sensitive)
-      .filter(col("entropy") >= math.log(l)))
-
   /** <=> semi-join: groupBy emits NULL-keyed classes, and a plain `=`
     * semi-join would suppress every row of a NULL-QI class even when that
     * class IS diverse (SQL null-equality never matches). */

@@ -557,21 +557,15 @@ object Multimodal {
                   (implicit spark: SparkSession): DataFrame =
     nearDupFromHashes(perceptualHash(media).toDF(), maxHamming)
 
-  /** [[phashNearDup]] over the DCT hash — same banded topology, the
-    * edit-robust fingerprint ([[dctHash64]]). */
-  def dctNearDup(media: DataFrame, maxHamming: Int = 3)
-                (implicit spark: SparkSession): DataFrame =
-    nearDupFromHashes(dctHash(media).toDF(), maxHamming)
-
   /** Compound keys holding more than this many DISTINCT hashes are "hot"
     * and get a third pigeonhole level ([[nearDupFromHashes]]) before the
     * candidate self-join — the knob trading one broadcast + explode
     * against a |bucket|² candidate surface. */
   val HotKeyThreshold: Int = 1000
 
-  /** The banded near-dup core over any (doc_id, phash) table — shared
-    * by the aHash and DCT paths; see [[phashNearDup]]'s scaladoc for
-    * the two structural defenses and the multi-index scheme.
+  /** The banded near-dup core over any (doc_id, phash) table — the aHash
+    * path [[phashNearDup]] runs on it; see its scaladoc for the two
+    * structural defenses and the multi-index scheme.
     *
     * THIRD pigeonhole level for hot keys: low-entropy corpora leave some
     * compound keys holding thousands of distinct hashes (a near-constant

@@ -192,8 +192,7 @@ object RecordLinkage {
     val links = scored
       .filter(col("fs_score") >= upper)
       .select(col(idA), col(idB))
-    val (labels, release) = Dedup.dedupClustersStarReleasable(links, idA, idB)
-    graft.QueryCleanup.register(release)
+    val labels = Dedup.dedupClustersStar(links, idA, idB)
     val ids = a.select(col(idA).as("id"))
       .unionByName(b.select(col(idB).as("id")))
       .distinct()

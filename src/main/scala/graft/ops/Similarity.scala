@@ -37,15 +37,6 @@ object Similarity {
     aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (s, v) => s + v)
 
-  /** L2 norm. */
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
-  /** Declarative cosine (zip_with + aggregate). Interpreted lambdas —
-    * kept as the cross-check reference for the native kernel; ops use
-    * [[cosine]] which compiles to GraftCosine. */
-  def cosineDeclarative(a: Column, b: Column): Column =
-    round(dot(a, b) / (norm(a) * norm(b)), 6)
-
   /** Cosine similarity, 6 dp, computed by the ORDER-FREE integer-micro
     * kernel (GraftCosineMicro8): per-term dot and squared-norm terms
     * quantize to round(t·1e8) longs, integer-sum (associative — no
@@ -914,33 +905,6 @@ object Similarity {
         coalesce(col("count_a"), lit(0L)).as("count_a"),
         coalesce(col("count_b"), lit(0L)).as("count_b"))
     DataQuality.psiTermsFromCounts(counts, nlist)
-  }
-
-  /** The retrain [[ivfPqOccupancyDrift]]'s gate calls for: fit a FRESH
-    * coarse quantizer + PQ codebooks on the current corpus, re-encode,
-    * and commit new versions of all three index tables (the store
-    * keeps prior versions time-travelable, so in-flight readers finish
-    * against the artifacts they loaded). Returns the new `codes`
-    * version — pass it as `baseVersion` to reset the drift baseline:
-    * right after a retrain the monitor reads 0 by construction, and
-    * subsequent ingests drift against the NEW geometry.
-    *
-    * Cost is the honest one — O(sample) Lloyd iterations + O(corpus)
-    * re-encode — which is exactly why it hides behind a monitor
-    * instead of running per ingest. */
-  def retrainIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-                        dir: String, corpus: DataFrame, idCol: String,
-                        vecCol: String, nlist: Int, m: Int = 8,
-                        ksub: Int = 16, seed: Long = 42L,
-                        sampleFraction: Double = 1.0,
-                        meta: String = "retrain"): Long = {
-    val pq = trainPq(corpus, vecCol, m, ksub, seed)
-    val ivf = trainIvf(corpus, idCol, vecCol, nlist, seed, sampleFraction)
-    saveIvfPqIndex(
-      encodeWithStoredIndex(corpus, idCol, vecCol, ivf.centroids, pq),
-      ivf.centroids, pq, dir, meta)
-    graft.sources.SnapshotStore.committedVersion(spark, s"$dir/codes")
-      .getOrElse(throw new IllegalStateException(s"retrain commit missing under $dir"))
   }
 
   /** [[knnIvfPq]] with exact refinement: the cell-pruned ADC scan

@@ -316,16 +316,6 @@ object TimeSeries {
       .drop("__nb", "__burst", "__rn")
   }
 
-  /** Per-session rollup: bounds, event count, value sum. */
-  def sessionStats(events: DataFrame, gapMinutes: Int): DataFrame =
-    sessionize(events, gapMinutes)
-      .groupBy(col("user_id"), col("session_seq"))
-      .agg(
-        min(col("ts")).as("session_start"),
-        max(col("ts")).as("session_end"),
-        count(lit(1)).as("n_events"),
-        round(sum("value"), 2).as("sum_value"))
-
   /** Time-weighted average per series: each observation holds until the
     * next one, so TWA = Σ vᵢ·(tᵢ₊₁−tᵢ) / (t_n − t₁) — the correct mean
     * for irregularly-sampled state (a gauge read on change, a price

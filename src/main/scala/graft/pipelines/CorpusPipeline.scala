@@ -1,5 +1,6 @@
 package graft.pipelines
 
+import graft.QueryCleanup
 import graft.ops.{Dedup, Packing, Sampling, TextAnalysis}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -82,14 +83,19 @@ object CorpusPipeline {
 
     // 4: near-dup canonicalization — LSH pairs, CC labels, keep min-id.
     // dedupClusters is an eager driver loop; computing the pairs populates
-    // the `exact` cache even in lazy mode.
-    val (pairs, releaseToks) = Dedup.minhashLshReleasable(
-      exact, idCol, textCol, shingleN, nearDupThreshold)
-    val (clusters, releaseClusters) = Dedup.dedupClustersReleasable(pairs)
+    // the `exact` cache even in lazy mode. Each operator registers its
+    // frees under its own nested cleanup scope, so the PIPELINE decides
+    // when each is drained (the spec's no-leaked-caches contract).
+    val tag = java.util.UUID.randomUUID.toString
+    val lshScope = s"corpus-lsh-$tag"
+    val ccScope = s"corpus-cc-$tag"
+    val pairs = QueryCleanup.scoped(lshScope)(
+      Dedup.minhashLsh(exact, idCol, textCol, shingleN, nearDupThreshold))
+    val clusters = QueryCleanup.scoped(ccScope)(Dedup.dedupClusters(pairs))
+    val releaseClusters = () => QueryCleanup.drain(ccScope)
     // the CC loop above consumed the pairs eagerly; the shingle cache
-    // has served all its consumers and the PIPELINE owns its release
-    // (the spec's no-leaked-caches contract)
-    releaseToks()
+    // has served all its consumers
+    QueryCleanup.drain(lshScope)
     val losers = clusters.filter(col("id") =!= col("cluster"))
       .select(col("id").as(idCol))
     val near = exact.join(losers, Seq(idCol), "left_anti")

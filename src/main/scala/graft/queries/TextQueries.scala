@@ -202,10 +202,8 @@ object TextQueries {
     // verifies this and would fall back to the count topology otherwise.
     // The J >= 0.8 pair set is identical for n in 2..4 on this corpus.
     "q64_ngram_prefix" -> ((s, dir) => {
-      val (pairs, release) = Dedup.ngramJaccardPairsPrefixReleasable(
+      Dedup.ngramJaccardPairsPrefix(
         Tables.documents(s, dir), "doc_id", "text", n = 3, threshold = 0.8)
-      graft.QueryCleanup.register(release)
-      pairs
         .select("id_a", "id_b", "jaccard")
         .orderBy("id_a", "id_b")
     }),
@@ -336,9 +334,7 @@ object TextQueries {
     "q76_dedup_clusters" -> ((s, dir) => {
       val pairs = Dedup.minhashLsh(Tables.documents(s, dir), "doc_id", "text",
         shingleN = 2, threshold = 0.3)
-      val (clusters, release) = Dedup.dedupClustersReleasable(pairs)
-      graft.QueryCleanup.register(release)
-      clusters.orderBy("id")
+      Dedup.dedupClusters(pairs).orderBy("id")
     }),
 
     // Same connected-components problem as q76, solved with the
@@ -348,9 +344,7 @@ object TextQueries {
     "q97_dedup_clusters_star" -> ((s, dir) => {
       val pairs = Dedup.minhashLsh(Tables.documents(s, dir), "doc_id", "text",
         shingleN = 2, threshold = 0.3)
-      val (clusters, release) = Dedup.dedupClustersStarReleasable(pairs)
-      graft.QueryCleanup.register(release)
-      clusters.orderBy("id")
+      Dedup.dedupClustersStar(pairs).orderBy("id")
     }),
 
     // PII scrubbing (emails/URLs/IPs/phones -> typed tags). The synthetic
@@ -549,8 +543,7 @@ object TextQueries {
     "q130_cluster_representatives" -> ((s, dir) => {
       val d = Tables.documents(s, dir)
       val pairs = Dedup.minhashLsh(d, "doc_id", "text", shingleN = 2, threshold = 0.3)
-      val (clusters, release) = Dedup.dedupClustersReleasable(pairs)
-      graft.QueryCleanup.register(release)
+      val clusters = Dedup.dedupClusters(pairs)
       val q = d.select(col("doc_id").as("id"),
         TextAnalysis.qualityScore(col("text"), col("n_chars")).as("quality"))
       clusters.join(q, "id")
@@ -1124,8 +1117,7 @@ object TextQueries {
       val d = Tables.documents(s, dir)
       val pairs = Dedup.minhashLsh(d, "doc_id", "text",
         shingleN = 2, threshold = 0.3)
-      val (clusters, release) = Dedup.dedupClustersReleasable(pairs)
-      graft.QueryCleanup.register(release)
+      val clusters = Dedup.dedupClusters(pairs)
       clusters.groupBy(col("cluster")).agg(count(lit(1)).as("__sz"))
         .groupBy(col("__sz").as("cluster_size"))
         .agg(count(lit(1)).as("n_clusters"))

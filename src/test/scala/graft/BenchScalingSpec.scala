@@ -11,13 +11,13 @@ class BenchScalingSpec extends SparkSpec {
   test("tradePairs: at k = 12 no supplier id of copy i is a customer id of copy i + 10") {
     // raw supplier and customer ids overlap (1..3 on both sides), so a
     // supplier offset of fewer than k copy shifts collides across copies
-    val dir = java.nio.file.Files.createTempDirectory("graft-scaling-spec")
+    val dir = tempDir("graft-scaling-spec")
     (1L to 6L).map(i => (i, (i % 3) + 1)).toDF("l_orderkey", "l_suppkey")
       .write.parquet(s"$dir/lineitem.parquet")
     (1L to 6L).map(i => (i, ((i + 1) % 3) + 1)).toDF("o_orderkey", "o_custkey")
       .write.parquet(s"$dir/orders.parquet")
     val k = 12
-    val pairs = BenchScaling.tradePairs(spark, dir.toString, k).cache()
+    val pairs = BenchScaling.tradePairs(spark, dir, k).cache()
     val supp = pairs.select(col("supp")).as[Long].collect().toSet
     val cust = pairs.select(col("cust")).as[Long].collect().toSet
     pairs.unpersist()

@@ -694,7 +694,7 @@ class PlanShapeSpec extends SparkSpec {
     // the class table materializes as a truncated leaf while the query is
     // built, so the returned plan reads orders once (the semi-join probe)
     // beside that leaf
-    val dir = java.nio.file.Files.createTempDirectory("graft-q26-plan")
+    val dir = tempDir("graft-q26-plan")
     // 15 classes of 20 rows, each spread evenly over the 4 price buckets;
     // a 3-row class all in the lowest bucket (fails t) and a 2-row class
     // (fails k = 3)
@@ -706,7 +706,7 @@ class PlanShapeSpec extends SparkSpec {
     (even ++ skewed ++ small)
       .toDF("o_orderkey", "o_orderstatus", "o_orderpriority", "o_totalprice")
       .write.parquet(s"$dir/orders.parquet")
-    val q26 = SparkEntry.queries("q26_tcloseness_filter")(spark, dir.toString)
+    val q26 = SparkEntry.queries("q26_tcloseness_filter")(spark, dir)
     val p = plan(q26)
     assert(q26.count() == 300L)
     graft.QueryCleanup.drain()

@@ -50,16 +50,9 @@ class BpeSpec extends SparkSpec {
       Some("The quick brown fox, with 42 tokens!"),
       Some("the the the"),
       None: Option[String]).toDF("text")
-    val got = df.select(
-      GraftFunctions.bpeCountNative($"text").as("n"),
-      GraftFunctions.bpeTokensNative($"text").as("ts"))
-      .as[(Option[Long], Option[Seq[String]])].collect().toSeq
-    assert(got(0) == ((Some(20L), Some(BpeImpl.tokens(
-      UTF8String.fromString("The quick brown fox, with 42 tokens!"))
-      .toArray[UTF8String](org.apache.spark.sql.types.StringType)
-      .map(_.toString).toSeq))))
-    assert(got(1) == ((Some(3L), Some(Seq("the", "the", "the")))))
-    assert(got(2) == ((None, None)))
+    val got = df.select(GraftFunctions.bpeCountNative($"text"))
+      .as[Option[Long]].collect().toSeq
+    assert(got == Seq(Some(20L), Some(3L), None))
   }
 
   test("count kernel stays inside WholeStageCodegen") {

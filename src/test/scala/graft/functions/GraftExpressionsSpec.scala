@@ -198,7 +198,7 @@ class GraftExpressionsSpec extends SparkSpec {
   test("kernels run inside whole-stage codegen (no fallback in plan)") {
     // A local relation would be constant-folded away; go through parquet so
     // the executed plan is the real scan + projection pipeline.
-    val dir = java.nio.file.Files.createTempDirectory("graft_codegen").toString
+    val dir = tempDir("graft_codegen")
     docs.select("doc_id", "text").write.mode("overwrite").parquet(dir)
     val fromDisk = spark.read.parquet(dir)
       .withColumn("__tk", TextAnalysis.tokens(col("text")))

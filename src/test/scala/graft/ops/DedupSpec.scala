@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSpec {
@@ -80,8 +81,10 @@ class DedupSpec extends SparkSpec {
   }
 
   test("minhash signature of identical texts is identical") {
+    GraftFunctions.ensureRegistered(spark)
     val sigs = docs.filter($"doc_id".isin(1L, 2L))
-      .select(Dedup.minhashSignature(Dedup.shingles($"text", 2)))
+      .select(GraftFunctions.minhashSigNative(
+        GraftFunctions.phashModArr(Dedup.shingles($"text", 2))))
       .as[Seq[Long]].collect()
     assert(sigs(0) == sigs(1))
     assert(sigs(0).length == Dedup.NumHashes)
@@ -299,20 +302,6 @@ class DedupSpec extends SparkSpec {
     assert(accepted == Set(10L, 13L))
   }
 
-  test("ingestDedupBloom routes through the sketch but matches ingestDedup exactly") {
-    val corpus = (1L to 200L).map(i => (i, s"corpus doc $i")).toDF("doc_id", "text")
-    val batch = ((1000L to 1050L).map(i => (i, s"new doc $i")) ++
-      (1L to 20L).map(i => (i + 2000L, s"corpus doc $i")) ++    // corpus dups
-      Seq((3000L, "new doc 1000"))).toDF("doc_id", "text")      // in-batch dup
-    val exact = Dedup.ingestDedup(batch, corpus, "doc_id", "text")
-      .select("doc_id").as[Long].collect().toSet
-    val bloomed = Dedup.ingestDedupBloom(batch, corpus, "doc_id", "text",
-      expectedItems = 1000L)
-      .select("doc_id").as[Long].collect().toSet
-    assert(bloomed == exact)
-    assert(exact == (1000L to 1050L).toSet)
-  }
-
   test("dedupClusters labels components with the min reachable id") {
     // components: {1,2,3,9} via chain 1-2, 2-3, 3-9; {5,6}; pair order irrelevant
     val pairs = Seq((2L, 3L), (1L, 2L), (3L, 9L), (5L, 6L)).toDF("id_a", "id_b")
@@ -438,26 +427,6 @@ class DedupSpec extends SparkSpec {
     val viaStar = Dedup.dedupClustersStar(rnd).as[(Long, Long)].collect().toMap
     val viaJump = Dedup.dedupClusters(rnd).as[(Long, Long)].collect().toMap
     assert(viaStar == viaJump)
-  }
-
-  test("dedupClustersStarReleasable frees every checkpoint it created") {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val pairs = Seq((2L, 3L), (1L, 2L), (7L, 8L)).toDF("id_a", "id_b")
-    val (clusters, release) = Dedup.dedupClustersStarReleasable(pairs)
-    assert(clusters.count() == 5)
-    release()
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.isEmpty, s"star CC leaked persisted RDD ids: $leaked")
-  }
-
-  test("dedupClustersReleasable frees every checkpoint it created") {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val pairs = Seq((2L, 3L), (1L, 2L), (7L, 8L)).toDF("id_a", "id_b")
-    val (clusters, release) = Dedup.dedupClustersReleasable(pairs)
-    assert(clusters.count() == 5)
-    release()
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.isEmpty, s"CC leaked persisted RDD ids: $leaked")
   }
 
   test("paragraphDedup keeps first occurrence corpus-wide and reassembles in order") {

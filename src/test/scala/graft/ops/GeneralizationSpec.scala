@@ -35,19 +35,6 @@ class GeneralizationSpec extends SparkSpec {
     assert(out.as[(String, Long, Long, Long)].collect().sorted.toSeq == want)
   }
 
-  test("labeledBin matches pd.cut right-closed intervals") {
-    val df = Seq(10.0, 25.0, 26.0, 60.0, 99.0, 150.0).toDF("age")
-    val out = df.withColumn("lbl",
-      Generalization.labeledBin(col("age"), Seq(0, 25, 40, 60, 100), Seq("0-25", "26-40", "41-60", "61-100")))
-      .select("age", "lbl").as[(Double, String)].collect().toMap
-    assert(out(10.0) == "0-25")
-    assert(out(25.0) == "0-25") // right-closed
-    assert(out(26.0) == "26-40")
-    assert(out(60.0) == "41-60")
-    assert(out(99.0) == "61-100")
-    assert(out(150.0) == null) // out of range -> null like pd.cut NaN
-  }
-
   test("generalize replaces QI values with group min-max ranges") {
     val df = Seq(
       (1, 10, 100), (1, 20, 200),

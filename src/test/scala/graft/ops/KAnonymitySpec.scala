@@ -49,6 +49,14 @@ class KAnonymitySpec extends SparkSpec {
     assert(v == Set((4, 2L), (5, 2L), (6, 1L)))
   }
 
+  test("vulnerableRecords keeps the records of a NULL-QI class below k") {
+    val df = Seq[(Option[Int], String, Int)]((None, "A", 1), (Some(30), "B", 2))
+      .toDF("age", "zip", "id")
+    val ids = KAnonymity.vulnerableRecords(df, Seq("age", "zip"), 2)
+      .select("id").as[Int].collect().sorted.toSeq
+    assert(ids == Seq(1, 2))
+  }
+
   test("property: suppressed output only has groups >= k and is a subset") {
     val rnd = new scala.util.Random(42)
     for (trial <- 1 to 8) {

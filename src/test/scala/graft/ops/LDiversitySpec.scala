@@ -36,15 +36,6 @@ class LDiversitySpec extends SparkSpec {
     assert(kept == Seq(1, 2, 3, 4, 8, 9))
   }
 
-  test("entropy l-diversity is strictly stronger than distinct at the same l") {
-    // class A has 2 distinct values but entropy ln4 - 3ln3/4 = 0.5623 < ln 2,
-    // so it survives DISTINCT l=2 but not ENTROPY l=2; uniform class C
-    // survives both.
-    val entropyKept = LDiversity.suppressEntropy(fixture, Seq("zip"), "disease", l = 2.0)
-      .select("id").as[Int].collect().sorted.toSeq
-    assert(entropyKept == Seq(8, 9))
-  }
-
   test("a NULL-QI class is audited and survives suppression when diverse") {
     // null zip is a real equivalence class (groupBy emits it); a plain
     // `=` semi-join would suppress rows 10/11 unconditionally.

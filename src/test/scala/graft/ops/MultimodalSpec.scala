@@ -203,28 +203,6 @@ class MultimodalSpec extends SparkSpec {
     assert(Multimodal.dctHash64(orig) == Multimodal.dctHash64(rampPng(1.0)))
   }
 
-  test("dctNearDup: banded join equals brute force on the byte path") {
-    implicit val s = spark
-    def ramp(seed: Int): Array[Byte] =
-      Array.tabulate[Byte](1280)(i => (((i * 7 + seed * 131) % 191) + 32).toByte)
-    val base = ramp(0)
-    val tweaked = base.clone()
-    for (i <- 0 until 20) tweaked(i) = (tweaked(i) + 3).toByte
-    val rows = Seq((0L, base, "image"), (1L, tweaked, "image")) ++
-      (2L to 9L).map(k => (k, ramp(k.toInt), "image"))
-    val media = rows.toDF("doc_id", "payload", "media_type")
-    val hashes = Multimodal.dctHash(media).collect()
-      .map(h => h.doc_id -> h.phash).toMap
-    val brute = (for {
-      a <- rows.map(_._1); b <- rows.map(_._1) if a < b
-      d = hamming(hashes(a), hashes(b)) if d <= 3
-    } yield (a, b, d.toLong)).toSet
-    assert(brute.exists(p => p._1 == 0L && p._2 == 1L), hashes.toString)
-    val banded = Multimodal.dctNearDup(media, maxHamming = 3)
-      .as[(Long, Long, Long)].collect().toSet
-    assert(banded == brute, s"banded=$banded brute=$brute")
-  }
-
   test("nearDupFromHashes: hot-key third level stays lossless (banded = brute force)") {
     implicit val s = spark
     // 40 distinct hashes ALL sharing compound key (band0="0000",

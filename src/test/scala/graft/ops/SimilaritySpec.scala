@@ -449,7 +449,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("IVF-PQ index save/load round-trips codebooks and search results") {
-    val dir = s"/tmp/graft_ivfpq_spec_${System.nanoTime()}"
+    val dir = s"${tempDir("graft_ivfpq_spec")}/index"
     val e = (0L until 64L).map { i =>
       (i, Seq.tabulate(8)(j => ((i * 7 + j * 13) % 31).toFloat / 31f))
     }.toDF("vec_id", "embedding")
@@ -473,7 +473,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("IVF-PQ incremental encode: identical to full re-encode; replay is a no-op") {
-    val dir = s"/tmp/graft_ivfpq_incr_spec_${System.nanoTime()}"
+    val dir = s"${tempDir("graft_ivfpq_incr_spec")}/index"
     val all = (0L until 96L).map { i =>
       (i, Seq.tabulate(8)(j => ((i * 7 + j * 13) % 31).toFloat / 31f))
     }.toDF("vec_id", "embedding")
@@ -519,7 +519,7 @@ class SimilaritySpec extends SparkSpec {
     val ivf = Similarity.trainIvf(base, "vec_id", "embedding", nlist = 3, seed = 7L)
 
     // in-distribution ingest: same cluster mix -> occupancy shares flat
-    val dirA = s"/tmp/graft_ivfpq_drift_a_${System.nanoTime()}"
+    val dirA = s"${tempDir("graft_ivfpq_drift_a")}/index"
     Similarity.saveIvfPqIndex(
       Similarity.encodeWithStoredIndex(base, "vec_id", "embedding", ivf.centroids, pq),
       ivf.centroids, pq, dirA)
@@ -530,7 +530,7 @@ class SimilaritySpec extends SparkSpec {
     assert(flatPsi < 100000L, s"in-distribution PSI $flatPsi should be < 0.1")
 
     // drifted ingest: 60 new vectors ALL in cluster 0 -> monitor fires
-    val dirB = s"/tmp/graft_ivfpq_drift_b_${System.nanoTime()}"
+    val dirB = s"${tempDir("graft_ivfpq_drift_b")}/index"
     Similarity.saveIvfPqIndex(
       Similarity.encodeWithStoredIndex(base, "vec_id", "embedding", ivf.centroids, pq),
       ivf.centroids, pq, dirB)
@@ -571,7 +571,7 @@ class SimilaritySpec extends SparkSpec {
       base((c * 2 + 1) % 8) += (i % 17) * 0.1f
       (i, base.toSeq)
     }
-    val dir = s"/tmp/graft_ivfpq_retrain_${System.nanoTime()}"
+    val dir = s"${tempDir("graft_ivfpq_retrain")}/index"
     val base = (0L until 30L).map(i => cluster(i, (i % 3).toInt)).toDF("vec_id", "embedding")
     val pq = Similarity.trainPq(base, "embedding", m = 4, ksub = 4, seed = 7L)
     val ivf = Similarity.trainIvf(base, "vec_id", "embedding", nlist = 3, seed = 7L)
@@ -583,10 +583,15 @@ class SimilaritySpec extends SparkSpec {
     Similarity.encodeIntoIvfPqIndex(spark, dir, drifted, "vec_id", "embedding")
     assert(Similarity.ivfPqOccupancyDrift(spark, dir)
       .select("psi_micro").as[Long].head() > 250000L)
-    // ...retrain on the grown corpus: new artifacts, monitor resets
+    // ...retrain on the grown corpus — a fresh quantizer and codebooks,
+    // re-encoded and committed as new versions: new artifacts, monitor resets
     val grown = base.unionByName(drifted)
-    val newV = Similarity.retrainIvfPqIndex(spark, dir, grown, "vec_id",
-      "embedding", nlist = 3, m = 4, ksub = 4, seed = 8L)
+    val pq3 = Similarity.trainPq(grown, "embedding", m = 4, ksub = 4, seed = 8L)
+    val ivf3 = Similarity.trainIvf(grown, "vec_id", "embedding", nlist = 3, seed = 8L)
+    Similarity.saveIvfPqIndex(
+      Similarity.encodeWithStoredIndex(grown, "vec_id", "embedding", ivf3.centroids, pq3),
+      ivf3.centroids, pq3, dir, meta = "retrain")
+    val newV = graft.sources.SnapshotStore.committedVersion(spark, s"$dir/codes").get
     assert(newV == 3L) // v1 build, v2 ingest, v3 retrain
     val reset = Similarity.ivfPqOccupancyDrift(spark, dir, baseVersion = newV)
       .select("psi_micro").as[Long].head()

@@ -24,13 +24,6 @@ class TimeSeriesDpSpec extends SparkSpec {
     assert(got(4L) == 1 && got(5L) == 2)
   }
 
-  test("sessionStats aggregates bounds and counts per session") {
-    val r = TimeSeries.sessionStats(events, 30)
-      .filter($"user_id" === 7 && $"session_seq" === 1)
-      .select("n_events", "sum_value").as[(Long, Double)].head()
-    assert(r == ((2L, 3.0)))
-  }
-
   test("windowAgg buckets into tumbling windows") {
     val got = TimeSeries.windowAgg(events, "1 hour")
       .select(date_format($"window_start", "HH:mm").as("w"), $"event_type", $"n_events")
@@ -135,7 +128,7 @@ class TimeSeriesDpSpec extends SparkSpec {
   }
 
   test("PrivacyBudget enforces sequential composition") {
-    val dir = s"/tmp/graft_ledger_seq_${System.nanoTime()}"
+    val dir = s"${tempDir("graft_ledger_seq")}/ledger"
     BudgetLedger.init(spark, dir, total = 1.0)
     BudgetLedger.charge(spark, dir, "a", 0.4); BudgetLedger.charge(spark, dir, "b", 0.6)
     assert(BudgetLedger.remaining(spark, dir) < 1e-9)
@@ -192,7 +185,7 @@ class TimeSeriesDpSpec extends SparkSpec {
   }
 
   test("BudgetLedger: charges survive restart; exhausted ledger refuses; replay is free") {
-    val dir = s"/tmp/graft_ledger_${System.nanoTime()}"
+    val dir = s"${tempDir("graft_ledger")}/ledger"
     BudgetLedger.init(spark, dir, total = 1.0, meta = "audit-budget")
     // double init would silently reset spent state — refused
     intercept[IllegalArgumentException] {
@@ -217,7 +210,7 @@ class TimeSeriesDpSpec extends SparkSpec {
   }
 
   test("BudgetLedger: Gaussian zCDP accounting matches the in-process ZCdpBudget") {
-    val dir = s"/tmp/graft_ledger_zm_${System.nanoTime()}"
+    val dir = s"${tempDir("graft_ledger_zm")}/ledger"
     BudgetLedger.init(spark, dir, total = 0.5)
     val releases = Seq((1.0, 2.0), (2.0, 4.0), (1.0, 3.0))
     releases.zipWithIndex.foreach { case ((d, sigma), i) =>
@@ -234,7 +227,7 @@ class TimeSeriesDpSpec extends SparkSpec {
   }
 
   test("ZCdpBudget: rho composes additively and converts to (eps, delta)") {
-    val dir = s"/tmp/graft_ledger_z_${System.nanoTime()}"
+    val dir = s"${tempDir("graft_ledger_z")}/ledger"
     BudgetLedger.init(spark, dir, total = 0.25)
     intercept[IllegalArgumentException] {
       BudgetLedger.chargeGaussian(spark, dir, "bad", sensitivity = 1.0, sigma = 0.0)
@@ -256,10 +249,10 @@ class TimeSeriesDpSpec extends SparkSpec {
     // sqrt-composition advantage: k Gaussian releases cost eps ~ sqrt(k),
     // not k — the zCDP ledger for 16 releases is well under 16x one
     // release's eps at the same sigma
-    val many = s"/tmp/graft_ledger_z16_${System.nanoTime()}"
+    val many = s"${tempDir("graft_ledger_z16")}/ledger"
     BudgetLedger.init(spark, many, total = 16.0 / 8.0)
     (1 to 16).foreach(i => BudgetLedger.chargeGaussian(spark, many, s"r$i", 1.0, 2.0))
-    val one = s"/tmp/graft_ledger_z1_${System.nanoTime()}"
+    val one = s"${tempDir("graft_ledger_z1")}/ledger"
     BudgetLedger.init(spark, one, total = 1.0)
     BudgetLedger.chargeGaussian(spark, one, "r1", 1.0, 2.0)
     assert(BudgetLedger.epsilonFor(spark, many, delta)

@@ -40,15 +40,9 @@ import graft.sources.CsvSource
 class AdultGoldenSpec extends SparkSpec {
 
   private lazy val adult = {
-    val dir = java.nio.file.Files.createTempDirectory("adult_golden")
-    // best-effort cleanup: deepest-first so files delete before dirs
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(p => p.toFile.delete())
-    }))
-    CsvSource.write(AdultFixture.raw(spark), dir.toString)
-    AdultSchema.load(spark, dir.toString).cache()
+    val dir = tempDir("adult_golden")
+    CsvSource.write(AdultFixture.raw(spark), dir)
+    AdultSchema.load(spark, dir).cache()
   }
   private val qis = AdultSchema.quasiIdentifiers
 
@@ -65,8 +59,7 @@ class AdultGoldenSpec extends SparkSpec {
     // sandbox has zero egress, so the download failing cancels (not
     // fails) the case — on a networked machine it runs for real.
     val url = "https://archive.ics.uci.edu/ml/machine-learning-databases/adult/adult.data"
-    val dest = java.nio.file.Files.createTempDirectory("adult_url")
-      .resolve("adult.data").toString
+    val dest = s"${tempDir("adult_url")}/adult.data"
     val fetched =
       try CsvSource.fetch(url, dest, connectTimeoutMs = 5000, readTimeoutMs = 30000)
       catch {

@@ -12,7 +12,7 @@ object GoldenProbe {
   def main(args: Array[String]): Unit = {
     val spark = graft.SparkSpec.spark
     val t0 = System.nanoTime()
-    val dir = java.nio.file.Files.createTempDirectory("adult_golden").toString
+    val dir = graft.SparkSpec.tempDir("adult_golden")
     CsvSource.write(AdultFixture.raw(spark), dir)
     val df = AdultSchema.load(spark, dir).cache()
     println(s"RAW=32561 LOADED=${df.count()}")

@@ -10,7 +10,7 @@ class IncrementalCorpusSpec extends SparkSpec {
     .toDF("doc_id", "text")
 
   test("ingest dedups against the committed corpus, decontaminates, and versions") {
-    val table = s"/tmp/graft_inc_${System.nanoTime()}"
+    val table = s"${tempDir("graft_inc")}/table"
     // batch 1: 3 docs, one of which collides with the bench 8-gram
     val b1 = Seq(
       (1L, "the quick brown fox jumps over the lazy dog tonight"),
@@ -55,7 +55,7 @@ class IncrementalCorpusSpec extends SparkSpec {
   }
 
   test("compactEvery bounds the append chain without changing the corpus") {
-    val table = s"/tmp/graft_inccmp_${System.nanoTime()}"
+    val table = s"${tempDir("graft_inccmp")}/table"
     val mk = (id: Long) => Seq((id, s"unique document number $id with its own words " +
       s"padding ${id * 7} ${id * 13} ${id * 17}")).toDF("doc_id", "text")
     (1L to 5L).foreach { i =>
@@ -72,7 +72,7 @@ class IncrementalCorpusSpec extends SparkSpec {
   }
 
   test("near-dup gate drops batch docs matching the STORED index, not a recompute") {
-    val table = s"/tmp/graft_incnd_${System.nanoTime()}"
+    val table = s"${tempDir("graft_incnd")}/table"
     val b1 = Seq(
       (1L, "the quick brown fox jumps over the lazy dog tonight and then it ran far away home"),
       (3L, "pack my box with five dozen liquor jugs right now")
@@ -112,7 +112,7 @@ class IncrementalCorpusSpec extends SparkSpec {
   }
 
   test("replay after a crash between index commit and corpus commit converges") {
-    val table = s"/tmp/graft_inccrash_${System.nanoTime()}"
+    val table = s"${tempDir("graft_inccrash")}/table"
     val idxDir = IncrementalCorpus.nearDupIndexDir(table)
     val b1 = Seq(
       (1L, "pack my box with five dozen liquor jugs right now"))
@@ -141,7 +141,7 @@ class IncrementalCorpusSpec extends SparkSpec {
 
     // and the converged state matches a clean (never-crashed) run bit
     // for bit on doc ids
-    val table2 = s"/tmp/graft_inccleanrun_${System.nanoTime()}"
+    val table2 = s"${tempDir("graft_inccleanrun")}/table"
     IncrementalCorpus.ingest(spark, table2, b1, bench, "doc_id", "text",
       decontamN = 8, meta = "crawl-1", nearDupThreshold = Some(0.5))
     IncrementalCorpus.ingest(spark, table2, b2, bench, "doc_id", "text",

@@ -8,12 +8,7 @@ import org.apache.spark.sql.functions._
 class NearDupIndexSpec extends SparkSpec {
   import spark.implicits._
 
-  private def freshDir(tag: String): String = {
-    val d = s"/tmp/graft_ndidx_spec_$tag"
-    val p = new org.apache.hadoop.fs.Path(d)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
-    d
-  }
+  private def freshDir(tag: String): String = s"${tempDir(s"graft_ndidx_spec_$tag")}/index"
 
   private val corpus = Seq(
     (1L, "the quick brown fox jumps over the lazy dog"),

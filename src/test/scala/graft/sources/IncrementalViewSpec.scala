@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 class IncrementalViewSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(tag: String) = s"/tmp/graft_ivm_${tag}_${System.nanoTime()}"
+  private def tmp(tag: String) = s"${tempDir(s"graft_ivm_$tag")}/table"
 
   private def rows(ids: Range) =
     ids.map(i => (i.toLong, s"k${i % 3}", i * 1.5)).toDF("id", "k", "v")

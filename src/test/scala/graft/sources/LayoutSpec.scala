@@ -15,7 +15,7 @@ class LayoutSpec extends SparkSpec {
   ).toDF("okey", "ckey", "price", "status")
 
   test("partitioned write + filtered read prunes to matching partitions") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val dir = tempDir("graft_part")
     orders.write.mode("overwrite").partitionBy("status").parquet(dir)
     val filtered = spark.read.parquet(dir).filter($"status" === "F")
     val scan = filtered.queryExecution.executedPlan.toString
@@ -51,7 +51,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("Bucketing: join AND aggregate on the bucket key stay exchange-free") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bkt").toString
+    val dir = tempDir("graft_bkt")
     spark.sql("DROP TABLE IF EXISTS g_bkt_orders")
     spark.sql("DROP TABLE IF EXISTS g_bkt_customer")
     Bucketing.writeBucketed(orders, "g_bkt_orders", s"$dir/o", "ckey", 4)
@@ -71,7 +71,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("Compaction rewrites fragments into range-clustered files of the target size") {
-    val base = java.nio.file.Files.createTempDirectory("graft_compact").toString
+    val base = tempDir("graft_compact")
     val rows = (1L to 1000L).map(i => (i, s"doc-$i-${"x" * 50}")).toDF("id", "text")
     rows.repartition(32).write.mode("overwrite").parquet(s"$base/frag")
     val fragFiles = new java.io.File(s"$base/frag").listFiles

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions.lit
 class SnapshotStoreSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmpTable() = s"/tmp/graft_snapstore_${System.nanoTime()}"
+  private def tmpTable() = s"${tempDir("graft_snapstore")}/table"
 
   test("commit publishes atomically; crash before the marker leaves the old version live") {
     val dir = tmpTable()

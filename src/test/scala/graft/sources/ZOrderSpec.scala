@@ -26,9 +26,9 @@ class ZOrderSpec extends SparkSpec {
     val grid = spark.range(4096)
       .selectExpr("id % 64 AS x", "CAST(id / 64 AS LONG) AS y", "id AS payload")
       .repartition(16)
-    val in = s"/tmp/graft_zorder_in_${System.nanoTime()}"
-    val outZ = s"/tmp/graft_zorder_out_${System.nanoTime()}"
-    val outX = s"/tmp/graft_xsort_out_${System.nanoTime()}"
+    val in = s"${tempDir("graft_zorder_in")}/data"
+    val outZ = s"${tempDir("graft_zorder_out")}/data"
+    val outX = s"${tempDir("graft_xsort_out")}/data"
     grid.write.parquet(in)
     // target sized to produce enough files that z-squares are clearly
     // tighter than the 2x bound (at ~8 files the y-spread sits right at

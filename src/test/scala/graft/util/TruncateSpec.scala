@@ -14,8 +14,9 @@ import org.apache.spark.sql.functions.{count, lit, sum}
   * where one executor loss kills a long iterative query. These tests pin
   * that the strategy conf actually switches the checkpoint kind, that
   * either kind preserves the rows, that every iterative operator frees
-  * what it truncated, and that no module outside `Truncate` checkpoints
-  * or frees checkpoints on its own. */
+  * what it truncated, that no module outside `Truncate` checkpoints or
+  * frees checkpoints on its own, and that no operator hands a release
+  * thunk back to its caller. */
 class TruncateSpec extends SparkSpec {
   import spark.implicits._
 
@@ -49,9 +50,9 @@ class TruncateSpec extends SparkSpec {
     val auto = (rows(Graph.kCore(tinyGraph, "src", "dst", k = 2)),
       rows(Dedup.dedupClustersStar(tinyGraph, "src", "dst")))
     graft.QueryCleanup.drain()
-    val dir = java.nio.file.Files.createTempDirectory("graft-truncate-spec")
+    val dir = tempDir("graft-truncate-spec")
     spark.conf.set("spark.graft.truncate", "reliable")
-    spark.conf.set("spark.graft.checkpointDir", dir.toString)
+    spark.conf.set("spark.graft.checkpointDir", dir)
     try {
       val df = spark.range(50).toDF("id")
       val t = Truncate(df)
@@ -59,7 +60,7 @@ class TruncateSpec extends SparkSpec {
       assert(rdd.isCheckpointed)
       assert(rdd.getCheckpointFile.isDefined,
         "reliable strategy must checkpoint to durable storage")
-      assert(rdd.getCheckpointFile.get.contains(dir.getFileName.toString))
+      assert(rdd.getCheckpointFile.get.contains(new java.io.File(dir).getName))
       assert(t.count() == 50)
       val file = new java.io.File(new java.net.URI(rdd.getCheckpointFile.get))
       assert(file.exists())
@@ -80,9 +81,9 @@ class TruncateSpec extends SparkSpec {
     // tinyGraph is far below kCore's small-state gate, so every peel round
     // runs on its quiet child session, which must see the parent's
     // runtime truncation conf
-    val dir = java.nio.file.Files.createTempDirectory("graft-truncate-kcore")
+    val dir = tempDir("graft-truncate-kcore")
     spark.conf.set("spark.graft.truncate", "reliable")
-    spark.conf.set("spark.graft.checkpointDir", dir.toString)
+    spark.conf.set("spark.graft.checkpointDir", dir)
     try {
       val core = Graph.kCore(tinyGraph, "src", "dst", k = 2)
       assert(leafRdd(core).getCheckpointFile.isDefined,
@@ -133,14 +134,18 @@ class TruncateSpec extends SparkSpec {
       DeterministicKMeans.fitGroupedArrayMicros(
         (1 to 40).map(i => (i % 3, Seq(i.toDouble, (i % 7).toDouble))).toDF("g", "v"),
         "g", "v", k = 3)),
-    "dedupClustersReleasable" -> (() => {
-      val (c, release) = Dedup.dedupClustersReleasable(tinyGraph, "src", "dst")
-      c.collect(); release()
-    }),
-    "dedupClustersStarReleasable" -> (() => {
-      val (c, release) = Dedup.dedupClustersStarReleasable(tinyGraph, "src", "dst")
-      c.collect(); release()
-    }),
+    "dedupClusters" -> (() => Dedup.dedupClusters(tinyGraph, "src", "dst").collect()),
+    "dedupClustersStar" -> (() =>
+      Dedup.dedupClustersStar(tinyGraph, "src", "dst").collect()),
+    // scope "hot" is degenerate (40 docs over two shingles: mean posting
+    // list 40 > MaxMeanPostingFreq), scope "cold" is not — so the scoped
+    // route truncates a non-empty degenerate-key leaf and runs both
+    // topologies over the persisted shingle table
+    "ngramJaccardPairsPrefix" -> (() => Dedup.ngramJaccardPairsPrefix(
+      ((1 to 40).map(i => (i.toLong, "hot", "a b a b a b")) ++
+        (41 to 44).map(i => (i.toLong, "cold", s"w$i x$i y$i z$i")))
+        .toDF("id", "shard", "text"), "id", "text", n = 2, threshold = 0.8,
+      partitionCols = Seq("shard")).collect()),
     "Mondrian.assignPartitions" -> (() => Mondrian.assignPartitions(
       (1 to 40).map(i => (i, (i * 7) % 13)).toDF("a", "b"), Seq("a", "b"), k = 3)
       .collect()),
@@ -170,11 +175,14 @@ class TruncateSpec extends SparkSpec {
     // a checkpoint-release helper: a def named like one, or code that
     // walks a plan's LogicalRDD leaves (how such a helper finds the RDD)
     val releaseHelper = "(?i)def\\s+\\w*(release|unpersist|free)\\w*checkpoint|LogicalRDD".r
+    // a release thunk handed back to the caller instead of registered
+    // under the caller's query scope
+    val releaseThunk = "\\(\\s*DataFrame\\s*,\\s*\\(\\)\\s*=>\\s*Unit\\s*\\)".r
     val offenders = files.filterNot(_.getPath.endsWith("util/Truncate.scala"))
       .flatMap { f =>
         val c = code(f)
-        (checkpointCall.findAllIn(c) ++ releaseHelper.findAllIn(c))
-          .map(m => s"${f.getPath}: $m")
+        (checkpointCall.findAllIn(c) ++ releaseHelper.findAllIn(c) ++
+          releaseThunk.findAllIn(c)).map(m => s"${f.getPath}: $m")
       }
     assert(offenders.isEmpty, offenders.mkString("\n"))
     val truncate = code(new java.io.File(root, "graft/util/Truncate.scala"))

@@ -67,9 +67,8 @@ def run(tag: String, d: DataFrame, e: DataFrame, c: DataFrame): Unit = {
       shingleN = 2, threshold = 0.3).count()
   }
   time(s"q64_prefix_$tag") {
-    val (pairs, rel) = graft.ops.Dedup.ngramJaccardPairsPrefixReleasable(
-      d, "doc_id", "text", n = 3, threshold = 0.8)
-    val n = pairs.count(); rel(); n
+    graft.ops.Dedup.ngramJaccardPairsPrefix(
+      d, "doc_id", "text", n = 3, threshold = 0.8).count()
   }
   time(s"q77_decontam_$tag") {
     graft.ops.Dedup.contaminatedIds(
