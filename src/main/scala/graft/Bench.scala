@@ -136,6 +136,7 @@ object Bench {
       metricsListener.resetPeak()
       val before = metricsListener.totals
       val beforeCommitSec = graft.sources.SnapshotStore.commitSeconds
+      val beforeCompiles = BenchMetrics.codegenCompiles
       val runs = (1 to nReps).map { _ =>
         val t0 = System.nanoTime()
         // Execute the query's own physical plan (all output columns
@@ -156,12 +157,15 @@ object Bench {
         commitSec =
           (graft.sources.SnapshotStore.commitSeconds - beforeCommitSec) / nReps)
       // Additive counters accumulated across `reps` executions — divide to
-      // a per-execution figure (peak and RSS are maxima, left as-is).
+      // a per-execution figure (peak and RSS are maxima, left as-is;
+      // codegen compiles stay the total over the reps: a warm rep that
+      // still compiles shows the codegen cache is not holding).
       val perExec = snap.copy(
         shuffleReadMb = snap.shuffleReadMb / nReps,
         shuffleWriteMb = snap.shuffleWriteMb / nReps,
         inputMb = snap.inputMb / nReps,
-        spillMb = snap.spillMb / nReps)
+        spillMb = snap.spillMb / nReps,
+        codegenCompiles = BenchMetrics.codegenCompiles - beforeCompiles)
       val ok = runs.flatten.sorted
       (name, if (ok.size == nReps) Some(ok(ok.size / 2)) else None, runs, perExec)
     }

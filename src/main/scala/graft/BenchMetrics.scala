@@ -67,13 +67,19 @@ object BenchMetrics {
   final case class ResourceSnapshot(shuffleReadMb: Double, shuffleWriteMb: Double,
                                     inputMb: Double, spillMb: Double,
                                     peakExecMemMb: Double, rssMb: Double,
-                                    rssHwmMb: Double, commitSec: Double = 0.0) {
+                                    rssHwmMb: Double, commitSec: Double = 0.0,
+                                    codegenCompiles: Long = 0L) {
     def json: String =
       f"""{"shuffle_read_mb":$shuffleReadMb%.3f,"shuffle_write_mb":$shuffleWriteMb%.3f,""" +
         f""""input_mb":$inputMb%.3f,"spill_mb":$spillMb%.3f,""" +
         f""""peak_exec_mem_mb":$peakExecMemMb%.3f,"rss_mb":$rssMb%.1f,"rss_hwm_mb":$rssHwmMb%.1f,""" +
-        f""""commit_sec":$commitSec%.3f}"""
+        f""""commit_sec":$commitSec%.3f,"codegen_compiles":$codegenCompiles}"""
   }
+
+  /** Janino classes this JVM has compiled so far (Spark's codegen
+    * metrics; a class served from the codegen cache is not counted). */
+  def codegenCompiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   private def mb(bytes: Long): Double = bytes / (1024.0 * 1024.0)
 

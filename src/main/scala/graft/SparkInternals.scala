@@ -3,12 +3,13 @@ package graft
 import org.apache.spark.SparkContext
 
 /** Narrow access point for Spark-internal plumbing the public API doesn't
-  * expose. Kept to TWO capabilities on purpose: draining the async
+  * expose. Kept to THREE capabilities on purpose: draining the async
   * listener bus so per-query metric snapshots (BenchMetrics) don't race
-  * stage completion events, and re-binding an analyzed plan onto another
-  * session so per-query SQL-conf overrides don't mutate shared session
-  * state. (Freeing checkpoint storage, which `Dataset.unpersist` can't
-  * reach, belongs to [[graft.util.Truncate.release]].)
+  * stage completion events, cloning a session, and re-binding an analyzed
+  * plan onto another session, so per-query SQL-conf overrides don't mutate
+  * shared session state. (Freeing checkpoint storage, which
+  * `Dataset.unpersist` can't reach, belongs to
+  * [[graft.util.Truncate.release]].)
   * Uses reflection rather than a `package org.apache.spark` escape
   * so the project's own namespace stays honest. If the internal shape
   * ever changes, both fail with an error naming the lookup that broke:
@@ -31,8 +32,22 @@ object SparkInternals {
       bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
     }
 
+  /** A clone of `spark` (`SparkSession.cloneSession`, `private[sql]`) with
+    * `overrides` set on the clone alone. Unlike `newSession()`, the clone
+    * keeps the caller's runtime SQL confs, temp views, registered functions
+    * and ExecutionListeners (those registered by now), so a plan rebound
+    * onto it still reports to the caller's QueryExecutionListeners. */
+  def cloneSession(spark: org.apache.spark.sql.SparkSession,
+                   overrides: (String, String)*): org.apache.spark.sql.SparkSession =
+    reflect("org.apache.spark.sql.classic.SparkSession.cloneSession()") {
+      val clone = spark.getClass.getMethod("cloneSession").invoke(spark)
+        .asInstanceOf[org.apache.spark.sql.SparkSession]
+      overrides.foreach { case (k, v) => clone.conf.set(k, v) }
+      clone
+    }
+
   /** Re-bind `df`'s ANALYZED plan onto `target` (usually a
-    * `spark.newSession()` clone carrying statement-scoped SQL-conf
+    * [[cloneSession]] carrying statement-scoped SQL-conf
     * overrides, e.g. AQE off for tiny iterative rounds). The sessions
     * share one SparkContext and CacheManager, so cached/checkpointed
     * inputs keep hitting; only conf resolution changes. A thread-local

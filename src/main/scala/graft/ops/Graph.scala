@@ -764,11 +764,15 @@ object Graph {
     // and two togglers clobber each other's save/restore (the exact
     // cross-query interference class this codebase's QueryCleanup /
     // Provenance scoping exists to kill). Instead the small-state round
-    // plan is RE-BOUND onto a dedicated child session (`newSession()`
-    // shares the SparkContext and cache manager, isolates SQL conf)
-    // that has AQE off permanently. Because `living` is monotone
-    // decreasing under peeling, every later round's plan derives from
-    // the re-bound checkpoint and inherits the quiet session for free.
+    // plan is RE-BOUND onto a dedicated child session (a
+    // [[graft.SparkInternals.cloneSession]]: it shares the SparkContext
+    // and cache manager, keeps the caller's runtime confs and query
+    // listeners, and isolates its own SQL conf) that has AQE off
+    // permanently; the result is rebound onto the caller's session, so
+    // the caller's own downstream plans keep its conf. Because `living`
+    // is monotone decreasing under peeling, every later round's plan
+    // derives from the re-bound checkpoint and inherits the quiet session
+    // for free.
     // Verified empirically: the re-bound plan executes non-adaptive
     // while concurrent plans on the parent session keep AQE.
     val spark = edges.sparkSession
@@ -781,16 +785,9 @@ object Graph {
     // count, never by the local core count, so the gate fires — and the
     // plan it produces — identically on a cluster.
     val SmallParts = 8
-    lazy val quiet: SparkSession = {
-      val q = spark.newSession()
-      q.conf.set("spark.sql.adaptive.enabled", "false")
-      q.conf.set("spark.sql.shuffle.partitions", SmallParts.toString)
-      // a new session sees only the static conf: carry over the runtime
-      // truncation settings, so its rounds truncate as the caller asked
-      Seq("spark.graft.truncate", "spark.graft.checkpointDir").foreach(key =>
-        spark.conf.getOption(key).foreach(q.conf.set(key, _)))
-      q
-    }
+    lazy val quiet: SparkSession = graft.SparkInternals.cloneSession(spark,
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> SmallParts.toString)
     def roundPlan(living: Long)(plan: DataFrame): DataFrame =
       if (living < SmallState && (plan.sparkSession ne quiet))
         graft.SparkInternals.rebind(quiet, plan)
@@ -852,7 +849,7 @@ object Graph {
     require(converged,
       s"kCore: no fixpoint after $maxRounds rounds — raise maxRounds " +
         s"(the oracle unroll must be raised with it)")
-    deg.select(col("node"), col("__d").as("core_degree"))
+    graft.SparkInternals.rebind(spark, deg.select(col("node"), col("__d").as("core_degree")))
   }
 
   /** Degree assortativity (Newman 2002): the Pearson correlation of

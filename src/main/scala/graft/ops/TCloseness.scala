@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.QueryCleanup
 import graft.functions.EmdAggregator
-import graft.util.Truncate
+import graft.util.{Interpreted, Truncate}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -44,21 +44,23 @@ object TCloseness {
     * 10 < 2); the join key is the string rendering, Spark's own cast. The
     * collect is LIMIT-capped (TakeOrdered), so a mistakenly
     * high-cardinality column fails fast instead of OOMing the driver. */
-  def ordinal(df: DataFrame, c: String, outCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val values = df.select(col(c)).distinct().orderBy(col(c))
-      .limit(MaxOrdinalDomain + 1)
-      .select(col(c).cast("string")).as[String].collect()
-    require(values.length <= MaxOrdinalDomain,
-      s"TCloseness.ordinal: column '$c' has > $MaxOrdinalDomain distinct " +
-        "values — not an ordinal sensitive attribute. Bin it first " +
-        "(Generalization.binEquiWidth / binEdges) and ordinal-encode the bins.")
-    val dict = values.zipWithIndex.map { case (v, i) => (v, i.toLong) }.toSeq
-      .toDF("__ord_k", outCol)
-    df.join(broadcast(dict), col(c).cast("string") === col("__ord_k"))
-      .drop("__ord_k")
-  }
+  def ordinal(df: DataFrame, c: String, outCol: String): DataFrame =
+    // a small input runs interpreted; the frame returned is on df's session
+    Interpreted(df) { (in, home) =>
+      val spark = in.sparkSession
+      import spark.implicits._
+      val values = in.select(col(c)).distinct().orderBy(col(c))
+        .limit(MaxOrdinalDomain + 1)
+        .select(col(c).cast("string")).as[String].collect()
+      require(values.length <= MaxOrdinalDomain,
+        s"TCloseness.ordinal: column '$c' has > $MaxOrdinalDomain distinct " +
+          "values — not an ordinal sensitive attribute. Bin it first " +
+          "(Generalization.binEquiWidth / binEdges) and ordinal-encode the bins.")
+      val dict = values.zipWithIndex.map { case (v, i) => (v, i.toLong) }.toSeq
+        .toDF("__ord_k", outCol)
+      home(in.join(broadcast(dict), col(c).cast("string") === col("__ord_k"))
+        .drop("__ord_k"))
+    }
 
   /** The sensitive distribution an EMD is measured against: per-position
     * row counts in position order (zero counts left out), and the rows at a

@@ -3,6 +3,7 @@ package graft.pipelines
 import graft.metrics.{PrivacyMetrics, PrivacyReport}
 import graft.ml.{ClusteringAnonymizer, ClusteringResult}
 import graft.ops.{Generalization, KAnonymity, TCloseness}
+import graft.util.Interpreted
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -15,6 +16,13 @@ import org.apache.spark.sql.functions._
   * §4 "metric fan-out recomputation"). perfbench `--trace 1` on the Adult
   * fixture at seed 42: E1 runs 8 jobs, E3 24 and E2 20 (its KMeans fit 8,
   * the Lloyd rounds on the driver — [[graft.ml.GraftKMeans]]).
+  * E3's recheck runs 4. At that size the jobs are not the cost: a
+  * warm compiled pass spent its time compiling 180–190 Janino classes that
+  * Spark's 100-entry codegen cache could not keep (E1 31, E3 72, the
+  * recheck 16, E2 56). So each entry point runs a small input
+  * [[graft.util.Interpreted]] (the same jobs, 37 classes a warm pass) and
+  * returns every frame on the caller's session; the release cached inside
+  * stays shared.
   *
   * `emdBasis` (E3 only): the sensitive distribution the t-closeness filter
   * measured classes against — the per-position counts of the k-anonymized
@@ -32,26 +40,40 @@ final case class AnonymizationResult(
 object NaiveSuppressionPipeline {
   /** E1 (naive-suppresion.py): k-anonymity by record suppression over the
     * QI set, then the printed metric block. */
-  def run(df: DataFrame, qis: Seq[String], k: Int): AnonymizationResult = {
-    val anonymized = KAnonymity.suppress(df, qis, k).cache()
-    val (report, ncp) = PrivacyMetrics.evaluate(df,
-      KAnonymity.groupSizes(anonymized, qis), qis, k)
-    AnonymizationResult(anonymized, report, ncp)
-  }
+  def run(df: DataFrame, qis: Seq[String], k: Int): AnonymizationResult =
+    runWithin(df, qis, k, Interpreted.fits)
+
+  /** [[run]] with the interpreted route as an argument, so a test can send
+    * one input through either route. */
+  private[graft] def runWithin(df: DataFrame, qis: Seq[String], k: Int,
+                               route: DataFrame => Boolean): AnonymizationResult =
+    Interpreted(df, route) { (in, home) =>
+      val anonymized = KAnonymity.suppress(in, qis, k).cache()
+      val (report, ncp) = PrivacyMetrics.evaluate(in,
+        KAnonymity.groupSizes(anonymized, qis), qis, k)
+      AnonymizationResult(home(anonymized), report, ncp)
+    }
 }
 
 object ClusteringPipeline {
   /** E2 (clustering-anon.py): label-encode + scale + KMeans, per-cluster
     * min-max generalization, metrics against the cluster grouping. */
   def run(df: DataFrame, numericCols: Seq[String], categoricalCols: Seq[String],
-          nClusters: Int, seed: Long = 42L): (ClusteringResult, PrivacyReport, Double) = {
-    val res = ClusteringAnonymizer.anonymize(df, numericCols, categoricalCols,
-      nClusters, seed)
-    val clustered = res.clustered.cache()
-    val (report, ncp) = PrivacyMetrics.evaluate(df,
-      Generalization.minMaxRanges(clustered, "cluster", numericCols), numericCols, k = 1)
-    (res, report, ncp)
-  }
+          nClusters: Int, seed: Long = 42L): (ClusteringResult, PrivacyReport, Double) =
+    runWithin(df, numericCols, categoricalCols, nClusters, seed, Interpreted.fits)
+
+  private[graft] def runWithin(df: DataFrame, numericCols: Seq[String],
+                               categoricalCols: Seq[String], nClusters: Int, seed: Long,
+                               route: DataFrame => Boolean)
+      : (ClusteringResult, PrivacyReport, Double) =
+    Interpreted(df, route) { (in, home) =>
+      val res = ClusteringAnonymizer.anonymize(in, numericCols, categoricalCols,
+        nClusters, seed)
+      val clustered = res.clustered.cache()
+      val (report, ncp) = PrivacyMetrics.evaluate(in,
+        Generalization.minMaxRanges(clustered, "cluster", numericCols), numericCols, k = 1)
+      (ClusteringResult(home(clustered), home(res.generalized)), report, ncp)
+    }
 }
 
 object TClosenessPipeline {
@@ -64,20 +86,32 @@ object TClosenessPipeline {
     * the reference's in-place `df_qi['age'] = pd.cut(...)`.
     */
   def run(df: DataFrame, qis: Seq[String], sensitiveOrdinal: String,
-          k: Int, t: Double, binCols: Map[String, Int] = Map.empty): AnonymizationResult = {
-    val binned = Generalization.equalWidthBins(df, binCols.toSeq)
-    val (filtered, basis) = TCloseness.filterWithBasis(binned, qis, sensitiveOrdinal, k, t)
-    val anonymized = filtered.cache()
-    val (report, ncp) = PrivacyMetrics.evaluate(binned,
-      KAnonymity.groupSizes(anonymized, qis), qis, k)
-    AnonymizationResult(anonymized, report, ncp, emdBasis = Some(basis))
-  }
+          k: Int, t: Double, binCols: Map[String, Int] = Map.empty): AnonymizationResult =
+    runWithin(df, qis, sensitiveOrdinal, k, t, binCols, Interpreted.fits)
+
+  private[graft] def runWithin(df: DataFrame, qis: Seq[String], sensitiveOrdinal: String,
+                               k: Int, t: Double, binCols: Map[String, Int],
+                               route: DataFrame => Boolean): AnonymizationResult =
+    Interpreted(df, route) { (in, home) =>
+      val binned = Generalization.equalWidthBins(in, binCols.toSeq)
+      val (filtered, basis) = TCloseness.filterWithBasis(binned, qis, sensitiveOrdinal, k, t)
+      val anonymized = filtered.cache()
+      val (report, ncp) = PrivacyMetrics.evaluate(binned,
+        KAnonymity.groupSizes(anonymized, qis), qis, k)
+      AnonymizationResult(home(anonymized), report, ncp, emdBasis = Some(basis))
+    }
 
   /** The reference's own self-check (t-closeness.py:134-143): after the
     * filter, zero groups may violate t — against the SAME distribution
     * basis the filter used (see [[AnonymizationResult.emdBasis]]). */
   def violations(result: AnonymizationResult, qis: Seq[String],
                  sensitiveOrdinal: String, t: Double): Long =
-    TCloseness.violationCount(result.anonymized, qis, sensitiveOrdinal, t,
-      reference = result.emdBasis)
+    violationsWithin(result, qis, sensitiveOrdinal, t, Interpreted.fits)
+
+  private[graft] def violationsWithin(result: AnonymizationResult, qis: Seq[String],
+                                      sensitiveOrdinal: String, t: Double,
+                                      route: DataFrame => Boolean): Long =
+    Interpreted(result.anonymized, route) { (in, _) =>
+      TCloseness.violationCount(in, qis, sensitiveOrdinal, t, reference = result.emdBasis)
+    }
 }

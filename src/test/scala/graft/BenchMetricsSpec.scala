@@ -39,9 +39,11 @@ class BenchMetricsSpec extends SparkSpec {
   }
 
   test("snapshot json is well-formed") {
-    val s = BenchMetrics.ResourceSnapshot(1.5, 2.25, 10.0, 0.0, 64.0, 512.0, 600.0)
+    val s = BenchMetrics.ResourceSnapshot(1.5, 2.25, 10.0, 0.0, 64.0, 512.0, 600.0,
+      codegenCompiles = 7L)
     val j = s.json
     assert(j.startsWith("{") && j.endsWith("}"), j)
     assert(j.contains("\"shuffle_read_mb\":1.500") && j.contains("\"rss_hwm_mb\":600.0"), j)
+    assert(j.contains("\"codegen_compiles\":7}"), j)
   }
 }

@@ -53,18 +53,22 @@ class AdultGoldenSpec extends SparkSpec {
     assert(adult.count() == 29111L) // 32,561 raw; '?' rows dropped (S1+S2)
   }
 
-  test("URL ingest: the reference's own fetch form (skipped offline)") {
+  test("URL ingest: the reference's own fetch form (opt-in, GRAFT_URL_INGEST=1)") {
     // naive-suppresion.py:13-14 reads the UCI census CSV straight from
-    // its URL; the engine contract is fetch-to-local then load. This
-    // sandbox has zero egress, so the download failing cancels (not
-    // fails) the case — on a networked machine it runs for real.
+    // its URL; the engine contract is fetch-to-local then load. The case
+    // reaches an outside host, so it runs only when GRAFT_URL_INGEST=1 is
+    // set (nothing in the build sets it) and otherwise cancels before
+    // opening a connection; on an opted-in machine without egress the
+    // failed download cancels it too.
+    assume(sys.env.get("GRAFT_URL_INGEST").contains("1"),
+      "URL ingest reaches archive.ics.uci.edu; set GRAFT_URL_INGEST=1 to run it")
     val url = "https://archive.ics.uci.edu/ml/machine-learning-databases/adult/adult.data"
     val dest = s"${tempDir("adult_url")}/adult.data"
     val fetched =
       try CsvSource.fetch(url, dest, connectTimeoutMs = 5000, readTimeoutMs = 30000)
       catch {
         case e: java.io.IOException =>
-          cancel(s"offline sandbox, URL ingest skipped: ${e.getMessage}")
+          cancel(s"no egress, URL ingest skipped: ${e.getMessage}")
       }
     val df = AdultSchema.load(spark, fetched)
     assert(df.count() == 30162L) // the reference's post-dropna row count (README.md:3)
