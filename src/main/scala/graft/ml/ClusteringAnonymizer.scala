@@ -36,7 +36,7 @@ import org.apache.spark.sql.types.{DoubleType, FloatType, StringType}
   * runs 12 jobs (the dictionaries 2, the KMeans fit 8) in 1.4–1.6 s warm on
   * either codegen route; E2's 20 jobs add the metric aggregations and the
   * cache, and there the compiled route compiled 56 classes a warm pass,
-  * the interpreted one 10 ([[graft.util.Interpreted]]).
+  * the interpreted one next to none ([[graft.util.Interpreted]]).
   */
 final case class ClusteringResult(
     clustered: DataFrame,   // input + `cluster` column

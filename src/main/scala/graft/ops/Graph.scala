@@ -765,7 +765,7 @@ object Graph {
     // cross-query interference class this codebase's QueryCleanup /
     // Provenance scoping exists to kill). Instead the small-state round
     // plan is RE-BOUND onto a dedicated child session (a
-    // [[graft.SparkInternals.cloneSession]]: it shares the SparkContext
+    // [[graft.SparkInternals.childSession]]: it shares the SparkContext
     // and cache manager, keeps the caller's runtime confs and query
     // listeners, and isolates its own SQL conf) that has AQE off
     // permanently; the result is rebound onto the caller's session, so
@@ -785,7 +785,7 @@ object Graph {
     // count, never by the local core count, so the gate fires — and the
     // plan it produces — identically on a cluster.
     val SmallParts = 8
-    lazy val quiet: SparkSession = graft.SparkInternals.cloneSession(spark,
+    lazy val quiet: SparkSession = graft.SparkInternals.childSession(spark,
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.shuffle.partitions" -> SmallParts.toString)
     def roundPlan(living: Long)(plan: DataFrame): DataFrame =

@@ -45,7 +45,8 @@ object TCloseness {
     * collect is LIMIT-capped (TakeOrdered), so a mistakenly
     * high-cardinality column fails fast instead of OOMing the driver. */
   def ordinal(df: DataFrame, c: String, outCol: String): DataFrame =
-    // a small input runs interpreted; the frame returned is on df's session
+    // a small cached input runs interpreted (a file scan, q27's, stays
+    // compiled); the frame returned is on df's session
     Interpreted(df) { (in, home) =>
       val spark = in.sparkSession
       import spark.implicits._

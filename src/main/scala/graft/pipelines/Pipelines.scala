@@ -20,9 +20,9 @@ import org.apache.spark.sql.functions._
   * warm compiled pass spent its time compiling 180–190 Janino classes that
   * Spark's 100-entry codegen cache could not keep (E1 31, E3 72, the
   * recheck 16, E2 56). So each entry point runs a small input
-  * [[graft.util.Interpreted]] (the same jobs, 37 classes a warm pass) and
-  * returns every frame on the caller's session; the release cached inside
-  * stays shared.
+  * [[graft.util.Interpreted]] (the same jobs; a warm pass compiles next to
+  * nothing, 2 classes in InterpretedSpec) and returns every frame on the
+  * caller's session; the release cached inside stays shared.
   *
   * `emdBasis` (E3 only): the sensitive distribution the t-closeness filter
   * measured classes against — the per-position counts of the k-anonymized

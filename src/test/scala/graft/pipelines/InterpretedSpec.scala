@@ -6,7 +6,8 @@ import graft.schema.AdultSchema
 import graft.sources.CsvSource
 import graft.util.Interpreted
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.rand
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -22,10 +23,13 @@ import scala.jdk.CollectionConverters._
 class InterpretedSpec extends SparkSpec {
   import spark.implicits._
 
-  private lazy val adult = {
+  private lazy val adultDir = {
     val dir = tempDir("interpreted_adult")
     CsvSource.write(AdultFixture.raw(spark), dir)
-    val d = AdultSchema.load(spark, dir).cache()
+    dir
+  }
+  private lazy val adult = {
+    val d = AdultSchema.load(spark, adultDir).cache()
     d.count()
     d
   }
@@ -72,17 +76,28 @@ class InterpretedSpec extends SparkSpec {
       _.modifiedConfigs.get("spark.sql.codegen.factoryMode").contains("NO_CODEGEN"))
   }
 
-  test("the Adult fixture runs interpreted; past the bound or an unfilled cache stays compiled") {
+  test("the Adult fixture runs interpreted; past the bound, a file scan or an unfilled cache stays compiled") {
     assert(Interpreted.fits(adult), s"${Interpreted.inputBytes(adult)} bytes")
     val e1 = interpretedRuns {
       NaiveSuppressionPipeline.run(adult, qis, k = 5).anonymized.unpersist()
     }
     assert(e1.nonEmpty && e1.forall(identity), s"E1 executions interpreted: $e1")
-    // Range estimates 8 bytes a row, so these sit on either side of the bound
-    val edge = Interpreted.MaxInputBytes / 8
-    assert(Interpreted.fits(spark.range(edge).toDF()))
-    assert(!Interpreted.fits(spark.range(edge + 1).toDF()))
-    // an RDD-backed cache reports Spark's default size until it is filled
+    // ordinal's dictionary is a local relation, so E3's input still fits
+    val e3Input = TCloseness.ordinal(adult, "income", "income_pos")
+    assert(Interpreted.fits(e3Input), s"${Interpreted.inputBytes(e3Input)} bytes")
+    // random doubles defeat the cache's column compression: 8 bytes a row
+    val past = spark.range(Interpreted.MaxInputBytes / 8 * 5 / 4)
+      .select(rand(7).as("x")).cache()
+    try {
+      past.count()
+      assert(Interpreted.inputBytes(past).exists(_ > Interpreted.MaxInputBytes),
+        s"${Interpreted.inputBytes(past)} bytes")
+      assert(!Interpreted.fits(past))
+    } finally past.unpersist()
+    // a file scan reports its size on disk, not the rows it decodes to
+    val scan = spark.read.text(adultDir)
+    assert(Interpreted.inputBytes(scan).isEmpty && !Interpreted.fits(scan))
+    // and a cache counts only once it is filled
     val unfilled = spark.createDataFrame(adult.rdd, adult.schema).cache()
     try {
       assert(!Interpreted.fits(unfilled), s"${Interpreted.inputBytes(unfilled)} bytes")
@@ -93,17 +108,27 @@ class InterpretedSpec extends SparkSpec {
     } finally unfilled.unpersist()
   }
 
-  test("a warm second pass of the study compiles a fifth of the compiled route's classes") {
+  test("q27's ordinal over a Parquet scan stays compiled") {
+    val dir = tempDir("interpreted_events")
+    Seq((1L, "view"), (2L, "buy"), (3L, "view")).toDF("event_id", "event_type")
+      .write.mode("overwrite").parquet(dir)
+    val runs = interpretedRuns {
+      TCloseness.ordinal(spark.read.parquet(dir), "event_type", "event_type_idx").collect()
+    }
+    assert(runs.nonEmpty && !runs.exists(identity), s"executions interpreted: $runs")
+  }
+
+  test("a warm second pass of the study compiles next to nothing") {
     study(adult, Interpreted.fits)
     val before = BenchMetrics.codegenCompiles
     study(adult, Interpreted.fits)
     val compiles = BenchMetrics.codegenCompiles - before
-    // the compiled route recompiles 180-190 classes a warm pass. The 37
-    // left are what the interpreted operators still generate in their
-    // tasks (cache column readers, aggregation row joiners, sort
-    // orderings): each clone's tasks load classes through a class loader
-    // of their own, so the codegen cache misses them on every call
-    assert(compiles <= 40, s"$compiles classes compiled on a warm pass")
+    // the compiled route recompiles 180-190 classes a warm pass. The
+    // interpreted operators still generate some classes in their tasks
+    // (cache column readers, aggregation row joiners, sort orderings);
+    // the codegen cache keeps them because the pipelines reuse one child
+    // session, whose tasks load classes through one class loader
+    assert(compiles <= 8, s"$compiles classes compiled on a warm pass")
   }
 
   test("both routes release the same reports and the same rows") {
@@ -115,6 +140,8 @@ class InterpretedSpec extends SparkSpec {
 
   test("the child session sees the caller's runtime confs and functions, and the caller keeps its own") {
     val key = "spark.graft.interpreted.probe"
+    // a child made before the caller's changes
+    Interpreted(spark.range(3).toDF(), _ => true) { (in, _) => in.count() }
     spark.conf.set(key, "caller")
     spark.udf.register("graft_interpreted_probe", (x: Long) => x + 1)
     try {
@@ -132,7 +159,7 @@ class InterpretedSpec extends SparkSpec {
     }
   }
 
-  test("the caller's query listener sees every SQL execution of kCore and the three pipelines") {
+  test("a listener the caller registers after its children exist hears all their executions, and none once unregistered") {
     val named = new AtomicInteger
     val seen = new AtomicInteger
     // a QueryExecutionListener hears of an execution when it has a name
@@ -153,22 +180,59 @@ class InterpretedSpec extends SparkSpec {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 6L))
       .toDF("src", "dst")
     val small = adult.limit(2000).cache()
+    small.count()
+    // kCore's and the pipelines' children, made before the listener
+    Graph.kCore(edges, "src", "dst", k = 2).count()
+    study(small, Interpreted.fits)
     spark.sparkContext.addSparkListener(all)
     spark.listenerManager.register(caller)
     try {
       val core = Graph.kCore(edges, "src", "dst", k = 2)
       assert(core.sparkSession eq spark, "kCore returned its frame on its own session")
       assert(core.count() == 3)
-      small.count()
       study(small, Interpreted.fits)
       SparkInternals.flushListenerBus(spark.sparkContext)
       assert(named.get > 20 && seen.get == named.get,
         s"the caller's listener saw ${seen.get} of ${named.get} executions")
+      spark.listenerManager.unregister(caller)
+      val heard = seen.get
+      Graph.kCore(edges, "src", "dst", k = 2).count()
+      study(small, Interpreted.fits)
+      SparkInternals.flushListenerBus(spark.sparkContext)
+      assert(seen.get == heard, s"an unregistered listener heard ${seen.get - heard} more executions")
     } finally {
       spark.listenerManager.unregister(caller)
       spark.sparkContext.removeSparkListener(all)
       small.unpersist()
       QueryCleanup.drain()
     }
+  }
+
+  test("calls share one child session, remade when the caller changes") {
+    def child(): SparkSession = Interpreted(adult, _ => true) { (in, _) => in.sparkSession }
+    val first = child()
+    assert((first ne spark) && (child() eq first))
+    val key = "spark.graft.interpreted.probe"
+    spark.conf.set(key, "changed")
+    try {
+      val next = child()
+      assert((next ne first) && (child() eq next))
+    } finally spark.conf.unset(key)
+    // Spark keeps each session that has run a query reachable, with a
+    // listener bus on the shared queue while it has query listeners, so
+    // passes must not leave a session behind a call
+    val sessions = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkSession, java.lang.Boolean]())
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = sessions.add(qe.sparkSession)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = sessions.add(qe.sparkSession)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      for (_ <- 1 to 3) study(adult, Interpreted.fits)
+      SparkInternals.flushListenerBus(spark.sparkContext)
+      val others = sessions.asScala.filterNot(_ eq spark)
+      assert(others.size == 1, s"three passes ran on ${others.size} sessions besides the caller's")
+    } finally spark.listenerManager.unregister(listener)
   }
 }
