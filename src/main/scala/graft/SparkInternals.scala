@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.SparkContext
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 
 /** Narrow access point for Spark-internal plumbing the public API doesn't
   * expose. Kept to THREE capabilities on purpose: draining the async
@@ -10,27 +11,13 @@ import org.apache.spark.SparkContext
   * shared session state. (Freeing checkpoint storage, which
   * `Dataset.unpersist` can't reach, belongs to
   * [[graft.util.Truncate.release]].)
-  * Uses reflection rather than a `package org.apache.spark` escape
-  * so the project's own namespace stays honest. If the internal shape
-  * ever changes, both fail with an error naming the lookup that broke:
-  * a silent fallback would time snapshots that race their events, or run
-  * a round under the wrong session's conf. */
+  * The package-private calls themselves live in
+  * [[org.apache.spark.sql.GraftBridge]], in Spark's own package (as
+  * `GraftLloyd` lives in MLlib's), so a Spark whose internal shape differs
+  * fails the build instead of a run; nothing here falls back silently. */
 object SparkInternals {
 
-  /** `f`, with a failed reflective lookup reported as `what`, and an
-    * exception thrown by the invoked method rethrown as itself. */
-  private def reflect[T](what: String)(f: => T): T =
-    try f catch {
-      case e: java.lang.reflect.InvocationTargetException => throw e.getCause
-      case e @ (_: ReflectiveOperationException | _: NoSuchElementException) =>
-        throw new IllegalStateException(s"Spark internal lookup failed: $what", e)
-    }
-
-  def flushListenerBus(sc: SparkContext): Unit =
-    reflect("SparkContext.listenerBus().waitUntilEmpty()") {
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    }
+  def flushListenerBus(sc: SparkContext): Unit = GraftBridge.waitUntilEmpty(sc)
 
   /** A child of `spark` with `overrides` set on the child alone: a clone
     * (`SparkSession.cloneSession`, `private[sql]`), so unlike
@@ -45,19 +32,15 @@ object SparkInternals {
     * which the codegen cache is keyed by, so a fresh clone recompiles what
     * the last one compiled (PERFORMANCE.md "Where a warm Adult pass
     * goes"). */
-  private[graft] def childSession(spark: org.apache.spark.sql.SparkSession,
-                                 overrides: (String, String)*): org.apache.spark.sql.SparkSession =
+  private[graft] def childSession(spark: SparkSession, overrides: (String, String)*): SparkSession =
     children.synchronized {
       val mine = children.computeIfAbsent(spark, _ =>
-        new java.util.HashMap[Seq[(String, String)], (Lineage, org.apache.spark.sql.SparkSession)]())
+        new java.util.HashMap[Seq[(String, String)], (Lineage, SparkSession)]())
       val now = lineage(spark)
       Option(mine.get(overrides)) match {
         case Some((seen, child)) if seen == now => child
         case _ =>
-          val child = reflect("org.apache.spark.sql.classic.SparkSession.cloneSession()") {
-            spark.getClass.getMethod("cloneSession").invoke(spark)
-              .asInstanceOf[org.apache.spark.sql.SparkSession]
-          }
+          val child = GraftBridge.cloneSession(spark)
           overrides.foreach { case (k, v) => child.conf.set(k, v) }
           mine.put(overrides, (now, child))
           child
@@ -67,20 +50,16 @@ object SparkInternals {
   private type Lineage = (Map[String, String], Map[AnyRef, AnyRef], Seq[AnyRef])
 
   // caller -> (overrides -> the lineage its child was cloned from, the child)
-  private val children = new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-    java.util.HashMap[Seq[(String, String)], (Lineage, org.apache.spark.sql.SparkSession)]]()
+  private val children = new java.util.WeakHashMap[SparkSession,
+    java.util.HashMap[Seq[(String, String)], (Lineage, SparkSession)]]()
 
   /** What a child copies from `spark` when it is cloned: the runtime confs,
     * each function name with its builder, and the query listeners. */
-  private def lineage(spark: org.apache.spark.sql.SparkSession): Lineage = {
+  private def lineage(spark: SparkSession): Lineage = {
     val functions = spark.sessionState.functionRegistry
-    val listeners = reflect("ExecutionListenerManager.listListeners()") {
-      spark.listenerManager.getClass.getMethod("listListeners").invoke(spark.listenerManager)
-        .asInstanceOf[Array[AnyRef]].toSeq
-    }
     (spark.conf.getAll,
       functions.listFunction().map(f => (f: AnyRef) -> functions.lookupFunctionBuilder(f)).toMap,
-      listeners)
+      GraftBridge.listeners(spark))
   }
 
   /** Re-bind `df`'s ANALYZED plan onto `target` (usually a
@@ -91,12 +70,6 @@ object SparkInternals {
     * `SQLConf.withExistingConf` override does NOT work here — measured:
     * query planning pins the owning session's conf — which is why the
     * plan must move to the session instead of the conf to the thread. */
-  def rebind(target: org.apache.spark.sql.SparkSession,
-             df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    reflect("org.apache.spark.sql.classic.Dataset$.ofRows(SparkSession, LogicalPlan)") {
-      val mod = Class.forName("org.apache.spark.sql.classic.Dataset$")
-      mod.getMethods.find(x => x.getName == "ofRows" && x.getParameterCount == 2).get
-        .invoke(mod.getField("MODULE$").get(null), target, df.queryExecution.analyzed)
-        .asInstanceOf[org.apache.spark.sql.DataFrame]
-    }
+  def rebind(target: SparkSession, df: DataFrame): DataFrame =
+    GraftBridge.ofRows(target, df.queryExecution.analyzed)
 }

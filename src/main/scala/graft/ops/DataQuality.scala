@@ -146,12 +146,7 @@ object DataQuality {
       .agg(sum(when(col("__side") === 0, 1L).otherwise(0L)).as("__ca"),
         sum(when(col("__side") === 1, 1L).otherwise(0L)).as("__cb"))
     val tot = counts.agg(sum(col("__ca")).as("__na"), sum(col("__cb")).as("__nb"))
-    val bounds = counts.agg(min(col("__v")).as("__bmn"), max(col("__v")).as("__bmx"))
-    val withB = counts.crossJoin(broadcast(bounds))
-    val bWidth = (col("__bmx") - col("__bmn")) / lit(1024.0)
-    val bucket = when(bWidth > 0,
-      least(floor((col("__v") - col("__bmn")) / bWidth), lit(1023L)))
-      .otherwise(lit(0L))
+    val (withB, bucket) = Ranking.valueBuckets(counts, "__v")
     val cum = Ranking.globalPrefixSum(
       Ranking.globalPrefixSum(withB, Seq("__v"), bucket, "__ca", "__cca"),
       Seq("__v"), bucket, "__cb", "__ccb")
@@ -193,14 +188,7 @@ object DataQuality {
       .agg(sum(when(col("__side") === 0, 1L).otherwise(0L)).as("__ca"),
         sum(when(col("__side") === 1, 1L).otherwise(0L)).as("__cb"))
       .withColumn("__t", col("__ca") + col("__cb"))
-    val bounds = counts.agg(min(col("__v")).as("__bmn"), max(col("__v")).as("__bmx"))
-    val withB = counts.crossJoin(broadcast(bounds))
-    val bWidth = (col("__bmx") - col("__bmn")) / lit(1024.0)
-    val bucket = when(bWidth > 0,
-      least(floor((col("__v") - col("__bmn")) / bWidth), lit(1023L)))
-      .otherwise(lit(0L))
-    val cum = Ranking.globalPrefixSum(withB, Seq("__v"), bucket, "__t", "__cumt")
-      .withColumn("__before", col("__cumt") - col("__t"))
+    val cum = Ranking.valueCountsBefore(counts, "__v", "__t")
     val agg = cum.agg(
       sum(col("__ca")).as("n_a"),
       sum(col("__cb")).as("n_b"),
@@ -250,14 +238,8 @@ object DataQuality {
       .filter(col("__a").isNotNull && col("__b").isNotNull)
     def doubledRanks(vc: String, out: String): DataFrame = {
       val counts = rows.groupBy(col(vc).as("__v")).agg(count(lit(1)).as("__t"))
-      val bounds = counts.agg(min(col("__v")).as("__bmn"), max(col("__v")).as("__bmx"))
-      val withB = counts.crossJoin(broadcast(bounds))
-      val bWidth = (col("__bmx") - col("__bmn")) / lit(1024.0)
-      val bucket = when(bWidth > 0,
-        least(floor((col("__v") - col("__bmn")) / bWidth), lit(1023L)))
-        .otherwise(lit(0L))
-      Ranking.globalPrefixSum(withB, Seq("__v"), bucket, "__t", "__cum")
-        .withColumn(out, (col("__cum") - col("__t")) * 2 + col("__t") + 1)
+      Ranking.valueCountsBefore(counts, "__v", "__t")
+        .withColumn(out, col("__before") * 2 + col("__t") + 1)
         .select(col("__v").as(vc), col(out))
     }
     val joined = rows

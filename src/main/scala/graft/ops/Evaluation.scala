@@ -110,7 +110,7 @@ object Evaluation {
     *
     * Determinism and scale are [[graft.ops.DataQuality.mannWhitneyU]]'s
     * contract verbatim: ranks come from the distinct-score counts table
-    * via [[Ranking.globalPrefixSum]] (1024 monotone score buckets — a
+    * via [[Ranking.valueCountsBefore]] (1024 monotone score buckets — a
     * continuous score's distinct domain is DATA-sized, so no `ORDER BY
     * score` global window), doubled midranks keep every intermediate
     * integer, and products widen to decimal(38) before multiplying
@@ -119,27 +119,8 @@ object Evaluation {
     * be ranked and must not count toward n⁺/n⁻ either — the ksTest
     * NULL contract). Output: one row (n_pos, n_neg, auc); auc is null
     * when either class is empty. */
-  def aucRoc(df: DataFrame, labelCol: String, scoreCol: String): DataFrame = {
-    val rows = df.select(col(scoreCol).cast("double").as("__v"),
-        when(col(labelCol).cast("boolean"), 1L).otherwise(0L).as("__pos"))
-      .filter(col("__v").isNotNull && col(labelCol).isNotNull)
-    val counts = rows.groupBy(col("__v"))
-      .agg(sum(col("__pos")).as("__cp"), count(lit(1)).as("__t"))
-    val cum = Ranking.valueCountsBefore(counts, "__v", "__t")
-    val agg = cum.agg(
-      sum(col("__cp")).as("n_pos"),
-      sum(col("__t") - col("__cp")).as("n_neg"),
-      // doubled positive rank-sum: midrank(v) = before + (t+1)/2, so
-      // 2·R⁺ = Σ cp·(2·before + t + 1) stays integer under ties
-      sum(dec(col("__cp")) * (col("__before") * 2 + col("__t") + 1)).as("__r2p"))
-    // U⁺ = R⁺ − n⁺(n⁺+1)/2, all in decimal(38) before the one edge division
-    val u2p = col("__r2p") - dec(col("n_pos")) * (col("n_pos") + 1)
-    agg.select(col("n_pos"), col("n_neg"),
-      when(col("n_pos") > 0 && col("n_neg") > 0,
-        round(u2p.cast("double")
-          / (dec(col("n_pos")) * col("n_neg") * 2).cast("double"), 6))
-        .as("auc"))
-  }
+  def aucRoc(df: DataFrame, labelCol: String, scoreCol: String): DataFrame =
+    auc(df, None, labelCol, scoreCol)
 
   /** Per-segment ROC AUC — [[aucRoc]] computed independently within each
     * level of `groupCol`, in one pipeline: the fairness/robustness audit
@@ -155,25 +136,33 @@ object Evaluation {
     * score table only), then one segment-keyed aggregate. No data-sized
     * sort window, no per-segment job fan-out. */
   def aucRocBySegment(df: DataFrame, groupCol: String, labelCol: String,
-                      scoreCol: String): DataFrame = {
-    val rows = df.select(col(groupCol).as("__g"),
+                      scoreCol: String): DataFrame =
+    auc(df, Some(groupCol), labelCol, scoreCol)
+
+  /** [[aucRoc]] per level of `groupCol`; with no group, one global row. */
+  private def auc(df: DataFrame, groupCol: Option[String], labelCol: String,
+                  scoreCol: String): DataFrame = {
+    val g = groupCol.map(_ => "__g").toSeq
+    val rows = df.select(groupCol.map(col(_).as("__g")).toSeq ++ Seq(
         col(scoreCol).cast("double").as("__v"),
-        when(col(labelCol).cast("boolean"), 1L).otherwise(0L).as("__pos"))
-      .filter(col("__v").isNotNull && col(labelCol).isNotNull
-        && col("__g").isNotNull)
-    val counts = rows.groupBy(col("__g"), col("__v"))
+        when(col(labelCol).cast("boolean"), 1L).otherwise(0L).as("__pos")): _*)
+      .filter((g :+ "__v").map(col(_).isNotNull).reduce(_ && _) && col(labelCol).isNotNull)
+    val counts = rows.groupBy((g :+ "__v").map(col): _*)
       .agg(sum(col("__pos")).as("__cp"), count(lit(1)).as("__t"))
-    val cum = Ranking.valueCountsBeforeByTag(counts, "__g", "__v", "__t")
-    val agg = cum.groupBy(col("__g")).agg(
+    val cum = Ranking.countsBefore(counts, g, "__v", "__t")
+    val agg = cum.groupBy(g.map(col): _*).agg(
       sum(col("__cp")).as("n_pos"),
       sum(col("__t") - col("__cp")).as("n_neg"),
+      // doubled positive rank-sum: midrank(v) = before + (t+1)/2, so
+      // 2·R⁺ = Σ cp·(2·before + t + 1) stays integer under ties
       sum(dec(col("__cp")) * (col("__before") * 2 + col("__t") + 1)).as("__r2p"))
+    // U⁺ = R⁺ − n⁺(n⁺+1)/2, all in decimal(38) before the one edge division
     val u2p = col("__r2p") - dec(col("n_pos")) * (col("n_pos") + 1)
-    agg.select(col("__g").as(groupCol), col("n_pos"), col("n_neg"),
+    agg.select(groupCol.map(col("__g").as(_)).toSeq ++ Seq(col("n_pos"), col("n_neg"),
       when(col("n_pos") > 0 && col("n_neg") > 0,
         round(u2p.cast("double")
           / (dec(col("n_pos")) * col("n_neg") * 2).cast("double"), 6))
-        .as("auc"))
+        .as("auc")): _*)
   }
 
   /** Calibration (reliability) table of a [0,1] score against a binary
@@ -383,43 +372,8 @@ object Evaluation {
     * join + one aggregation. Three passes, all map-side-combined. */
   def conformalInterval(train: DataFrame, calib: DataFrame, test: DataFrame,
                         catCol: String, yCol: String,
-                        alpha: Double = 0.1): DataFrame = {
-    require(alpha > 0 && alpha < 1, s"conformalInterval: alpha=$alpha outside (0,1)")
-    val pred = train.select(col(catCol).as("__c"),
-        col(yCol).cast("decimal(28,6)").as("__y"))
-      .filter(col("__c").isNotNull && col("__y").isNotNull)
-      .groupBy(col("__c"))
-      .agg(round(sum(col("__y")).cast("double") / count(lit(1)), 6).as("__pred"))
-    val resid = calib.select(col(catCol).as("__c"),
-        col(yCol).cast("double").as("__yv"))
-      .filter(col("__c").isNotNull && col("__yv").isNotNull)
-      .join(broadcast(pred), Seq("__c"))
-      .select(round(abs(col("__yv") - col("__pred")), 6).as("__r"))
-    val counts = resid.groupBy(col("__r")).agg(count(lit(1)).as("__cnt"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    graft.QueryCleanup.register(() => counts.unpersist())
-    val nCal = counts.agg(sum(col("__cnt")).as("__n"))
-    // k = min(n, ceil((n+1)(1-alpha))): the exact split-conformal rank
-    val qhat = Ranking.valueCountsBefore(counts, "__r", "__cnt")
-      .crossJoin(broadcast(nCal))
-      .withColumn("__k", least(col("__n"),
-        ceil((col("__n") + 1) * lit(1.0 - alpha)).cast("long")))
-      .filter(col("__before") < col("__k")
-        && col("__before") + col("__cnt") >= col("__k"))
-      .agg(min(col("__r")).as("q_hat"))
-    test.select(col(catCol).as("__c"), col(yCol).cast("double").as("__yv"))
-      .filter(col("__c").isNotNull && col("__yv").isNotNull)
-      .join(broadcast(pred), Seq("__c"))
-      .crossJoin(broadcast(qhat))
-      .groupBy(col("__c"), col("q_hat"))
-      .agg(count(lit(1)).as("n_test"),
-        sum(when(round(abs(col("__yv") - col("__pred")), 6) <= col("q_hat"),
-          1L).otherwise(0L)).as("n_covered"))
-      .select(col("__c").as(catCol), col("q_hat"),
-        col("n_test"), col("n_covered"),
-        round(col("n_covered").cast("double") / col("n_test").cast("double"), 6)
-          .as("coverage"))
-  }
+                        alpha: Double = 0.1): DataFrame =
+    conformal(train, calib, test, catCol, yCol, alpha, byGroup = false)
 
   /** GROUP-CONDITIONAL split conformal ("Mondrian conformal", Vovk
     * 2012): [[conformalInterval]] computes ONE global q̂, which
@@ -439,9 +393,17 @@ object Evaluation {
     * q̂ table is category-sized and broadcasts. */
   def conformalIntervalByGroup(train: DataFrame, calib: DataFrame,
                                test: DataFrame, catCol: String, yCol: String,
-                               alpha: Double = 0.1): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(alpha > 0 && alpha < 1, s"conformalIntervalByGroup: alpha=$alpha outside (0,1)")
+                               alpha: Double = 0.1): DataFrame =
+    conformal(train, calib, test, catCol, yCol, alpha, byGroup = true)
+
+  /** [[conformalIntervalByGroup]] when `byGroup`, else the one global q̂
+    * of [[conformalInterval]]. */
+  private def conformal(train: DataFrame, calib: DataFrame, test: DataFrame,
+                        catCol: String, yCol: String, alpha: Double,
+                        byGroup: Boolean): DataFrame = {
+    require(alpha > 0 && alpha < 1, s"conformal interval: alpha=$alpha outside (0,1)")
+    // the q̂ key: the category, or nothing for one global q̂
+    val g = if (byGroup) Seq("__c") else Nil
     val pred = train.select(col(catCol).as("__c"),
         col(yCol).cast("decimal(28,6)").as("__y"))
       .filter(col("__c").isNotNull && col("__y").isNotNull)
@@ -451,20 +413,25 @@ object Evaluation {
         col(yCol).cast("double").as("__yv"))
       .filter(col("__c").isNotNull && col("__yv").isNotNull)
       .join(broadcast(pred), Seq("__c"))
-      .select(col("__c"), round(abs(col("__yv") - col("__pred")), 6).as("__r"))
-    val counts = resid.groupBy(col("__c"), col("__r"))
-      .agg(count(lit(1)).as("__cnt"))
-    val qhat = Ranking.valueCountsBeforeByTag(counts, "__c", "__r", "__cnt")
-      .withColumn("__n", sum(col("__cnt")).over(Window.partitionBy(col("__c"))))
+      .select(g.map(col) :+ round(abs(col("__yv") - col("__pred")), 6).as("__r"): _*)
+    // the distinct-residual counts feed three consumers (bounds probe,
+    // n, prefix-sum pass): persist so the residuals aggregate once
+    val counts = resid.groupBy((g :+ "__r").map(col): _*).agg(count(lit(1)).as("__cnt"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    graft.QueryCleanup.register(() => counts.unpersist())
+    val nCal = counts.groupBy(g.map(col): _*).agg(sum(col("__cnt")).as("__n"))
+    // k = min(n, ceil((n+1)(1-alpha))): the exact split-conformal rank
+    val qhat = Ranking.countsBefore(counts, g, "__r", "__cnt")
+      .join(broadcast(nCal), g)
       .withColumn("__k", least(col("__n"),
         ceil((col("__n") + 1) * lit(1.0 - alpha)).cast("long")))
       .filter(col("__before") < col("__k")
         && col("__before") + col("__cnt") >= col("__k"))
-      .groupBy(col("__c")).agg(min(col("__r")).as("q_hat"))
+      .groupBy(g.map(col): _*).agg(min(col("__r")).as("q_hat"))
     test.select(col(catCol).as("__c"), col(yCol).cast("double").as("__yv"))
       .filter(col("__c").isNotNull && col("__yv").isNotNull)
       .join(broadcast(pred), Seq("__c"))
-      .join(broadcast(qhat), Seq("__c"))
+      .join(broadcast(qhat), g)
       .groupBy(col("__c"), col("q_hat"))
       .agg(count(lit(1)).as("n_test"),
         sum(when(round(abs(col("__yv") - col("__pred")), 6) <= col("q_hat"),

@@ -131,12 +131,7 @@ object EventAnalytics {
     // monotone bucket (the groupRowNumber contract): equal-width bins
     // against the GLOBAL value bounds — pmod would wrap and break the
     // rank-offset ordering
-    val bounds = rows.agg(min(col("__vm")).as("__bmn"), max(col("__vm")).as("__bmx"))
-    val withB = rows.crossJoin(broadcast(bounds))
-    val bWidth = (col("__bmx") - col("__bmn")).cast("double") / 64.0
-    val bucket = when(bWidth > 0,
-      least(floor((col("__vm") - col("__bmn")).cast("double") / bWidth), lit(63L)))
-      .otherwise(lit(0L))
+    val (withB, bucket) = Ranking.valueBuckets(rows, "__vm")
     val ranked = Ranking.groupRowNumber(withB, Seq("__g"),
       Seq("__vm", "__t"), bucket, "__r")
     def dec(c: Column): Column = c.cast("decimal(38,0)")

@@ -363,15 +363,9 @@ object Graph {
         s.withColumn(rankName, row_number().over(w).cast("long"))
           .select(col("node"), col(rankName))
       } else {
-        val bounds = s.agg(min(col("__negs")).as("__bmn"),
-          max(col("__negs")).as("__bmx"))
-        val withB = s.crossJoin(broadcast(bounds))
-        val bWidth = (col("__bmx") - col("__bmn")) / lit(1024.0)
-        // monotone coarse prefix of the (__negs, node) order — the
-        // globalRowNumber contract; degenerate one-value domains → bucket 0
-        val bucket = when(bWidth > 0,
-          least(floor((col("__negs") - col("__bmn")) / bWidth), lit(1023L)))
-          .otherwise(lit(0L))
+        // the score's buckets are a monotone coarse prefix of the
+        // (__negs, node) order — the globalRowNumber contract
+        val (withB, bucket) = Ranking.valueBuckets(s, "__negs")
         Ranking.globalRowNumber(withB, Seq("__negs", "node"), bucket, rankName)
           .select(col("node"), col(rankName).cast("long").as(rankName))
       }

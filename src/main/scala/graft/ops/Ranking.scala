@@ -18,6 +18,9 @@ import org.apache.spark.sql.functions._
   *  3. broadcast-joins the offsets back: bucket rank + offset = the
   *     exact global row number.
   *
+  * Every form runs on ONE core ([[rankOffset]]); a per-GROUP form runs
+  * the scheme within each group, and a global form is its no-group case.
+  *
   * CONTRACT: `bucketExpr` must be MONOTONE in the lexicographic
   * `orderCols` order (a coarse prefix: b(k1) <= b(k2) whenever k1 <= k2
   * — leading digits of a padded key, `floor(x / width)` of the leading
@@ -26,140 +29,60 @@ import org.apache.spark.sql.functions._
   * responsibility — checking it would cost the sort this avoids.
   * `orderCols` must be a TOTAL order (append a unique id as the last
   * key), otherwise ties rank nondeterministically.
+  *
+  * NULL keys: a row whose FIRST order key is NULL is dropped (its
+  * position is undefined), and so is a row whose group or tag key is
+  * NULL (the offsets join back on the group key, and NULL matches
+  * nothing). Filter or coalesce such keys upstream to keep the rows.
   */
 object Ranking {
 
+  /** Append `outCol` = the 1-based global row number of each row in
+    * `orderCols` order. */
+  def globalRowNumber(df: DataFrame, orderCols: Seq[String],
+                      bucketExpr: Column, outCol: String): DataFrame =
+    groupRowNumber(df, Nil, orderCols, bucketExpr, outCol)
+
+  /** Per-GROUP [[globalRowNumber]]: `outCol` = the 1-based row number
+    * within each `groupCols` group in `orderCols` order, without
+    * funneling a hot group through one task. `bucketExpr = lit(0)`
+    * degrades to one window per group (fine when groups are small, the
+    * n² surface elsewhere is the bottleneck, or the caller has no
+    * monotone prefix). No group columns: the global form. */
+  def groupRowNumber(df: DataFrame, groupCols: Seq[String],
+                     orderCols: Seq[String], bucketExpr: Column,
+                     outCol: String): DataFrame =
+    rankOffset(df, groupCols, orderCols, bucketExpr, row_number(), count(lit(1)),
+      outCol, "__rk")
+
   /** Append `outCol` = the INCLUSIVE global prefix sum of `valueCol` in
     * `orderCols` order — the distributed running total behind exact
-    * CDFs (ksTest) and cumulative ledgers. Same contract as
-    * [[globalRowNumber]]: `bucketExpr` must be a monotone coarse prefix
-    * of the order and `orderCols` a total order. Shape: one bucket-
-    * keyed exchange for the in-bucket running sums, a bucket-count-
-    * sized offset table (the only serial step), broadcast back. */
+    * CDFs (ksTest) and cumulative ledgers. Shape: one bucket-keyed
+    * exchange for the in-bucket running sums, a bucket-count-sized
+    * offset table (the only serial step), broadcast back. */
   def globalPrefixSum(df: DataFrame, orderCols: Seq[String],
                       bucketExpr: Column, valueCol: String,
-                      outCol: String): DataFrame = {
-    require(orderCols.nonEmpty, "need at least one order column")
-    val base = df.filter(col(orderCols.head).isNotNull)
-      .withColumn("__psb", bucketExpr)
-    val runW = Window.partitionBy(col("__psb"))
-      .orderBy(orderCols.map(col): _*)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val offW = Window.orderBy(col("__psb"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = base.groupBy(col("__psb")).agg(sum(col(valueCol)).as("__psn"))
-      .withColumn("__pso", coalesce(sum(col("__psn")).over(offW), lit(0L)))
-      .drop("__psn")
-    base.withColumn("__psr", sum(col(valueCol)).over(runW))
-      .join(broadcast(offsets), Seq("__psb"))
-      .withColumn(outCol, col("__psr") + col("__pso"))
-      .drop("__psb", "__psr", "__pso")
-  }
+                      outCol: String): DataFrame =
+    groupPrefixSum(df, Nil, orderCols, bucketExpr, valueCol, outCol)
+
+  /** Per-GROUP [[globalPrefixSum]]: `outCol` = the inclusive running sum
+    * of `valueCol` within each `groupCols` group in `orderCols` order.
+    * No group columns: the global form. */
+  def groupPrefixSum(df: DataFrame, groupCols: Seq[String],
+                     orderCols: Seq[String], bucketExpr: Column,
+                     valueCol: String, outCol: String): DataFrame =
+    rankOffset(df, groupCols, orderCols, bucketExpr, sum(col(valueCol)),
+      sum(col(valueCol)), outCol, "__ps")
 
   /** Append `__before` = the number of UNITS strictly smaller than
     * each row's `valueCol`, given a (value, per-value count) table —
     * the shared preamble of every exact rank statistic built on the
     * distinct-value counts (AUC midranks, quantile tiles, RFM scores):
-    * 1024 equal-width value buckets from a 1-row bounds probe (a
-    * monotone coarse prefix of the value order — the
-    * [[globalPrefixSum]] contract), cumulative counts, minus the row's
-    * own count. Degenerate single-value domains collapse to bucket 0.
+    * [[valueBuckets]], cumulative counts, minus the row's own count.
     * The input must be value-DISTINCT (one row per value). */
   def valueCountsBefore(counts: DataFrame, valueCol: String,
-                        countCol: String): DataFrame = {
-    val bounds = counts.agg(min(col(valueCol)).as("__bmn"),
-      max(col(valueCol)).as("__bmx"))
-    val withB = counts.crossJoin(broadcast(bounds))
-    val bWidth = (col("__bmx") - col("__bmn")) / lit(1024.0)
-    val bucket = when(bWidth > 0,
-      least(floor((col(valueCol) - col("__bmn")) / bWidth), lit(1023L)))
-      .otherwise(lit(0L))
-    globalPrefixSum(withB, Seq(valueCol), bucket, countCol, "__cumt")
-      .withColumn("__before", col("__cumt") - col(countCol))
-      .drop("__bmn", "__bmx", "__cumt")
-  }
-
-  /** Append `outCol` = the 1-based global row number of each row in
-    * `orderCols` order. Rows with a NULL first order key are excluded
-    * (their global position is undefined). */
-  def globalRowNumber(df: DataFrame, orderCols: Seq[String],
-                      bucketExpr: Column, outCol: String): DataFrame = {
-    require(orderCols.nonEmpty, "need at least one order column")
-    val base = df.filter(col(orderCols.head).isNotNull)
-      .withColumn("__rkb", bucketExpr)
-    val rankW = Window.partitionBy(col("__rkb"))
-      .orderBy(orderCols.map(col): _*)
-    val offW = Window.orderBy(col("__rkb"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = base.groupBy(col("__rkb")).agg(count(lit(1)).as("__rkn"))
-      .withColumn("__rko", coalesce(sum(col("__rkn")).over(offW), lit(0L)))
-      .drop("__rkn")
-    base.withColumn("__rkr", row_number().over(rankW))
-      .join(broadcast(offsets), Seq("__rkb"))
-      .withColumn(outCol, col("__rkr") + col("__rko"))
-      .drop("__rkb", "__rkr", "__rko")
-  }
-
-  /** Per-GROUP [[globalRowNumber]]: `outCol` = the 1-based row number
-    * within each `groupCols` group in `orderCols` order, without
-    * funneling a hot group through one task. Ranks come from windows
-    * over (group, bucket); per-(group, bucket) counts prefix-sum into
-    * starting offsets via a window over the TINY counts table
-    * (partitioned by group, ordered by bucket) and join back. Same
-    * monotone-bucket / total-order contract as globalRowNumber, scoped
-    * per group; `bucketExpr = lit(0)` degrades to one window per group
-    * (fine when groups are small, the n² surface elsewhere is the
-    * bottleneck, or the caller has no monotone prefix). */
-  def groupRowNumber(df: DataFrame, groupCols: Seq[String],
-                     orderCols: Seq[String], bucketExpr: Column,
-                     outCol: String): DataFrame = {
-    require(groupCols.nonEmpty, "need at least one group column")
-    require(orderCols.nonEmpty, "need at least one order column")
-    val gc = groupCols.map(col)
-    val base = df.filter(col(orderCols.head).isNotNull)
-      .withColumn("__rkb", bucketExpr)
-    val rankW = Window.partitionBy(gc :+ col("__rkb"): _*)
-      .orderBy(orderCols.map(col): _*)
-    val offW = Window.partitionBy(gc: _*).orderBy(col("__rkb"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = base.groupBy(gc :+ col("__rkb"): _*)
-      .agg(count(lit(1)).as("__rkn"))
-      .withColumn("__rko", coalesce(sum(col("__rkn")).over(offW), lit(0L)))
-      .drop("__rkn")
-    base.withColumn("__rkr", row_number().over(rankW))
-      .join(broadcast(offsets), groupCols :+ "__rkb")
-      .withColumn(outCol, col("__rkr") + col("__rko"))
-      .drop("__rkb", "__rkr", "__rko")
-  }
-
-  /** Per-GROUP [[globalPrefixSum]]: `outCol` = the inclusive running sum
-    * of `valueCol` within each `groupCols` group in `orderCols` order.
-    * Same rank-offset scheme and monotone-bucket / total-order contract,
-    * scoped per group: in-bucket running sums window over (group,
-    * bucket); per-(group, bucket) totals prefix-sum into offsets via a
-    * window over the tiny counts table and broadcast back. */
-  def groupPrefixSum(df: DataFrame, groupCols: Seq[String],
-                     orderCols: Seq[String], bucketExpr: Column,
-                     valueCol: String, outCol: String): DataFrame = {
-    require(groupCols.nonEmpty, "need at least one group column")
-    require(orderCols.nonEmpty, "need at least one order column")
-    val gc = groupCols.map(col)
-    val base = df.filter(col(orderCols.head).isNotNull)
-      .withColumn("__psb", bucketExpr)
-    val runW = Window.partitionBy(gc :+ col("__psb"): _*)
-      .orderBy(orderCols.map(col): _*)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val offW = Window.partitionBy(gc: _*).orderBy(col("__psb"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = base.groupBy(gc :+ col("__psb"): _*)
-      .agg(sum(col(valueCol)).as("__psn"))
-      .withColumn("__pso", coalesce(sum(col("__psn")).over(offW), lit(0L)))
-      .drop("__psn")
-    base.withColumn("__psr", sum(col(valueCol)).over(runW))
-      .join(broadcast(offsets), groupCols :+ "__psb")
-      .withColumn(outCol, col("__psr") + col("__pso"))
-      .drop("__psb", "__psr", "__pso")
-  }
+                        countCol: String): DataFrame =
+    countsBefore(counts, Nil, valueCol, countCol)
 
   /** [[valueCountsBefore]] for SEVERAL metrics in ONE pipeline: the input
     * carries a `tagCol` naming which metric each (value, count) row
@@ -172,16 +95,61 @@ object Ranking {
     * not row count, is the bill (measured on q222: three pipelines =
     * ~18 stages for a 10k-row input). Input must be (tag, value)-DISTINCT. */
   def valueCountsBeforeByTag(counts: DataFrame, tagCol: String,
-                             valueCol: String, countCol: String): DataFrame = {
-    val bounds = counts.groupBy(col(tagCol))
-      .agg(min(col(valueCol)).as("__bmn"), max(col(valueCol)).as("__bmx"))
-    val withB = counts.join(broadcast(bounds), Seq(tagCol))
-    val bWidth = (col("__bmx") - col("__bmn")) / lit(1024.0)
-    val bucket = when(bWidth > 0,
-      least(floor((col(valueCol) - col("__bmn")) / bWidth), lit(1023L)))
-      .otherwise(lit(0L))
-    groupPrefixSum(withB, Seq(tagCol), Seq(valueCol), bucket, countCol, "__cumt")
+                             valueCol: String, countCol: String): DataFrame =
+    countsBefore(counts, Seq(tagCol), valueCol, countCol)
+
+  /** [[valueCountsBeforeByTag]] over any number of tag columns (none: the
+    * global [[valueCountsBefore]]). */
+  private[ops] def countsBefore(counts: DataFrame, tagCols: Seq[String],
+                                valueCol: String, countCol: String): DataFrame = {
+    val (withB, bucket) = valueBuckets(counts, valueCol, tagCols)
+    groupPrefixSum(withB, tagCols, Seq(valueCol), bucket, countCol, "__cumt")
       .withColumn("__before", col("__cumt") - col(countCol))
       .drop("__bmn", "__bmx", "__cumt")
+  }
+
+  /** `df` with the bounds of `valueCol` (per `groupCols` group) from a
+    * 1-row-per-group min/max probe broadcast back, and the bucket
+    * expression over them: 1024 equal-width buckets, a monotone coarse
+    * prefix of the value order (the [[rankOffset]] contract), with a
+    * one-value domain in bucket 0. The two bounds columns ride along in
+    * the frame; project them away before they reach an output. */
+  private[ops] def valueBuckets(df: DataFrame, valueCol: String,
+                                groupCols: Seq[String] = Nil): (DataFrame, Column) = {
+    val bounds = df.groupBy(groupCols.map(col): _*)
+      .agg(min(col(valueCol)).as("__bmn"), max(col(valueCol)).as("__bmx"))
+    val width = (col("__bmx") - col("__bmn")) / lit(1024.0)
+    (df.join(broadcast(bounds), groupCols),
+      when(width > 0, least(floor((col(valueCol) - col("__bmn")) / width), lit(1023L)))
+        .otherwise(lit(0L)))
+  }
+
+  /** The rank-offset core: `outCol` = `inBucket` (a running window
+    * function: `row_number()`, a running `sum`) over each (group, bucket)
+    * in `orderCols` order, plus the sum of `total` over the group's
+    * earlier buckets — a prefix sum over the (group, bucket)-sized totals
+    * table, broadcast back. Scratch columns are prefixed `tmp`: `__rk`
+    * for row numbers, `__ps` for sums, so a plan names which form ran
+    * (PlanShapeSpec's pins read the bucket column's name). */
+  private def rankOffset(df: DataFrame, groupCols: Seq[String],
+                         orderCols: Seq[String], bucketExpr: Column,
+                         inBucket: Column, total: Column, outCol: String,
+                         tmp: String): DataFrame = {
+    require(orderCols.nonEmpty, "need at least one order column")
+    val Seq(b, r, n, o) = Seq("b", "r", "n", "o").map(tmp + _)
+    val gc = groupCols.map(col)
+    val base = df.filter(col(orderCols.head).isNotNull).withColumn(b, bucketExpr)
+    val inW = Window.partitionBy(gc :+ col(b): _*)
+      .orderBy(orderCols.map(col): _*)
+      .rowsBetween(Window.unboundedPreceding, 0)
+    val offW = Window.partitionBy(gc: _*).orderBy(col(b))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val offsets = base.groupBy(gc :+ col(b): _*).agg(total.as(n))
+      .withColumn(o, coalesce(sum(col(n)).over(offW), lit(0L)))
+      .drop(n)
+    base.withColumn(r, inBucket.over(inW))
+      .join(broadcast(offsets), groupCols :+ b)
+      .withColumn(outCol, col(r) + col(o))
+      .drop(b, r, o)
   }
 }

@@ -157,23 +157,25 @@ object StatsQueries {
         .orderBy("o_orderkey")
     }),
 
-    // Bucketed co-located join: both sides written hash-bucketed on the
-    // join key (the one-time ingest shuffle), then join + aggregate run
-    // with ZERO exchanges — the 100 TB layout for repeatedly-joined fact
-    // tables. BucketingSpec asserts the exchange-free plan; the oracle
-    // checks the result equals a plain join.
+    // Bucketed co-located join: both sides written hash-bucketed and
+    // bucket-sorted on the join key (the one-time ingest shuffle), then
+    // join + aggregate run with ZERO exchanges — the 100 TB layout for
+    // repeatedly-joined fact tables. LayoutSpec asserts the exchange-free
+    // plan; the oracle checks the result equals a plain join. The `merge`
+    // hint pins sort-merge join (a broadcast would hide the layout at toy
+    // scale).
     "q95_bucketed_join" -> ((s, dir) => {
+      import graft.sources.BucketedTable
       val o = Tables.orders(s, dir)
         .select(col("o_custkey").as("custkey"), col("o_totalprice"))
       val c = Tables.customer(s, dir)
         .select(col("c_custkey").as("custkey"), col("c_mktsegment"))
       val (to, tc) = (graft.util.Scratch.table(s, "graft_bkt_orders"),
         graft.util.Scratch.table(s, "graft_bkt_customer"))
-      graft.sources.Bucketing.writeBucketed(o, to,
-        graft.util.Scratch.dir(s, "bkt_orders"), "custkey", 8)
-      graft.sources.Bucketing.writeBucketed(c, tc,
-        graft.util.Scratch.dir(s, "bkt_customer"), "custkey", 8)
-      graft.sources.Bucketing.bucketedEquiJoin(s, to, tc, "custkey")
+      BucketedTable.write(o, to, "custkey", 8, Seq("custkey"))
+      BucketedTable.write(c, tc, "custkey", 8, Seq("custkey"))
+      BucketedTable.read(s, to).hint("merge")
+        .join(BucketedTable.read(s, tc), Seq("custkey"))
         .groupBy("custkey", "c_mktsegment")
         .agg(count(lit(1)).as("n_orders"),
           round(sum("o_totalprice"), 2).as("revenue"))

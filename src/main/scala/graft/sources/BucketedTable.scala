@@ -10,9 +10,12 @@ import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
   * requirement and runs with ZERO shuffle exchange — the single biggest
   * recurring cost in a fact-to-fact join simply disappears from the plan
   * (verified by plan pin: no `Exchange hashpartitioning` on either side
-  * of a bucketed-bucketed join; see PlanShapeSpec). With `sortCols` the
-  * files are also sorted within buckets, letting the sort-merge join skip
-  * its sort phase.
+  * of a bucketed-bucketed join; see PlanShapeSpec). Aggregations whose
+  * keys CONTAIN the bucket key reuse the distribution too, so scan → join
+  * → agg runs as one exchange-free stage pipeline (q95). With `sortCols`
+  * the files are also sorted within buckets, letting the sort-merge join
+  * skip its sort phase; a `merge` hint on the join keeps a small table
+  * from being broadcast instead.
   *
   * The trade: the bucket count is frozen at write time (pick ~ data size
   * / healthy-partition size at the TARGET scale; both join sides must

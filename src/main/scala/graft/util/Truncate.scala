@@ -27,10 +27,9 @@ import org.apache.spark.sql.{Column, DataFrame}
   *
   * The reliable path needs a checkpoint directory: an already-set
   * `SparkContext.setCheckpointDir` wins, else `spark.graft.checkpointDir`
-  * is applied. With neither configured the call falls back to
-  * localCheckpoint (with a one-time stderr warning) rather than failing —
-  * a missing directory is an operator omission, not a reason to kill the
-  * query that happened to trip it.
+  * is applied. With neither configured the call fails: falling back to
+  * localCheckpoint would hand back exactly the executor-loss-unsafe leaf
+  * the strategy was chosen to avoid.
   *
   * Freeing is the other half: a leaf's storage has no CacheManager entry,
   * so `Dataset.unpersist` on a truncated frame is a no-op — only
@@ -38,8 +37,6 @@ import org.apache.spark.sql.{Column, DataFrame}
   * leaf its checkpoint directory, which would otherwise pile up one per
   * round on a cluster. */
 object Truncate {
-
-  @volatile private var warnedNoDir = false
 
   def apply(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
@@ -55,14 +52,9 @@ object Truncate {
       if (sc.getCheckpointDir.isEmpty)
         spark.conf.getOption("spark.graft.checkpointDir") match {
           case Some(d) => sc.setCheckpointDir(d)
-          case None =>
-            if (!warnedNoDir) {
-              warnedNoDir = true
-              System.err.println("[graft] truncate strategy 'reliable' but no " +
-                "checkpoint dir (set spark.graft.checkpointDir or " +
-                "SparkContext.setCheckpointDir) — falling back to localCheckpoint")
-            }
-            return df.localCheckpoint(eager = true)
+          case None => throw new IllegalStateException("truncate strategy " +
+            "'reliable' needs a checkpoint directory: set spark.graft.checkpointDir " +
+            "or call SparkContext.setCheckpointDir")
         }
       df.checkpoint(eager = true)
     }

@@ -51,23 +51,27 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("Bucketing: join AND aggregate on the bucket key stay exchange-free") {
-    val dir = tempDir("graft_bkt")
-    spark.sql("DROP TABLE IF EXISTS g_bkt_orders")
-    spark.sql("DROP TABLE IF EXISTS g_bkt_customer")
-    Bucketing.writeBucketed(orders, "g_bkt_orders", s"$dir/o", "ckey", 4)
-    Bucketing.writeBucketed(
+    BucketedTable.write(orders, "g_bkt_orders", "ckey", 4, Seq("ckey"))
+    BucketedTable.write(
       Seq((10L, "A"), (11L, "B"), (12L, "A"), (13L, "B")).toDF("ckey", "seg"),
-      "g_bkt_customer", s"$dir/c", "ckey", 4)
-    val agg = Bucketing.bucketedEquiJoin(spark, "g_bkt_orders", "g_bkt_customer", "ckey")
-      .groupBy("ckey", "seg").agg(sum("price").as("rev"))
-    val rows = agg.collect() // materialize so the adaptive plan finalizes
-    val plan = agg.queryExecution.executedPlan.toString
-    // the scans' HashPartitioning satisfies BOTH the join and the agg
-    // distribution: scan -> merge join -> hash agg with zero exchanges
-    assert(!plan.contains("Exchange hashpartitioning"), plan)
-    assert(plan.contains("SortMergeJoin"), plan)
-    val got = rows.map(r => (r.getLong(0), r.getString(1)) -> r.getDouble(2)).toMap
-    assert(got((10L, "A")) == 500.0 && got((11L, "B")) == 800.0)
+      "g_bkt_customer", "ckey", 4, Seq("ckey"))
+    try {
+      // the merge hint pins sort-merge join: at this size a broadcast would win
+      val agg = BucketedTable.read(spark, "g_bkt_orders").hint("merge")
+        .join(BucketedTable.read(spark, "g_bkt_customer"), Seq("ckey"))
+        .groupBy("ckey", "seg").agg(sum("price").as("rev"))
+      val rows = agg.collect() // materialize so the adaptive plan finalizes
+      val plan = agg.queryExecution.executedPlan.toString
+      // the scans' HashPartitioning satisfies BOTH the join and the agg
+      // distribution: scan -> merge join -> hash agg with zero exchanges
+      assert(!plan.contains("Exchange hashpartitioning"), plan)
+      assert(plan.contains("SortMergeJoin"), plan)
+      val got = rows.map(r => (r.getLong(0), r.getString(1)) -> r.getDouble(2)).toMap
+      assert(got((10L, "A")) == 500.0 && got((11L, "B")) == 800.0)
+    } finally {
+      BucketedTable.drop(spark, "g_bkt_orders")
+      BucketedTable.drop(spark, "g_bkt_customer")
+    }
   }
 
   test("Compaction rewrites fragments into range-clustered files of the target size") {

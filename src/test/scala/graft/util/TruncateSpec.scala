@@ -46,6 +46,18 @@ class TruncateSpec extends SparkSpec {
     Truncate.release(t)
   }
 
+  // before any case that sets a directory: Truncate sets the
+  // SparkContext's checkpoint directory for the rest of the JVM
+  test("strategy 'reliable' with no checkpoint directory fails loudly") {
+    assert(spark.sparkContext.getCheckpointDir.isEmpty, "a directory is already set")
+    spark.conf.set("spark.graft.truncate", "reliable")
+    try {
+      val e = intercept[IllegalStateException](Truncate(spark.range(3).toDF("id")))
+      assert(e.getMessage.contains("spark.graft.checkpointDir") &&
+        e.getMessage.contains("SparkContext.setCheckpointDir"), e.getMessage)
+    } finally spark.conf.unset("spark.graft.truncate")
+  }
+
   test("strategy 'reliable' switches to a durable checkpoint and keeps rows") {
     val auto = (rows(Graph.kCore(tinyGraph, "src", "dst", k = 2)),
       rows(Dedup.dedupClustersStar(tinyGraph, "src", "dst")))
